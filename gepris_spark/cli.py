@@ -80,7 +80,9 @@ def cmd_crawl(args) -> int:
 
 def cmd_replay(args) -> int:
     """Crawl then diff against the oracle — the BASELINE.json
-    exact-match gate, runnable anywhere."""
+    exact-match gate, runnable anywhere: every visit-log row
+    `(seq, url, scheduled_ms, batch_id)` and the URL-seen set must
+    equal the oracle's."""
     from gepris_spark import replay as oracle
     from gepris_spark.operators import politeness
     from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
@@ -92,14 +94,13 @@ def cmd_replay(args) -> int:
     seeds = spark.read.parquet(args.seeds)
     engine = CrawlEngine(spark, args.state, EngineConfig(batch_size=args.batch_size))
     engine.run_seed_list(seeds, politeness.empty_robots(spark))
-    got = [
-        (r["seq"], r["url"])
-        for r in engine.visit_log().orderBy("seq").select("seq", "url").collect()
-    ]
+    cols = ("seq", "url", "scheduled_ms", "batch_id")
+    got = [tuple(r) for r in engine.visit_log().orderBy("seq").select(*cols).collect()]
+    got_seen = {r["url"] for r in engine.url_seen().distinct().collect()}
     seed_rows = [r.asDict() for r in seeds.orderBy("arrival_seq").collect()]
     expected = oracle.replay(seed_rows, batch_size=args.batch_size)
-    want = [(v["seq"], v["url"]) for v in expected.visits]
-    match = got == want
+    want = [tuple(v[c] for c in cols) for v in expected.visits]
+    match = got == want and got_seen == expected.url_seen
     print(json.dumps({"n_visits": len(got), "exact_match": match}))
     _stop_unless_owned(spark, pre_existing)
     return 0 if match else 1

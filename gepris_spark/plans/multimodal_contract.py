@@ -115,7 +115,6 @@ def q_crawl_aimd(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.mkdtemp(prefix="gepris_aimd_"),
         EngineConfig(
             batch_size=46,
-            aimd=True,
             bloom_buckets=4,
             bloom_bits=1 << 18,
             detailed_metrics=False,

@@ -127,9 +127,13 @@ def write_numbered_files(
     # Clear any pre-existing arrival files (a reused root with a smaller
     # n_files, or the pre-round-4 unpadded arrival_{i}.parquet names) —
     # FileStreamSource would otherwise ingest the stale files too and
-    # silently duplicate feed rows.
+    # silently duplicate feed rows. A stale entry may be a directory,
+    # the shape Spark writes a parquet path in.
     for stale in glob.glob(os.path.join(src, "arrival_*.parquet")):
-        os.remove(stale)
+        if os.path.isdir(stale):
+            shutil.rmtree(stale)
+        else:
+            os.remove(stale)
     (
         assigned.select("_file", *columns)
         .repartition(n_files, "_file")

@@ -7,7 +7,9 @@ Each micro-batch:
     -> canonicalize + validate (F2, built-ins)
     -> URL-seen filter (bloom fast path + exact anti-join, A1)
     -> robots + politeness schedule (A4; per-host token bucket whose
-       sequence numbers persist across batches in a host-state table)
+       sequence numbers, delay and next send time persist across
+       batches in a host-state table; the delay adapts to a latency
+       feed when one is passed, AIMD)
     -> visit-order assignment (the replay contract)
     -> commit, step by step, each step idempotent: visit-log append
        (per-batch directory), bloom update, host-state snapshot,
@@ -52,8 +54,9 @@ HOST_STATE = T.StructType(
         T.StructField("next_seq", T.LongType(), False),
         # AIMD latency feedback (politeness.py AIMD notes): the host's
         # current token-bucket delay and the logical send time of its
-        # next request. NULL when the engine runs with aimd off — the
-        # fixed-delay schedule derives scheduled_ms from host_seq alone.
+        # next request. Without a latency feed the delay holds at its
+        # floor and next_ms = next_seq * delay_ms, the fixed-delay
+        # schedule. NULL only in host rows written before these existed.
         T.StructField("delay_ms", T.LongType(), True),
         T.StructField("next_ms", T.LongType(), True),
     ]
@@ -73,21 +76,10 @@ class EngineConfig:
     # cheap, shuffles are not)
     bloom_bits: int = 1 << 24
     bloom_hashes: int = 5
-    # URL-seen filter kind: "bloom" (default; insert+probe only) or
-    # "cuckoo" (operators/cuckooseen.py; adds delete for the
-    # vanished-marking re-discovery path). Both keep the same
-    # no-false-negative + exact-anti-join-on-hit contract, so the
-    # visit ordering is identical whichever is selected.
-    urlseen: str = "bloom"
     # detailed per-batch accounting (input/dup/invalid counts) costs 3
     # extra count jobs per batch; throughput-critical deployments can
     # turn it off — visit counts and stage timings are always kept
     detailed_metrics: bool = True
-    # deterministic AutoThrottle (politeness.py AIMD notes): per-host
-    # delay evolves from the previous batch's observed fetch costs.
-    # Off by default — the fixed-delay replay contract stays the
-    # round-1/2 byte-identical one unless a latency feed is wired in.
-    aimd: bool = False
     # snapshots of the mutable state tables (frontier, host_state) kept
     # after each committed batch. Each commit writes a new version dir
     # (untouched frontier buckets are hardlinks, host_state is one
@@ -110,19 +102,12 @@ class CrawlEngine:
         self.root = root
         self.config = config or EngineConfig()
         self.store = SnapshotStore(root)
-        if self.config.urlseen == "cuckoo":
-            from gepris_spark.operators.cuckooseen import CuckooUrlSeen
-
-            # self.bloom is the engine's URL-seen slot whatever the
-            # filter kind — both classes share the filter_new contract
-            self.bloom = CuckooUrlSeen(root, n_buckets=self.config.bloom_buckets)
-        else:
-            self.bloom = BloomUrlSeen(
-                root,
-                n_buckets=self.config.bloom_buckets,
-                m_bits=self.config.bloom_bits,
-                k=self.config.bloom_hashes,
-            )
+        self.bloom = BloomUrlSeen(
+            root,
+            n_buckets=self.config.bloom_buckets,
+            m_bits=self.config.bloom_bits,
+            k=self.config.bloom_hashes,
+        )
 
     # ------------------------------------------------------------ state
     def _ledger_path(self) -> str:
@@ -238,44 +223,42 @@ class CrawlEngine:
         n_fresh = timed("urlseen_filter", fresh.count) if detailed else -1
         allowed = politeness.apply_robots(fresh, robots)
 
-        # per-host token-bucket sequence carried across batches
+        # per-host token-bucket sequence, delay and next send time
+        # carried across batches
         state = self.host_state().select(
             "host",
             F.col("next_seq").alias("_base_seq"),
             F.col("delay_ms").alias("_state_delay"),
             F.col("next_ms").alias("_base_ms"),
         )
-        joined = allowed.join(F.broadcast(state), "host", "left")
-        if self.config.aimd:
-            # delay_ms from apply_robots is the FLOOR (robots crawl-delay
-            # override or the 2 s start delay); the evolved AIMD delay
-            # replaces it for this batch, never dropping below the floor
-            joined = joined.withColumn("_lo_ms", F.col("delay_ms")).withColumn(
+        # delay_ms from apply_robots is the FLOOR (robots crawl-delay
+        # override or the 2 s start delay); the host's evolved AIMD delay
+        # replaces it for this batch, never dropping below the floor
+        joined = (
+            allowed.join(F.broadcast(state), "host", "left")
+            .withColumn("_lo_ms", F.col("delay_ms"))
+            .withColumn(
                 "delay_ms",
                 F.greatest(F.coalesce(F.col("_state_delay"), F.col("delay_ms")), F.col("delay_ms")),
             )
+        )
         scheduled = politeness.assign_schedule(
             joined,
             n_salts=self.config.n_salts,
             num_partitions=n_batch_parts,
             cache_registry=batch_caches,
         )
-        scheduled = scheduled.withColumn(
-            "host_seq", F.col("host_seq") + F.coalesce(F.col("_base_seq"), F.lit(0))
+        # logical send time continues from the host's next_ms with this
+        # batch's delay as the spacing (a host row without next_ms was
+        # written by the fixed-delay schedule: next_seq * delay_ms)
+        base_seq = F.coalesce(F.col("_base_seq"), F.lit(0))
+        scheduled = scheduled.withColumn("host_seq", F.col("host_seq") + base_seq).withColumn(
+            "scheduled_ms",
+            (
+                F.coalesce(F.col("_base_ms"), base_seq * F.col("delay_ms"))
+                + F.col("scheduled_ms")
+            ).cast("long"),
         )
-        if self.config.aimd:
-            # logical send time continues from the host's next_ms with
-            # this batch's (possibly re-throttled) delay as the spacing
-            scheduled = scheduled.withColumn(
-                "scheduled_ms",
-                F.coalesce(F.col("_base_ms"), F.lit(0)).cast("long")
-                + (F.col("host_seq") - F.coalesce(F.col("_base_seq"), F.lit(0)))
-                * F.col("delay_ms"),
-            )
-        else:
-            scheduled = scheduled.withColumn(
-                "scheduled_ms", F.col("host_seq") * F.col("delay_ms")
-            )
 
         prior = self.committed_batches()
         first_seq = max((r["first_seq"] + r["n_visited"] for r in prior.values()), default=0)
@@ -302,45 +285,27 @@ class CrawlEngine:
             "scheduled_ms",
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
-        if self.config.aimd:
+        batch_state = ordered.groupBy("host").agg(
+            (F.max("host_seq") + 1).alias("next_seq"),
+            F.first("delay_ms").alias("delay_ms"),
+            F.first("_lo_ms").alias("_lo"),
+            (F.max("scheduled_ms") + F.first("delay_ms")).alias("next_ms"),
+        )
+        if latencies is not None:
             # observed latency per (host, batch): integer mean over the
             # batch's measured fetches — DIV keeps it exact so the
-            # replay oracle reproduces the same delay trajectory
-            if latencies is not None:
-                obs = (
-                    visits.join(
-                        F.broadcast(latencies.select("url", "fetch_cost_ms")), "url"
-                    )
-                    .groupBy("host")
-                    .agg(F.expr("sum(fetch_cost_ms) DIV count(1)").alias("_obs"))
-                )
-            else:
-                obs = None
-            batch_state = ordered.groupBy("host").agg(
-                (F.max("host_seq") + 1).alias("next_seq"),
-                F.first("delay_ms").alias("_d"),
-                F.first("_lo_ms").alias("_lo"),
-                (F.max("scheduled_ms") + F.first("delay_ms")).alias("next_ms"),
+            # replay oracle reproduces the same delay trajectory; a host
+            # with no measured fetch keeps its delay
+            obs = (
+                visits.join(F.broadcast(latencies.select("url", "fetch_cost_ms")), "url")
+                .groupBy("host")
+                .agg(F.expr("sum(fetch_cost_ms) DIV count(1)").alias("_obs"))
             )
-            if obs is not None:
-                batch_state = batch_state.join(obs, "host", "left")
-            else:
-                batch_state = batch_state.withColumn("_obs", F.lit(None).cast("long"))
-            batch_state = batch_state.select(
-                "host",
-                "next_seq",
-                politeness.aimd_next_delay(
-                    F.col("_d"), F.col("_obs"), F.col("_lo")
-                ).alias("delay_ms"),
-                "next_ms",
+            batch_state = batch_state.join(obs, "host", "left").withColumn(
+                "delay_ms",
+                politeness.aimd_next_delay(F.col("delay_ms"), F.col("_obs"), F.col("_lo")),
             )
-        else:
-            batch_state = (
-                ordered.groupBy("host")
-                .agg((F.max("host_seq") + 1).alias("next_seq"))
-                .withColumn("delay_ms", F.lit(None).cast("long"))
-                .withColumn("next_ms", F.lit(None).cast("long"))
-            )
+        batch_state = batch_state.select("host", "next_seq", "delay_ms", "next_ms")
         # hosts visited this batch have a strictly larger next_seq, so a
         # struct-max keeps the batch row and leaves untouched hosts on
         # their prior (next_seq, delay, next_ms) — one groupBy, no join

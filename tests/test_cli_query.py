@@ -31,3 +31,28 @@ def test_runs_query_and_reports_rows(spark, capsys):
     assert rec["rows"] == 6 and rec["query"] == "pricing_summary"
     # the caller's session must still be alive
     assert spark.range(1).count() == 1
+
+
+def test_replay_gate_checks_schedule_and_batch(spark, tmp_path, capsys, monkeypatch):
+    """`cli replay` passes on a tiny seed list and fails when the oracle
+    differs only in `scheduled_ms`, which a `(seq, url)` check misses."""
+    from gepris_spark import replay as oracle
+    from gepris_spark.sources import corpus
+
+    seeds = str(tmp_path / "seeds")
+    spark.createDataFrame(corpus.gen_seeds_pdf(12, seed=3)).write.parquet(seeds)
+    argv = ["replay", "--seeds", seeds, "--state", str(tmp_path / "state"), "--batch-size", "20"]
+    assert main(argv) == 0
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rec["exact_match"] and rec["n_visits"] > 0
+
+    real = oracle.replay
+
+    def drifted(*args, **kwargs):
+        res = real(*args, **kwargs)
+        res.visits[-1]["scheduled_ms"] += 1
+        return res
+
+    monkeypatch.setattr(oracle, "replay", drifted)
+    # the state dir is fully committed, so this re-run only re-checks
+    assert main(argv) == 1

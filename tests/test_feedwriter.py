@@ -130,3 +130,21 @@ def test_reused_root_with_stale_arrival_files_is_cleared(spark, tmp_path):
     ]
     readback = pd.concat([pd.read_parquet(f) for f in files])
     assert sorted(readback["event_id"].tolist()) == sorted(pdf["event_id"].tolist())
+
+
+def test_stale_arrival_directory_is_cleared(spark, tmp_path):
+    """A stale arrival entry shaped like a Spark parquet write (a
+    directory of part files) is removed too, not an error."""
+    src = str(tmp_path / "arrivals")
+    stale_dir = os.path.join(src, "arrival_00007.parquet")
+    os.makedirs(stale_dir)
+    _random_events(10, 11).to_parquet(os.path.join(stale_dir, "part-00000.parquet"))
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    cols = ["event_id", "ts", "user_id", "value"]
+    pdf = _random_events(40, 17)
+    df = FW.as_events_df(spark, pdf, cols)
+    with cacheutil.scope():
+        ranked, n = FW.with_global_rank(df, ["ts", "event_id"])
+        assigned = ranked.withColumn("_file", FW.contiguous_file_expr(n, 2))
+        FW.write_numbered_files(assigned, src, 2, cols, schema)
+    assert sorted(os.listdir(src)) == [f"arrival_{i:05d}.parquet" for i in range(2)]

@@ -219,9 +219,7 @@ def test_aimd_over_real_http_matches_replay_oracle(spark, tmp_path):
         lat_df = spark.createDataFrame(
             [(u, int(c)) for u, c in measured.items()], "url string, fetch_cost_ms long"
         )
-        engine = CrawlEngine(
-            spark, str(tmp_path / "aimd_http"), EngineConfig(batch_size=4, aimd=True)
-        )
+        engine = CrawlEngine(spark, str(tmp_path / "aimd_http"), EngineConfig(batch_size=4))
         engine.run_seed_list(spark.createDataFrame(pdf), latencies=lat_df)
         oracle = replay(
             [

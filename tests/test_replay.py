@@ -110,6 +110,23 @@ def test_resume_byte_identical(spark, tmp_path, seeds_pdf):
     assert _engine_visits(resumed) == _engine_visits(full)
 
 
+def test_resume_from_host_rows_without_delay(spark, tmp_path, seeds_pdf):
+    """Host-state rows with NULL delay_ms/next_ms, the shape a
+    fixed-delay engine wrote, resume on the fixed-delay schedule."""
+    seeds = spark.createDataFrame(seeds_pdf)
+    engine = CrawlEngine(spark, str(tmp_path / "nodelay"), EngineConfig(batch_size=25))
+    engine.run_seed_list(seeds, max_arrival=49)
+    no_delay = engine.host_state().select(
+        "host",
+        "next_seq",
+        F.lit(None).cast("long").alias("delay_ms"),
+        F.lit(None).cast("long").alias("next_ms"),
+    )
+    engine.store.commit_snapshot(no_delay, "host_state", num_files=1)
+    engine.run_seed_list(seeds)
+    _assert_match(engine, replay(_seed_rows(seeds_pdf), batch_size=25))
+
+
 def test_bloom_urlseen_no_false_negatives(spark, tmp_path):
     from gepris_spark.operators.urlseen import BloomUrlSeen
 
@@ -156,7 +173,7 @@ def test_aimd_slow_host_stretches_schedule(spark, tmp_path):
     lat_df = spark.createDataFrame(
         [(u, c) for u, c in latency.items()], "url string, fetch_cost_ms long"
     )
-    engine = CrawlEngine(spark, str(tmp_path / "aimd"), EngineConfig(batch_size=8, aimd=True))
+    engine = CrawlEngine(spark, str(tmp_path / "aimd"), EngineConfig(batch_size=8))
     engine.run_seed_list(spark.createDataFrame(pdf), latencies=lat_df)
     oracle = replay(_seed_rows(pdf), batch_size=8, aimd=True, latency_ms=latency)
     _assert_match(engine, oracle)
@@ -222,14 +239,14 @@ def test_aimd_resume_byte_identical(spark, tmp_path):
         "url string, fetch_cost_ms long",
     )
     seeds = spark.createDataFrame(pdf)
-    full = CrawlEngine(spark, str(tmp_path / "afull"), EngineConfig(batch_size=6, aimd=True))
+    full = CrawlEngine(spark, str(tmp_path / "afull"), EngineConfig(batch_size=6))
     full.run_seed_list(seeds, latencies=lat_df)
 
-    killed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6, aimd=True))
+    killed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6))
     from gepris_spark.operators.politeness import empty_robots
 
     killed.run_batch(0, seeds.where(F.col("arrival_seq") < 6), empty_robots(spark), latencies=lat_df)
-    resumed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6, aimd=True))
+    resumed = CrawlEngine(spark, str(tmp_path / "akill"), EngineConfig(batch_size=6))
     resumed.run_seed_list(seeds, latencies=lat_df)
     assert _engine_visits(resumed) == _engine_visits(full)
 
@@ -239,16 +256,23 @@ def test_exact_match_on_other_corpora(spark, tmp_path, corpus_seed):
     """The exact-match contract is corpus-independent: different random
     seeds (different host mixes, dup/invalid placements, recencies)
     replay identically through engine and oracle, single- AND
-    multi-batch."""
+    multi-batch. The engine has one (AIMD) schedule path; with no
+    latency feed, or an empty one, it must equal the fixed-delay
+    oracle."""
     pdf = corpus.gen_seeds_pdf(30, seed=corpus_seed)
-    for batch_size, tag in ((10_000, "one"), (33, "many")):
-        engine = CrawlEngine(
-            spark,
-            str(tmp_path / f"s{corpus_seed}_{tag}"),
-            EngineConfig(batch_size=batch_size, bloom_buckets=4, bloom_bits=1 << 18),
-        )
-        engine.run_seed_list(spark.createDataFrame(pdf))
-        _assert_match(engine, replay(_seed_rows(pdf), batch_size=batch_size))
+    feeds = {
+        "nofeed": None,
+        "emptyfeed": spark.createDataFrame([], "url string, fetch_cost_ms long"),
+    }
+    for feed_tag, latencies in feeds.items():
+        for batch_size, tag in ((10_000, "one"), (33, "many")):
+            engine = CrawlEngine(
+                spark,
+                str(tmp_path / f"s{corpus_seed}_{tag}_{feed_tag}"),
+                EngineConfig(batch_size=batch_size, bloom_buckets=4, bloom_bits=1 << 18),
+            )
+            engine.run_seed_list(spark.createDataFrame(pdf), latencies=latencies)
+            _assert_match(engine, replay(_seed_rows(pdf), batch_size=batch_size, aimd=False))
 
 
 def test_compaction_preserves_visit_log_exactly(spark, tmp_path, seeds_pdf):

@@ -1,7 +1,7 @@
 """Per-stage timing of the crawl engine's micro-batch: run the
-q_crawl_aimd shape (2 tiny batches, aimd on) twice warm and print each
-ledger row's stage_sec, then a single larger replay batch for the
-throughput-path picture."""
+q_crawl_aimd shape (2 tiny batches with a latency feed) twice warm and
+print each ledger row's stage_sec, then a single larger replay batch
+for the throughput-path picture."""
 
 from __future__ import annotations
 
@@ -22,8 +22,8 @@ def aimd_once(spark):
     engine = CrawlEngine(
         spark,
         tempfile.mkdtemp(prefix="prof_aimd_"),
-        EngineConfig(batch_size=46, aimd=True, bloom_buckets=4,
-                     bloom_bits=1 << 18, detailed_metrics=False),
+        EngineConfig(batch_size=46, bloom_buckets=4, bloom_bits=1 << 18,
+                     detailed_metrics=False),
     )
     t0 = time.monotonic()
     rows = engine.run_seed_list(spark.createDataFrame(seeds_pdf), latencies=latencies)

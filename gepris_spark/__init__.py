@@ -6,7 +6,8 @@ idiomatic Spark engine:
 
 * a distributed URL frontier with bloom-accelerated URL-seen dedup
   (reference: app-level seen sets, gepris_crawler/spiders/search_results.py:26,60-63),
-* a per-host politeness scheduler (token-bucket delays, host salting;
+* a per-host politeness scheduler (token-bucket delays; hot hosts
+  range-partitioned on (host, priority) so none sits in one partition;
   reference: AutoThrottle settings.py:119-126),
 * a priority queue ordered by item type + recency
   (reference: database.py:43-64 get_ids),

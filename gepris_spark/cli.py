@@ -66,11 +66,7 @@ def cmd_crawl(args) -> int:
     engine = CrawlEngine(
         spark,
         args.state,
-        EngineConfig(
-            batch_size=args.batch_size,
-            n_salts=args.n_salts,
-            compact_every=args.compact_every,
-        ),
+        EngineConfig(batch_size=args.batch_size, compact_every=args.compact_every),
     )
     ledger = engine.run_seed_list(seeds, robots)
     print(json.dumps({"batches": len(ledger), "visited": sum(r["n_visited"] for r in ledger)}))
@@ -468,7 +464,6 @@ def main(argv=None) -> int:
     crawl.add_argument("--state", required=True, help="engine state directory")
     crawl.add_argument("--robots", default=None, help="robots rules parquet")
     crawl.add_argument("--batch-size", type=int, default=50_000)
-    crawl.add_argument("--n-salts", type=int, default=8)
     crawl.add_argument("--compact-every", type=int, default=None,
                        help="fold the visit_log append ledger every N batches")
     crawl.set_defaults(fn=cmd_crawl)

@@ -578,10 +578,10 @@ def http_fetch_stage(scheduled: DataFrame, http_fetch_fn: Callable) -> DataFrame
     parse/validate/chain path through it against a loopback server.
 
     Scale: one fetch call per row inside the Arrow batch loop.
-    Politeness is enforced upstream by the logical schedule — the stage
-    consumes salted_fetch_partitions output, so a host's requests
-    arrive in scheduled order within each salt shard, and the measured
-    fetch_cost_ms feeds the AIMD delay loop (politeness.py AIMD notes).
+    Politeness is enforced upstream by the logical schedule, not here:
+    the stage fetches each partition's rows in the order it receives
+    them, and the measured fetch_cost_ms feeds the AIMD delay loop
+    (politeness.py AIMD notes).
     Reference parity: gepris_helper.py:58-83 (the live fetcher) behind
     the same stage boundary as the cache read-through
     (middlewares.py:118-138)."""

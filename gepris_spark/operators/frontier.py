@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gepris_spark import schemas
+from gepris_spark.operators import views
 from gepris_spark.store.table import SnapshotStore
 
 KEYS = ["id", "context"]
@@ -160,7 +161,7 @@ class Frontier:
 
         `referenced_person_ids`: single column `id` of person ids
         referenced by this run's projekt items (produced by the
-        reference-explosion view, plans/views.py). Anti-join against
+        reference-explosion view, operators/views.py). Anti-join against
         known persons, insert with detail_check_needed=True.
         """
         source = (
@@ -223,8 +224,6 @@ class Frontier:
         The moved set is tiny (a GEPRIS renumbering event), so the
         ref-edge join broadcasts it; the frontier UPDATE reuses the
         bucket-pruned MERGE of mark_check_needed_for_ids."""
-        from gepris_spark.plans import views
-
         if context == "person":
             refs = views.person_projekt_references(
                 views.latest_detail_items(history, runs)
@@ -267,8 +266,6 @@ class Frontier:
           flag root_id of every moved row with a non-null parent
           (a moved ROOT flags itself — matching the reference, whose
           join keys on hierarchy.id with parent_id NOT NULL)."""
-        from gepris_spark.plans import views
-
         hier = views.institution_hierarchy(
             views.latest_items(self.read(), history, runs)
         )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gepris_spark import schemas
-from gepris_spark.plans import views
+from gepris_spark.operators import views
 from gepris_spark.store.table import SnapshotStore
 
 TABLE = "history"

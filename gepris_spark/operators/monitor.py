@@ -19,7 +19,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -221,10 +221,31 @@ def append_alert_ledger(
     return _append_alert_rows(decided.collect(), root)
 
 
+RUN_METRICS_SCHEMA = (
+    "run_id long, spider string, context string, scraped_items long,"
+    " moved_items long, expected_items long, had_error boolean,"
+    " old_version string, new_version string"
+)
+
+
+def alert_stream(spark: SparkSession, metrics_dir: str) -> DataFrame:
+    """K7's decision matrix applied to a STREAM of run-metric rows
+    (alert_decision is pure column expressions, so the same operator
+    serves batch and stream): each completed run appends a metrics
+    file; alert rows emerge with status + subject, non-alert runs are
+    filtered out."""
+    raw = (
+        spark.readStream.schema(RUN_METRICS_SCHEMA)
+        .option("maxFilesPerTrigger", 64)
+        .parquet(metrics_dir)
+    )
+    return alert_decision(raw).where(F.col("alert_status").isNotNull())
+
+
 def alert_ledger_sink(decided_stream: DataFrame, root: str, checkpoint_dir: str):
     """K7 end-to-end (streaming): attach the ledger append to an
-    already-decided alert stream (streaming/visitstream.alert_stream)
-    via foreachBatch. The append's run_id dedup makes the sink
+    already-decided alert stream (alert_stream above) via
+    foreachBatch. The append's run_id dedup makes the sink
     effectively exactly-once even when a killed query replays its last
     micro-batch."""
     return (

@@ -11,12 +11,13 @@ oracle (gepris_spark/replay.py) computes the identical schedule, which
 is what makes "ordering exact-match rate" a checkable contract instead
 of a wall-clock race.
 
-Skew: gepris.dfg.de dominates the corpus (~70-100% of urls). For the
-fetch stage the schedule is salted — partition key is
-(host, seq mod n_salts) — so one hot host spreads over n_salts
-executor partitions while the per-host delay contract stays intact
-(the schedule was already assigned; fetching is embarrassingly
-parallel in scheduled time).
+Skew: gepris.dfg.de dominates the corpus (~70-100% of urls), so the
+schedule never partitions by host alone. `assign_schedule`
+range-partitions the batch on (host, priority key): a hot host spans
+many partitions in priority order, and its per-host sequence is the
+rank within a partition plus the host's row count over earlier
+partitions. The per-host delay contract stays exact while no single
+partition holds a hot host's whole batch.
 
 Robots: a broadcast robots-rules table (host, disallow prefixes,
 crawl_delay_ms). Disallowed urls are dropped before scheduling, and a
@@ -135,8 +136,6 @@ def apply_robots(candidates: DataFrame, robots: DataFrame, url_col: str = "url")
 
 def assign_schedule(
     batch: DataFrame,
-    n_salts: int = 8,
-    priority_cols: list[str] | None = None,
     num_partitions: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
@@ -147,8 +146,7 @@ def assign_schedule(
     url tiebreak — the A2/A3 contract) and the k-th request is released
     at k * delay_ms (logical token bucket with one token per delay).
 
-    Output adds: host_seq (0-based per-host position), scheduled_ms,
-    salt (executor-spreading shard for the fetch stage).
+    Output adds: host_seq (0-based per-host position), scheduled_ms.
 
     Scale note: a plain `row_number() OVER (PARTITION BY host)` puts a
     hot host's entire batch in ONE shuffle partition (gepris.dfg.de is
@@ -167,9 +165,10 @@ def assign_schedule(
     receive it for unpersisting after the final consuming action —
     without it the block stays cached for the session.
     """
-    priority_cols = priority_cols or ["priority_type", "recency_ts", "url"]
     order = [
-        F.col(c).asc_nulls_first() if c != "url" else F.col(c).asc() for c in priority_cols
+        F.col("priority_type").asc_nulls_first(),
+        F.col("recency_ts").asc_nulls_first(),
+        F.col("url").asc(),
     ]
     spark = batch.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
@@ -194,7 +193,6 @@ def assign_schedule(
         )
         .drop("_pid", "_off")
         .withColumn("scheduled_ms", F.col("host_seq") * F.col("delay_ms"))
-        .withColumn("salt", F.pmod(F.col("host_seq"), F.lit(n_salts)).cast("int"))
     )
     return scheduled
 
@@ -255,15 +253,3 @@ def visit_order_with_count(
     # for the ledger and should not pay a second count job
     return out, acc
 
-
-def visit_order(scheduled: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    return visit_order_with_count(scheduled, num_partitions)[0]
-
-
-def salted_fetch_partitions(scheduled: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Repartition the scheduled batch for the fetch stage: hot hosts
-    spread over n_salts partitions, rows within a partition sorted by
-    scheduled time."""
-    return scheduled.repartition(F.col("host"), F.col("salt")).sortWithinPartitions(
-        "scheduled_ms", "url"
-    )

@@ -210,8 +210,3 @@ def institution_hierarchy(latest: DataFrame, max_depth: int = 32) -> DataFrame:
         depth += 1
     return closure
 
-
-def latest_monitor_stat(monitor: DataFrame) -> DataFrame:
-    """G5 — the most recent data_monitor row (database.py:231-241
-    anti-exists; here max_by/orderBy-limit-1)."""
-    return monitor.orderBy(F.col("run_ended_at").desc()).limit(1)

@@ -462,8 +462,8 @@ def q_crawl_frontier_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: the policy side is O(hosts) and broadcast; the
     discovery side never collects; ranking is a host-partitioned
-    window (the hot-host salt in assign_schedule applies when one
-    host dominates — here admission caps the per-host output at
+    window (assign_schedule range-partitions on (host, priority) when
+    one host dominates — here admission caps the per-host output at
     window/delay rows, so the window input, not output, is the skew)."""
     disc = _sitemap_discoveries_df(spark)
     policy = _robots_policy_df(spark)
@@ -707,9 +707,7 @@ FROM g GROUP BY host ORDER BY host
 _SHARD_N = 8
 _SHARD_SALTS = 32
 # a host is "hot" (gets salted) when it alone exceeds half a fair
-# shard share — the same threshold shape the politeness scheduler's
-# host salting uses (operators/politeness.py: hosts salted across
-# executors while the per-host delay contract stays intact)
+# shard share
 _SHARD_HOT_DEN = 2 * _SHARD_N
 
 

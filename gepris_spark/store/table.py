@@ -80,43 +80,6 @@ def _link_tree(src_root: str, dst_root: str) -> None:
                 shutil.copy2(src, dst)
 
 
-_Z_BITS = 16
-
-
-def _norm16(col, lo, hi):
-    """Scale a numeric column from [lo, hi] onto [0, 2^16-1]. The
-    result drives FILE LAYOUT only (pruning selectivity), never
-    correctness — `read_pruned` stats come from the real column values
-    — so double arithmetic is fine and nulls pass through."""
-    lo = float(lo) if lo is not None else 0.0
-    hi = float(hi) if hi is not None else 0.0
-    span = max(hi - lo, 1.0)
-    top = (1 << _Z_BITS) - 1
-    scaled = ((col.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(float(top))).cast(
-        "long"
-    )
-    return F.greatest(F.lit(0), F.least(F.lit(top), scaled))
-
-
-def _morton_key(normed: list) -> "F.Column":
-    """Bit-interleave k 16-bit-normalized columns into a 16k-bit Morton
-    (Z-order) key, round-robin from the high bit: locality on the key
-    implies locality on every input, which is why one range-clustered
-    layout prunes any column's range predicates. k*16 must fit a long
-    (k <= 3 at 16 bits; commit_snapshot enforces it)."""
-    k = len(normed)
-    z = F.lit(0).cast("long")
-    for i in range(_Z_BITS):
-        for j, col in enumerate(normed):
-            # bit i of column j lands at position i*k + (k-1-j)
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(col, i).bitwiseAND(F.lit(1)), i * k + (k - 1 - j)
-                )
-            )
-    return z
-
-
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -249,260 +212,16 @@ class SnapshotStore:
             os.path.join(self._table_dir(name), f"v{version}")
         )
 
-    def commit_snapshot(
-        self,
-        df: DataFrame,
-        name: str,
-        num_files: int | None = None,
-        cluster_by: str | None = None,
-        zorder_by: tuple[str, ...] | None = None,
-        stats_cols: list[str] | None = None,
-    ) -> int:
+    def commit_snapshot(self, df: DataFrame, name: str, num_files: int | None = None) -> int:
         """Write the next snapshot version and atomically flip the pointer.
-
-        `cluster_by` range-clusters the write on a column (Iceberg
-        sort-order / range distribution): each output file covers a
-        disjoint value range, which is what makes the footer min/max
-        stats selective. `zorder_by` instead interleaves 2-3 integer
-        columns into a Morton key and range-clusters on that (Iceberg
-        `rewrite_data_files(sort_order => zorder(a, b, ...))` / Delta
-        `OPTIMIZE ... ZORDER BY`): one layout keeps value locality on
-        EVERY interleaved column, so `read_pruned` skips files for
-        range predicates on any of them — a single-column cluster
-        prunes only its own column and reads ~everything for the
-        others. `stats_cols` persists a `_STATS.json` manifest from
-        the file footers at commit time (Iceberg manifest min/max
-        parity) for `read_pruned` to skip files against."""
-        if cluster_by is not None and zorder_by is not None:
-            raise ValueError("commit_snapshot: cluster_by and zorder_by are exclusive")
-        if zorder_by is not None and not 2 <= len(zorder_by) <= 3:
-            raise ValueError("commit_snapshot: zorder_by takes 2-3 columns")
+        `num_files` coalesces the write to that many files."""
         version = (self.current_version(name) or 0) + 1
         path = os.path.join(self._table_dir(name), f"v{version}")
         if os.path.exists(path):  # leftover from a killed run — never committed
             shutil.rmtree(path)
-        if zorder_by is not None:
-            # normalize each column to a 16-bit rank-free scale using
-            # the batch min/max (ONE tiny agg job), then interleave —
-            # monotone per column, so per-file min/max stay selective
-            # on all; ties/skew only cost pruning, never correctness
-            aggs = []
-            for i, c in enumerate(zorder_by):
-                aggs += [F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}")]
-            bounds = df.agg(*aggs).collect()[0]
-            z = _morton_key(
-                [
-                    _norm16(F.col(c), bounds[f"_lo{i}"], bounds[f"_hi{i}"])
-                    for i, c in enumerate(zorder_by)
-                ]
-            )
-            keyed = df.withColumn("_z", z)
-            writer = (
-                keyed.repartitionByRange(num_files, F.col("_z"))
-                if num_files
-                else keyed.repartitionByRange(F.col("_z"))
-            ).sortWithinPartitions("_z").drop("_z")
-        elif cluster_by is not None:
-            writer = (
-                df.repartitionByRange(num_files, F.col(cluster_by))
-                if num_files
-                else df.repartitionByRange(F.col(cluster_by))
-            )
-        else:
-            writer = df.coalesce(num_files) if num_files else df
-        writer.write.mode("overwrite").parquet(path)
+        (df.coalesce(num_files) if num_files else df).write.mode("overwrite").parquet(path)
         self._flip_version(name, version)
-        if stats_cols:
-            self._write_stats_manifest(name, version, list(stats_cols))
         return version
-
-    # ------------------------------- column stats & file skipping
-    # Iceberg keeps per-data-file column min/max in manifest files and
-    # prunes scans against them; parquet already stores the same stats
-    # in every file footer. This block is that parity: clustered
-    # snapshot writes (sort-order), a `_STATS.json` manifest derived
-    # from the footers at commit (no data read — footer metadata
-    # only), and a pruned read that opens only files whose [min, max]
-    # intersects the predicate. Hash-bucketed tables deliberately get
-    # no range stats: hashing destroys value locality, so min/max on a
-    # hash layout never prunes — range pruning needs a range-clustered
-    # write, which is what `cluster_by` provides.
-
-    STATS_FILE = "_STATS.json"
-
-    @staticmethod
-    def _footer_stats(path: str, cols: list[str]) -> dict | None:
-        """Per-file column min/max + row count from the parquet FOOTER
-        (statistics written by every writer; ~KB read per file). None
-        when any requested column lacks stats — the caller must treat
-        the file as unpruneable."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        out: dict = {"rows": md.num_rows}
-        for col in cols:
-            if col not in names:
-                return None
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mins.append(st.min)
-                maxs.append(st.max)
-            lo, hi = min(mins), max(maxs)
-            if not isinstance(lo, (int, float, str)):
-                return None  # manifest stays JSON-plain; exotic types fall back
-            out[col] = [lo, hi]
-        return out
-
-    def _stats_path(self, name: str, version: int) -> str:
-        return os.path.join(self._table_dir(name), f"v{version}", self.STATS_FILE)
-
-    def _write_stats_manifest(self, name: str, version: int, cols: list[str]) -> dict:
-        """Scan the snapshot's file footers once at commit and persist
-        the manifest next to the data (underscore-prefixed: invisible
-        to Spark's directory reader, hardlink-carried by rollback)."""
-        vdir = os.path.join(self._table_dir(name), f"v{version}")
-        manifest: dict = {"cols": cols, "files": {}}
-        for dirpath, _d, files in os.walk(vdir):
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                rel = os.path.relpath(os.path.join(dirpath, fname), vdir)
-                st = self._footer_stats(os.path.join(dirpath, fname), cols)
-                if st is not None:
-                    manifest["files"][rel] = st
-        tmp = self._stats_path(name, version) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self._stats_path(name, version))
-        return manifest
-
-    def file_stats(self, name: str, cols: list[str], version: int | None = None) -> dict:
-        """The stats manifest for a snapshot: persisted `_STATS.json`
-        when it covers `cols`, else a footer scan (same content, not
-        persisted). {} for an empty table."""
-        version = self._resolve_version(name, version)
-        if version is None:
-            return {"cols": cols, "files": {}}
-        try:
-            with open(self._stats_path(name, version)) as fh:
-                manifest = json.load(fh)
-            if set(cols) <= set(manifest.get("cols", [])):
-                return manifest
-        except (OSError, ValueError):
-            pass
-        vdir = os.path.join(self._table_dir(name), f"v{version}")
-        manifest = {"cols": cols, "files": {}}
-        for dirpath, _d, files in os.walk(vdir):
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(dirpath, fname), vdir)
-                    st = self._footer_stats(os.path.join(dirpath, fname), cols)
-                    if st is not None:
-                        manifest["files"][rel] = st
-        return manifest
-
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        name: str,
-        schema: T.StructType,
-        col: str,
-        lo=None,
-        hi=None,
-        version: int | None = None,
-    ) -> tuple[DataFrame, dict]:
-        """Range-predicate read that opens ONLY files whose footer
-        [min, max] intersects [lo, hi] (either bound may be None =
-        unbounded). Files without usable stats are conservatively
-        read. The residual predicate is still applied — pruning is an
-        IO optimization, never a correctness dependency. Returns
-        (DataFrame, report) where report counts files_total/files_read
-        so callers (and tests) can assert the skip actually happened."""
-        version = self._resolve_version(name, version)
-        if version is None:
-            empty = spark.createDataFrame([], schema)
-            return empty, {"files_total": 0, "files_read": 0}
-        vdir = os.path.join(self._table_dir(name), f"v{version}")
-        manifest = self.file_stats(name, [col], version=version)
-        all_files = []
-        for dirpath, _d, files in os.walk(vdir):
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    all_files.append(os.path.relpath(os.path.join(dirpath, fname), vdir))
-        keep = []
-        for rel in all_files:
-            st = manifest["files"].get(rel, {}).get(col)
-            if st is None:
-                keep.append(rel)  # no stats — cannot prune
-                continue
-            fmin, fmax = st
-            if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-                continue
-            keep.append(rel)
-        report = {"files_total": len(all_files), "files_read": len(keep)}
-        if not keep:
-            return spark.createDataFrame([], schema), report
-        df = spark.read.schema(schema).parquet(*[os.path.join(vdir, rel) for rel in keep])
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-        return df, report
-
-    def read_pruned_multi(
-        self,
-        spark: SparkSession,
-        name: str,
-        schema: T.StructType,
-        ranges: dict,
-        version: int | None = None,
-    ) -> tuple[DataFrame, dict]:
-        """Conjunctive range-predicate read: `ranges` maps column ->
-        (lo, hi) (either bound None = unbounded); a file is skipped
-        when ANY predicate's [lo, hi] misses its footer [min, max] —
-        the payoff of a Z-ordered layout, where every interleaved
-        column's stats are selective at once. Same contract as
-        `read_pruned`: residual predicates still applied, files
-        without stats conservatively read, returns (df, report)."""
-        version = self._resolve_version(name, version)
-        if version is None:
-            return spark.createDataFrame([], schema), {"files_total": 0, "files_read": 0}
-        vdir = os.path.join(self._table_dir(name), f"v{version}")
-        cols = list(ranges)
-        manifest = self.file_stats(name, cols, version=version)
-        all_files = []
-        for dirpath, _d, files in os.walk(vdir):
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    all_files.append(os.path.relpath(os.path.join(dirpath, fname), vdir))
-        keep = []
-        for rel in all_files:
-            st_all = manifest["files"].get(rel, {})
-            skip = False
-            for col, (lo, hi) in ranges.items():
-                st = st_all.get(col)
-                if st is None:
-                    continue  # no stats for this column — cannot use it
-                fmin, fmax = st
-                if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-                    skip = True
-                    break
-            if not skip:
-                keep.append(rel)
-        report = {"files_total": len(all_files), "files_read": len(keep)}
-        if not keep:
-            return spark.createDataFrame([], schema), report
-        df = spark.read.schema(schema).parquet(*[os.path.join(vdir, rel) for rel in keep])
-        for col, (lo, hi) in ranges.items():
-            if lo is not None:
-                df = df.where(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.where(F.col(col) <= F.lit(hi))
-        return df, report
 
     def read_appends_since(
         self, spark: SparkSession, name: str, schema: T.StructType, min_batch_id: int

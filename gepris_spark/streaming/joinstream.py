@@ -35,7 +35,7 @@ Semantics notes:
 
 The arrival-file split is test scaffolding (event-time-ordered
 chunks, the shape a log collector delivers); in production both
-sides are append-only ledgers like visitstream.visit_stream.
+sides are append-only ledgers read as file streams.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ session timezone, fresh checkpoint per run.
 Scale notes: state is one row per open (window) — bounded by the
 watermark horizon; the late-row filter happens before state, so late
 floods cost scan, not memory. In production the source is the
-append-only event ledger (visitstream.visit_stream); the file split
+append-only event ledger read as a file stream; the file split
 is the test scaffold for deterministic batch boundaries.
 """
 

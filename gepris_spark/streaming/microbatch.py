@@ -48,6 +48,14 @@ _ORDER_ROWS_PER_PARTITION = 8192
 from gepris_spark.operators.urlseen import BloomUrlSeen
 from gepris_spark.store.table import SnapshotStore
 
+# snapshots of the mutable state tables (frontier, host_state) kept
+# after each committed batch: the current one and its predecessor. Each
+# commit writes a new version dir (untouched frontier buckets are
+# hardlinks, host_state is one file), so without expiration a long
+# crawl accumulates one table copy per batch — at 10^10 urls that
+# dwarfs the live table.
+_SNAPSHOT_RETENTION = 2
+
 HOST_STATE = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -68,7 +76,6 @@ _GEPRIS_DETAIL_RE = r"^https?://[^/]*/gepris/([^/]+)/(\d+)$"
 @dataclass
 class EngineConfig:
     batch_size: int = 10_000
-    n_salts: int = 8
     bloom_buckets: int = 16
     # 2 MiB of bits per bucket -> ~0.1% fp at 1M urls/bucket with k=5
     # (grow bits/buckets with the frontier: a saturated bloom silently
@@ -80,18 +87,10 @@ class EngineConfig:
     # extra count jobs per batch; throughput-critical deployments can
     # turn it off — visit counts and stage timings are always kept
     detailed_metrics: bool = True
-    # snapshots of the mutable state tables (frontier, host_state) kept
-    # after each committed batch. Each commit writes a new version dir
-    # (untouched frontier buckets are hardlinks, host_state is one
-    # file), so without expiration a long crawl accumulates one table
-    # copy per batch — at 10^10 urls that dwarfs the live table. 2 =
-    # current + its predecessor; None disables expiration (keep full
-    # time-travel history).
-    snapshot_retention: int | None = 2
     # fold the visit_log append ledger (one file-set per batch) into a
     # consolidated segment every N committed batches (Iceberg
     # rewrite_data_files; store.compact_appends). The newest
-    # `snapshot_retention` batches stay live so re-runs of recent
+    # `_SNAPSHOT_RETENTION` batches stay live so re-runs of recent
     # batches remain cheap. None disables auto-compaction.
     compact_every: int | None = None
 
@@ -243,10 +242,7 @@ class CrawlEngine:
             )
         )
         scheduled = politeness.assign_schedule(
-            joined,
-            n_salts=self.config.n_salts,
-            num_partitions=n_batch_parts,
-            cache_registry=batch_caches,
+            joined, num_partitions=n_batch_parts, cache_registry=batch_caches
         )
         # logical send time continues from the host's next_ms with this
         # batch's delay as the spacing (a host row without next_ms was
@@ -365,9 +361,8 @@ class CrawlEngine:
         self._commit_ledger(ledger_row)
         # the batch is durable (ledger fsynced) — retire snapshot dirs
         # older than the retention window; local fs metadata ops, no jobs
-        if self.config.snapshot_retention is not None:
-            for table in ("host_state", "frontier"):
-                self.store.expire_snapshots(table, keep_last=self.config.snapshot_retention)
+        for table in ("host_state", "frontier"):
+            self.store.expire_snapshots(table, keep_last=_SNAPSHOT_RETENTION)
         if (
             self.config.compact_every
             and len(self.store._live_batch_dirs("visit_log")) >= self.config.compact_every
@@ -376,7 +371,7 @@ class CrawlEngine:
                 self.spark,
                 "visit_log",
                 schemas.VISIT_LOG,
-                keep_last=max(1, self.config.snapshot_retention or 1),
+                keep_last=_SNAPSHOT_RETENTION,
             )
         return ledger_row
 
@@ -479,7 +474,7 @@ class CrawlEngine:
         # institution runs invalidate dependents of moved ids (Q5/Q6).
         # The context/moved probes are O(contexts) driver lookups, so a
         # clean batch pays nothing beyond two tiny aggregations.
-        from gepris_spark.plans import views
+        from gepris_spark.operators import views
 
         batch_contexts = {
             r["context"]
@@ -521,24 +516,24 @@ class CrawlEngine:
         self,
         seeds: DataFrame,
         robots: DataFrame | None = None,
-        arrival_col: str = "arrival_seq",
         max_arrival: int | None = None,
         latencies: DataFrame | None = None,
     ) -> list[dict]:
         """Replay a seed list in arrival-order micro-batches, resuming
         past already-committed batches.
 
-        `arrival_col` pins the seed-list order (the fixture generator
-        writes it); batching on an explicit column keeps the batch ->
-        row mapping deterministic under any partitioning.
+        The seeds' `arrival_seq` column pins the seed-list order (the
+        fixture generator writes it); batching on an explicit column
+        keeps the batch -> row mapping deterministic under any
+        partitioning.
         """
         robots = robots if robots is not None else politeness.empty_robots(self.spark)
-        if arrival_col not in seeds.columns:
-            raise ValueError(f"seed list needs an explicit arrival column {arrival_col!r}")
+        if "arrival_seq" not in seeds.columns:
+            raise ValueError("seed list needs an explicit arrival column 'arrival_seq'")
         if max_arrival is not None:
             n = max_arrival + 1
         else:
-            n = seeds.agg(F.max(arrival_col)).collect()[0][0]
+            n = seeds.agg(F.max("arrival_seq")).collect()[0][0]
             n = int(n) + 1 if n is not None else 0
         batch_size = self.config.batch_size
         committed = self.committed_batches()
@@ -548,7 +543,7 @@ class CrawlEngine:
                 results.append(committed[batch_id])
                 continue
             batch = seeds.where(
-                (F.col(arrival_col) >= start) & (F.col(arrival_col) < start + batch_size)
+                (F.col("arrival_seq") >= start) & (F.col("arrival_seq") < start + batch_size)
             )
             results.append(self.run_batch(batch_id, batch, robots, latencies=latencies))
         return results

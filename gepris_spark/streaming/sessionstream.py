@@ -30,8 +30,8 @@ skew-salted-if-needed keying as every per-user operator here; the
 watermark bounds state size to the in-flight sessions of the delay
 horizon. The arrival-file split is test scaffolding (event-time-
 ordered chunks, the shape a log collector delivers); in production
-the source is the append-only event ledger exactly like
-visitstream.visit_stream.
+the source is an append-only event ledger read as a file stream
+(`spark.readStream` over its batch directories).
 """
 
 from __future__ import annotations

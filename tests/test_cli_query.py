@@ -56,3 +56,34 @@ def test_replay_gate_checks_schedule_and_batch(spark, tmp_path, capsys, monkeypa
     monkeypatch.setattr(oracle, "replay", drifted)
     # the state dir is fully committed, so this re-run only re-checks
     assert main(argv) == 1
+
+
+def test_crawl_visits_what_replay_visits(spark, tmp_path, capsys):
+    """`cli crawl` over a tiny seed list, with visit-log compaction on,
+    visits exactly as many URLs as the oracle does."""
+    import os
+
+    from gepris_spark.replay import replay
+    from gepris_spark.sources import corpus
+
+    pdf = corpus.gen_seeds_pdf(20, seed=5)
+    seeds = str(tmp_path / "seeds")
+    spark.createDataFrame(pdf).write.parquet(seeds)
+    state = str(tmp_path / "state")
+    argv = ["crawl", "--seeds", seeds, "--state", state, "--batch-size", "25", "--compact-every", "2"]
+    assert main(argv) == 0
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    rows = pdf.sort_values("arrival_seq").to_dict("records")
+    assert rec["visited"] == len(replay(rows, batch_size=25).visits)
+    # three batches: the third one's compaction folded the first
+    assert rec["batches"] == 3
+    assert any(e.startswith("_compact_seg") for e in os.listdir(os.path.join(state, "visit_log")))
+
+
+def test_crawl_rejects_n_salts():
+    """The schedule has no salt shards, so `--n-salts` is not an option."""
+    import pytest
+
+    with pytest.raises(SystemExit) as exc:
+        main(["crawl", "--seeds", "s", "--state", "t", "--n-salts", "8"])
+    assert exc.value.code == 2

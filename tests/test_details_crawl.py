@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from gepris_spark.operators.frontier import Frontier
 from gepris_spark.operators.history import History
-from gepris_spark.plans import views
+from gepris_spark.operators import views
 from gepris_spark.sources import corpus
 from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
 

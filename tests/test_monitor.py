@@ -137,8 +137,6 @@ def test_alert_ledger_streaming_sink(spark, tmp_path):
     import json
     import os
 
-    from gepris_spark.streaming.visitstream import alert_stream
-
     metrics_dir = str(tmp_path / "metrics")
     os.makedirs(metrics_dir)
     rows = _metric_rows()
@@ -148,7 +146,7 @@ def test_alert_ledger_streaming_sink(spark, tmp_path):
         ).parquet(metrics_dir)
     root = str(tmp_path / "aledger")
     q = monitor.alert_ledger_sink(
-        alert_stream(spark, metrics_dir), root, str(tmp_path / "ckpt")
+        monitor.alert_stream(spark, metrics_dir), root, str(tmp_path / "ckpt")
     )
     q.awaitTermination()
     with open(f"{root}/alerts.jsonl") as fh:
@@ -156,11 +154,55 @@ def test_alert_ledger_streaming_sink(spark, tmp_path):
     assert sorted(r["run_id"] for r in recs) == [1, 2, 3]
     # fresh checkpoint, same source: replayed batches dedup on run_id
     q2 = monitor.alert_ledger_sink(
-        alert_stream(spark, metrics_dir), root, str(tmp_path / "ckpt2")
+        monitor.alert_stream(spark, metrics_dir), root, str(tmp_path / "ckpt2")
     )
     q2.awaitTermination()
     with open(f"{root}/alerts.jsonl") as fh:
         assert len(fh.readlines()) == 3
+
+
+def test_alert_stream_matches_batch_decision(spark, tmp_path):
+    """K7 as a stream: the same decision matrix the batch path uses,
+    over appended run-metric files; only alert rows pass."""
+    import pandas as pd
+
+    rows = pd.DataFrame(
+        [
+            # error -> Error alert
+            (1, "details", "projekt", 100, 0, 200, True, None, None),
+            # count mismatch -> Warning
+            (2, "search_results", "person", 90, 5, 100, False, None, None),
+            # clean run, counts match, small -> no alert
+            (3, "details", "person", 50, 0, 50, False, None, None),
+            # data_monitor version change -> Warning
+            (4, "data_monitor", None, 1, 0, 1, False, "v1", "v2"),
+            # details big success -> Success
+            (5, "details", "projekt", 20000, 0, 20000, False, None, None),
+        ],
+        columns=[
+            "run_id", "spider", "context", "scraped_items", "moved_items",
+            "expected_items", "had_error", "old_version", "new_version",
+        ],
+    )
+    metrics_dir = str(tmp_path / "metrics")
+    spark.createDataFrame(rows).coalesce(1).write.parquet(metrics_dir)
+    stream = monitor.alert_stream(spark, metrics_dir)
+    assert stream.isStreaming
+    # drain every available file into a memory table, then stop
+    stream.writeStream.format("memory").queryName("alerts").outputMode("append").trigger(
+        availableNow=True
+    ).start().awaitTermination()
+    got = spark.table("alerts").toPandas().sort_values("run_id")
+    assert list(got["run_id"]) == [1, 2, 4, 5]
+    assert list(got["alert_status"]) == ["Error", "Warning", "Warning", "Success"]
+    # stream rows equal the batch operator's decisions on the same input
+    batch = (
+        monitor.alert_decision(spark.createDataFrame(rows))
+        .where("alert_status is not null")
+        .toPandas()
+        .sort_values("run_id")
+    )
+    assert list(got["alert_subject"]) == list(batch["alert_subject"])
 
 
 def test_latest_stat(spark):

@@ -202,7 +202,7 @@ def test_shuffle_shards_window_is_per_shard_not_global(spark):
 
 def test_pack_sequences_global_cumsum_is_partition_offset_pattern(spark):
     """Sequence packing's global token cumsum must use the range-
-    partition + driver-offsets pattern (politeness.visit_order's), not
+    partition + driver-offsets pattern (politeness.visit_order_with_count's), not
     a global single-partition window."""
     from gepris_spark.plans.datapipe import q_pack_sequences
 

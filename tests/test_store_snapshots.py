@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gepris_spark.store.table import SnapshotStore
@@ -148,8 +149,9 @@ def test_merge_refuses_layout_mismatch(spark, store_dir):
 
 
 def test_engine_config_retention_bounds_versions(spark, store_dir):
-    """A multi-batch crawl with the default retention keeps a bounded
-    number of state-table snapshot dirs regardless of batch count."""
+    """A multi-batch crawl keeps a bounded number of state-table
+    snapshot dirs (the engine's fixed retention) regardless of batch
+    count."""
     from gepris_spark.sources import corpus
     from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
 
@@ -157,7 +159,7 @@ def test_engine_config_retention_bounds_versions(spark, store_dir):
     engine = CrawlEngine(
         spark,
         os.path.join(store_dir, "run"),
-        EngineConfig(batch_size=8, detailed_metrics=False, snapshot_retention=2),
+        EngineConfig(batch_size=8, detailed_metrics=False),
     )
     ledger = engine.run_seed_list(seeds)
     assert len(ledger) >= 3  # enough batches that retention has bitten
@@ -415,6 +417,39 @@ def test_compact_appends_noop_when_nothing_to_fold(spark, store_dir):
     assert res["folded"] == [] and res["rows"] == 0
     assert _append_rows(store.read_appends(spark, "led", SCHEMA)) == {(1, "a", 1)}
 
+
+
+def _append_ten_rows_per_batch(spark, store, n_batches):
+    for b in range(n_batches):
+        store.append_batch(
+            spark.range(10).select(F.col("id"), F.lit(f"v{b}").alias("val")), "ledger", b
+        )
+
+
+def test_read_appends_since_prunes_dirs_and_segment(spark, store_dir):
+    store = SnapshotStore(store_dir)
+    _append_ten_rows_per_batch(spark, store, 6)
+    df, rep = store.read_appends_since(spark, "ledger", SCHEMA, min_batch_id=4)
+    assert rep == {"dirs_total": 6, "dirs_read": 2, "segment_read": False}
+    assert df.count() == 20 and set(r.batch_id for r in df.collect()) == {4, 5}
+
+
+def test_read_appends_since_after_compaction(spark, store_dir):
+    store = SnapshotStore(store_dir)
+    _append_ten_rows_per_batch(spark, store, 6)
+    store.compact_appends(spark, "ledger", SCHEMA, keep_last=2)  # folds 0-3
+    # tail entirely in live dirs: the segment must not be touched
+    df, rep = store.read_appends_since(spark, "ledger", SCHEMA, min_batch_id=4)
+    assert rep["segment_read"] is False and rep["dirs_read"] == 2
+    assert df.count() == 20
+    # tail reaching into folded batches: segment read, rows exact
+    df2, rep2 = store.read_appends_since(spark, "ledger", SCHEMA, min_batch_id=2)
+    assert rep2["segment_read"] is True
+    assert df2.count() == 40 and set(r.batch_id for r in df2.collect()) == {2, 3, 4, 5}
+    full = store.read_appends(spark, "ledger", SCHEMA).where(F.col("batch_id") >= 2)
+    assert sorted((r.batch_id, r.id) for r in df2.collect()) == sorted(
+        (r.batch_id, r.id) for r in full.collect()
+    )
 
 def test_cli_compact_appends(spark, store_dir, capsys):
     import json as _json

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gepris_spark import schemas
-from gepris_spark.plans import views
+from gepris_spark.operators import views
 
 
 def _latest(spark, rows):
@@ -102,18 +102,3 @@ def test_latest_detail_items_and_latest_items(spark):
     # success -> history item; moved excluded; error -> frontier fallback
     assert got == {1: '{"v": 2}', 3: '{"a": 3}'}
 
-
-def test_latest_monitor_stat(spark):
-    base = datetime.datetime(2021, 1, 1)
-    rows = [
-        tuple(
-            [base + datetime.timedelta(days=d)]
-            + [None] * 2
-            + [d * 10] * 10
-            + [f"v{d}", None, None]
-        )
-        for d in (1, 3, 2)
-    ]
-    monitor = spark.createDataFrame(rows, schemas.DATA_MONITOR)
-    top = views.latest_monitor_stat(monitor).collect()[0]
-    assert top["gepris_version"] == "v3"

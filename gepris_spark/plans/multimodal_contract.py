@@ -82,7 +82,6 @@ def q_crawl_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         EngineConfig(
             batch_size=128,
             bloom_buckets=4,
-            bloom_bits=1 << 18,
             # accounting counts cost 3 extra jobs per batch; the
             # contract output is the visit log, and the accounting path
             # keeps its own coverage in tests/test_replay.py
@@ -116,7 +115,6 @@ def q_crawl_aimd(spark: SparkSession, sf_dir: str) -> DataFrame:
         EngineConfig(
             batch_size=46,
             bloom_buckets=4,
-            bloom_bits=1 << 18,
             detailed_metrics=False,
         ),
     )
@@ -152,7 +150,7 @@ def q_crawl_image_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         tempfile.mkdtemp(prefix="gepris_imgcat_"),
         EngineConfig(
-            batch_size=128, bloom_buckets=4, bloom_bits=1 << 18, detailed_metrics=False
+            batch_size=128, bloom_buckets=4, detailed_metrics=False
         ),
     )
     engine.run_seed_list(spark.createDataFrame(seeds_pdf))

@@ -76,12 +76,11 @@ _GEPRIS_DETAIL_RE = r"^https?://[^/]*/gepris/([^/]+)/(\d+)$"
 @dataclass
 class EngineConfig:
     batch_size: int = 10_000
+    # the bloom has no size setting: each bucket starts at 8 KiB and is
+    # rebuilt larger whenever its estimated false-positive rate passes
+    # urlseen.FP_BOUND, so it never saturates into "everything pays the
+    # exact anti-join"; each ledger row reports its size and fill
     bloom_buckets: int = 16
-    # 2 MiB of bits per bucket -> ~0.1% fp at 1M urls/bucket with k=5
-    # (grow bits/buckets with the frontier: a saturated bloom silently
-    # degrades to "everything pays the exact anti-join" — bits are
-    # cheap, shuffles are not)
-    bloom_bits: int = 1 << 24
     bloom_hashes: int = 5
     # detailed per-batch accounting (input/dup/invalid counts) costs 3
     # extra count jobs per batch; throughput-critical deployments can
@@ -102,10 +101,7 @@ class CrawlEngine:
         self.config = config or EngineConfig()
         self.store = SnapshotStore(root)
         self.bloom = BloomUrlSeen(
-            root,
-            n_buckets=self.config.bloom_buckets,
-            m_bits=self.config.bloom_bits,
-            k=self.config.bloom_hashes,
+            root, n_buckets=self.config.bloom_buckets, k=self.config.bloom_hashes
         )
 
     # ------------------------------------------------------------ state
@@ -216,8 +212,14 @@ class CrawlEngine:
             if detailed
             else -1
         )
+        # the exact seen set is the visit log of the batches before this
+        # one (pruned to their partition dirs): the exact check and a
+        # bloom rebuild both read it, and neither sees this batch's own
+        # dir, which a re-run of a batch whose visit-log write landed
+        # before its ledger row would otherwise find already written
+        prior_seen = self.visit_log().where(F.col("batch_id") < batch_id).select("url")
         fresh = self.bloom.filter_new(
-            candidates.drop("_arrivals"), self.url_seen(), num_partitions=n_batch_parts
+            candidates.drop("_arrivals"), prior_seen, num_partitions=n_batch_parts
         ).persist()
         n_fresh = timed("urlseen_filter", fresh.count) if detailed else -1
         allowed = politeness.apply_robots(fresh, robots)
@@ -329,7 +331,9 @@ class CrawlEngine:
                 ),
                 pool.submit(
                     timed, "bloom_update",
-                    lambda: self.bloom.add_urls(visits.select("url"), assume_distinct=True),
+                    lambda: self.bloom.add_urls(
+                        visits.select("url"), assume_distinct=True, seen_urls=prior_seen
+                    ),
                 ),
                 pool.submit(
                     timed, "state_commit",
@@ -338,6 +342,7 @@ class CrawlEngine:
             ]
             for f in futures:
                 f.result()
+        urlseen_health = futures[1].result()
         ordered.unpersist()
         candidates.unpersist()
         fresh.unpersist()
@@ -356,6 +361,7 @@ class CrawlEngine:
             ),
             "frontier_version": self.store.current_version("frontier"),
             "first_seq": int(first_seq),
+            **urlseen_health,
             "stage_sec": timings,
         }
         self._commit_ledger(ledger_row)

@@ -45,7 +45,7 @@ def _history_rows(spark, store_root):
     class _S:  # History only needs .store
         pass
 
-    engine = CrawlEngine(spark, store_root, EngineConfig(bloom_buckets=2, bloom_bits=1 << 14))
+    engine = CrawlEngine(spark, store_root, EngineConfig(bloom_buckets=2))
     return {
         (r["id"], r["context"]): r["status"]
         for r in History(spark, engine.store).read().collect()
@@ -62,7 +62,7 @@ def test_evict_forces_refetch_then_history_row(spark, tmp_path, small_corpus, ca
 
     # baseline: full store, corpus-join fetch
     base_engine = CrawlEngine(
-        spark, str(tmp_path / "base"), EngineConfig(bloom_buckets=2, bloom_bits=1 << 14)
+        spark, str(tmp_path / "base"), EngineConfig(bloom_buckets=2)
     )
     base_engine.run_details_batch(1, sched, spark.read.parquet(store_path), runs)
     base_hist = _history_rows(spark, str(tmp_path / "base"))
@@ -94,7 +94,7 @@ def test_evict_forces_refetch_then_history_row(spark, tmp_path, small_corpus, ca
         return fetchparse.fetch_pages(missed, pages_df)
 
     rt_engine = CrawlEngine(
-        spark, str(tmp_path / "rt"), EngineConfig(bloom_buckets=2, bloom_bits=1 << 14)
+        spark, str(tmp_path / "rt"), EngineConfig(bloom_buckets=2)
     )
     rt_engine.run_details_batch(
         1,
@@ -111,7 +111,7 @@ def test_evict_forces_refetch_then_history_row(spark, tmp_path, small_corpus, ca
     # (connection-failure route) — proving the miss is real, not a
     # no-op eviction
     err_engine = CrawlEngine(
-        spark, str(tmp_path / "err"), EngineConfig(bloom_buckets=2, bloom_bits=1 << 14)
+        spark, str(tmp_path / "err"), EngineConfig(bloom_buckets=2)
     )
     err_engine.run_details_batch(1, sched, evicted_store, runs)
     err_hist = _history_rows(spark, str(tmp_path / "err"))

@@ -27,7 +27,7 @@ def crawl_out(spark, corpus_dir, tmp_path_factory):
         .distinct()
         .withColumn("language", F.lit("de"))
     )
-    engine = CrawlEngine(spark, root, EngineConfig(bloom_buckets=4, bloom_bits=1 << 18))
+    engine = CrawlEngine(spark, root, EngineConfig(bloom_buckets=4))
     runs = spark.createDataFrame(
         [(1, "2021-10-18T06:00:00")], "id long, run_started_at string"
     ).withColumn("run_started_at", F.to_timestamp("run_started_at"))
@@ -175,7 +175,7 @@ def test_parse_executes_once_per_fetched_row(spark, corpus_dir, tmp_path, monkey
     )
     n_scheduled = scheduled.count()
     engine = CrawlEngine(
-        spark, str(tmp_path / "store"), EngineConfig(bloom_buckets=4, bloom_bits=1 << 18)
+        spark, str(tmp_path / "store"), EngineConfig(bloom_buckets=4)
     )
     runs = spark.createDataFrame(
         [(1, "2021-10-18T06:00:00")], "id long, run_started_at string"

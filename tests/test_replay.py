@@ -130,7 +130,7 @@ def test_resume_from_host_rows_without_delay(spark, tmp_path, seeds_pdf):
 def test_bloom_urlseen_no_false_negatives(spark, tmp_path):
     from gepris_spark.operators.urlseen import BloomUrlSeen
 
-    bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=4, m_bits=1 << 14, k=5)
+    bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=4, k=5)
     urls = spark.range(500).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
     bloom.add_urls(urls)
     probed = bloom.with_maybe_seen(urls)
@@ -269,7 +269,7 @@ def test_exact_match_on_other_corpora(spark, tmp_path, corpus_seed):
             engine = CrawlEngine(
                 spark,
                 str(tmp_path / f"s{corpus_seed}_{tag}_{feed_tag}"),
-                EngineConfig(batch_size=batch_size, bloom_buckets=4, bloom_bits=1 << 18),
+                EngineConfig(batch_size=batch_size, bloom_buckets=4),
             )
             engine.run_seed_list(spark.createDataFrame(pdf), latencies=latencies)
             _assert_match(engine, replay(_seed_rows(pdf), batch_size=batch_size, aimd=False))

@@ -22,8 +22,7 @@ def aimd_once(spark):
     engine = CrawlEngine(
         spark,
         tempfile.mkdtemp(prefix="prof_aimd_"),
-        EngineConfig(batch_size=46, bloom_buckets=4, bloom_bits=1 << 18,
-                     detailed_metrics=False),
+        EngineConfig(batch_size=46, bloom_buckets=4, detailed_metrics=False),
     )
     t0 = time.monotonic()
     rows = engine.run_seed_list(spark.createDataFrame(seeds_pdf), latencies=latencies)

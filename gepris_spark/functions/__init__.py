@@ -1,1 +1,1 @@
-from gepris_spark.functions import canonical, textstats  # noqa: F401
+from gepris_spark.functions import canonical  # noqa: F401

@@ -385,7 +385,6 @@ def details_chain(
     pages: DataFrame,
     parse,
     max_retries: int = 2,
-    parse_result=None,
     broadcast_fetch: bool = True,
     fetch=None,
 ) -> dict[str, DataFrame]:
@@ -411,8 +410,6 @@ def details_chain(
     from gepris_spark.operators import fetchparse
     from gepris_spark.operators.history import route_statuses
 
-    if parse_result is None:
-        parse_result = fetchparse.parse_result_stage
     if fetch is None:
         def fetch(sched):
             return fetchparse.fetch_pages(sched, pages, broadcast_fetch)
@@ -445,11 +442,11 @@ def details_chain(
     # the projekt-with-result subset — the fetch join prunes everything
     # else before any html moves.
     res_cont_de = result_continuation_rows(parsed_en)
-    result_de = parse_result(fetch(res_cont_de)).persist()
+    result_de = fetchparse.parse_result_stage(fetch(res_cont_de)).persist()
     res_cont_en = result_de.where(F.col("status") == "success").select(
         "url", "context", "item_id", F.lit("en").alias("language")
     )
-    result_en = parse_result(fetch(res_cont_en))
+    result_en = fetchparse.parse_result_stage(fetch(res_cont_en))
 
     items = assemble_bilingual(
         normalised_success_rows(terminal_de.where(F.col("status") == "success")),

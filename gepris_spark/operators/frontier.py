@@ -110,7 +110,9 @@ class Frontier:
 
     # ---------------------------------------------------------------- K2
     def upsert_details_batch(self, ids: DataFrame, run_id: int) -> int:
-        """Details-run upsert (database.py:66-76): mark checked."""
+        """Details-run upsert (database.py:66-76): mark checked.
+        Idempotent: a re-run with the same `run_id` sets the same
+        values again."""
         run = F.lit(run_id).cast("long")
         source = ids.select(F.col("item_id").cast("long").alias("id"), "context").dropDuplicates(KEYS)
 
@@ -222,8 +224,8 @@ class Frontier:
           flag every projekt_id whose referenced id moved
 
         The moved set is tiny (a GEPRIS renumbering event), so the
-        ref-edge join broadcasts it; the frontier UPDATE reuses the
-        bucket-pruned MERGE of mark_check_needed_for_ids."""
+        ref-edge join broadcasts it; the frontier UPDATE is
+        mark_check_needed_for_ids, a full frontier rewrite."""
         if context == "person":
             refs = views.person_projekt_references(
                 views.latest_detail_items(history, runs)

@@ -31,9 +31,13 @@ class History:
         skipping rows identical (null-safe) to the latest history row.
 
         Left-anti join against the Q1 latest view with `<=>` on item and
-        equality on status (database.py:107-111's NOT EXISTS).
+        equality on status (database.py:107-111's NOT EXISTS). The view
+        covers the runs before `run_id` only: a re-run of `run_id` must
+        not compare against the rows it wrote itself, which would skip
+        them all and overwrite its append dir empty.
         """
-        latest = views.latest_detail_items(self.read(), runs).select(
+        prior = self.read().where(F.col("created_at") < run_id)
+        latest = views.latest_detail_items(prior, runs).select(
             "id", "context", F.col("item").alias("_l_item"), F.col("status").alias("_l_status")
         )
         fresh = (

@@ -40,6 +40,7 @@ rewrite, as they would on any table format.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -65,8 +66,8 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
 
 def _link_tree(src_root: str, dst_root: str) -> None:
     """Mirror a snapshot directory as hardlinks (copy fallback across
-    filesystems) — O(1) per file, the same forward-carry trick
-    `merge_bucketed` uses for untouched buckets."""
+    filesystems) — O(1) per file: `rollback` copies a whole snapshot
+    this way, `merge_bucketed` its untouched buckets."""
     for dirpath, _dirnames, filenames in os.walk(src_root):
         rel = os.path.relpath(dirpath, src_root)
         target = dst_root if rel == "." else os.path.join(dst_root, rel)
@@ -78,6 +79,22 @@ def _link_tree(src_root: str, dst_root: str) -> None:
                 os.link(src, dst)
             except OSError:
                 shutil.copy2(src, dst)
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Replace a small metadata file in one step: write a tmp file
+    beside it, then rename it over the old one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _parquet_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(path, f)) for f in os.listdir(path) if f.endswith(".parquet")
+    )
 
 
 def merge_upsert(
@@ -142,13 +159,12 @@ def merge_upsert(
     if matched_delete is not None:
         drop_matched = has_source & ~is_insert & F.coalesce(matched_delete(t, s), F.lit(False))
         keep = keep & ~drop_matched
-    if not_matched_insert is not None or not_matched_condition is not None:
-        if not_matched_condition is not None:
-            keep = keep & F.when(
-                is_insert, F.coalesce(not_matched_condition(s), F.lit(False))
-            ).otherwise(F.lit(True))
-    if matched_delete is None and not_matched_condition is None:
-        return joined.select(*out_cols)
+    if not_matched_condition is not None:
+        keep = keep & F.when(
+            is_insert, F.coalesce(not_matched_condition(s), F.lit(False))
+        ).otherwise(F.lit(True))
+    # with neither clause `keep` is a literal true, and Catalyst drops
+    # the filter: the plan is the bare projection
     return joined.select(*out_cols, keep.alias("__keep")).where(F.col("__keep")).drop("__keep")
 
 
@@ -165,6 +181,9 @@ class SnapshotStore:
 
     def _version_file(self, name: str) -> str:
         return os.path.join(self._table_dir(name), "_VERSION")
+
+    def _version_dir(self, name: str, version: int) -> str:
+        return os.path.join(self._table_dir(name), f"v{version}")
 
     def current_version(self, name: str) -> int | None:
         try:
@@ -186,7 +205,7 @@ class SnapshotStore:
         if (
             current is None
             or version > current
-            or not os.path.isdir(os.path.join(self._table_dir(name), f"v{version}"))
+            or not os.path.isdir(self._version_dir(name, version))
         ):
             raise FileNotFoundError(
                 f"table {name!r} has no snapshot v{version} "
@@ -208,70 +227,31 @@ class SnapshotStore:
         version = self._resolve_version(name, version)
         if version is None:
             return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            os.path.join(self._table_dir(name), f"v{version}")
-        )
+        return spark.read.schema(schema).parquet(self._version_dir(name, version))
 
     def commit_snapshot(self, df: DataFrame, name: str, num_files: int | None = None) -> int:
         """Write the next snapshot version and atomically flip the pointer.
         `num_files` coalesces the write to that many files."""
-        version = (self.current_version(name) or 0) + 1
-        path = os.path.join(self._table_dir(name), f"v{version}")
-        if os.path.exists(path):  # leftover from a killed run — never committed
-            shutil.rmtree(path)
-        (df.coalesce(num_files) if num_files else df).write.mode("overwrite").parquet(path)
-        self._flip_version(name, version)
-        return version
+        out = df.coalesce(num_files) if num_files else df
+        return self._commit_next(name, out.write.mode("overwrite").parquet)
 
-    def read_appends_since(
-        self, spark: SparkSession, name: str, schema: T.StructType, min_batch_id: int
-    ) -> tuple[DataFrame, dict]:
-        """Incremental tail read of an append ledger: list ONLY the
-        live `batch_id >= min_batch_id` dirs and touch the compacted
-        segment only when it still holds batches in range — the
-        O(new-batches) consumption path an incremental consumer needs
-        (the ledger analogue of snapshot CDC's changed-bucket pruning).
-        Returns (DataFrame, report with dirs_total/dirs_read/
-        segment_read)."""
-        table_dir = self._table_dir(name)
-        if "batch_id" in schema.fieldNames():
-            full = schema
-        else:
-            full = T.StructType(
-                list(schema.fields) + [T.StructField("batch_id", T.LongType())]
-            )
-        live = self._live_batch_dirs(name)
-        keep = [b for b in live if b >= min_batch_id]
-        manifest = self._compact_manifest(name)
-        seg_in_range = bool(manifest["segment"]) and any(
-            b >= min_batch_id for b in manifest["batch_ids"]
-        )
-        report = {
-            "dirs_total": len(live),
-            "dirs_read": len(keep),
-            "segment_read": seg_in_range,
-        }
-        parts: list[DataFrame] = []
-        if keep:
-            live_df = spark.read.schema(schema).option("basePath", table_dir).parquet(
-                *[os.path.join(table_dir, f"batch_id={b}") for b in keep]
-            )
-            parts.append(live_df.withColumn("batch_id", F.col("batch_id").cast("long")))
-        if seg_in_range:
-            seg = spark.read.schema(full).parquet(
-                os.path.join(table_dir, manifest["segment"])
-            )
-            seg = seg.where(F.col("batch_id") >= F.lit(min_batch_id))
-            refolded = sorted(set(manifest["batch_ids"]) & set(keep))
-            if refolded:
-                seg = seg.where(~F.col("batch_id").isin(refolded))
-            parts.append(seg)
-        if not parts:
-            return spark.createDataFrame([], full), report
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out, report
+    def _commit_next(self, name: str, write: Callable[[str], None]) -> int:
+        """The one commit path of a versioned table: `write` fills the
+        dir of version current + 1, then the pointer flips to it. A dir
+        already there is a leftover of a killed run, never committed,
+        and is removed first. Returns the new version."""
+        version = (self.current_version(name) or 0) + 1
+        path = self._version_dir(name, version)
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        write(path)
+        record = {"version": version, "committed_at": time.time()}
+        _write_json_atomic(self._version_file(name), record)
+        # the pointer flip above IS the commit; the log line is metadata
+        # (snapshots() reconstructs a torn/lost line from the dir mtime)
+        with open(self._snapshot_log(name), "a") as fh:
+            fh.write(json.dumps(record) + "\n")
+        return version
 
     # ----------------------------------------- bucketed mutable tables
     BUCKET_COL = "_bucket"
@@ -293,9 +273,7 @@ class SnapshotStore:
         read_schema = T.StructType(
             list(schema.fields) + [T.StructField(self.BUCKET_COL, T.IntegerType())]
         )
-        return spark.read.schema(read_schema).parquet(
-            os.path.join(self._table_dir(name), f"v{version}")
-        )
+        return spark.read.schema(read_schema).parquet(self._version_dir(name, version))
 
     def _layout_file(self, name: str) -> str:
         return os.path.join(self._table_dir(name), "_LAYOUT")
@@ -326,11 +304,7 @@ class SnapshotStore:
                 f"requested {spec}. Re-bucketing requires an explicit full rewrite "
                 "(commit_bucketed), as in Iceberg partition-spec evolution."
             )
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        tmp = self._layout_file(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(spec, fh)
-        os.replace(tmp, self._layout_file(name))
+        _write_json_atomic(self._layout_file(name), spec)
 
     def read_bucketed(
         self,
@@ -353,16 +327,16 @@ class SnapshotStore:
         """Full-table rewrite, laid out as `_bucket=N` partitions (the
         sweep-update path: vanish marking and friends touch every
         bucket by nature)."""
-        version = (self.current_version(name) or 0) + 1
-        path = os.path.join(self._table_dir(name), f"v{version}")
-        if os.path.exists(path):
-            shutil.rmtree(path)
+        version = self._commit_next(
+            name, lambda path: self._write_buckets(df, path, key_col, n_buckets)
+        )
+        self._commit_layout(name, key_col, n_buckets, allow_change=True)
+        return version
+
+    def _write_buckets(self, df: DataFrame, path: str, key_col: str, n_buckets: int) -> None:
         df.withColumn(self.BUCKET_COL, self.bucket_expr(key_col, n_buckets)).write.partitionBy(
             self.BUCKET_COL
         ).mode("overwrite").parquet(path)
-        self._flip_version(name, version)
-        self._commit_layout(name, key_col, n_buckets, allow_change=True)
-        return version
 
     def merge_bucketed(
         self,
@@ -394,10 +368,8 @@ class SnapshotStore:
             r[self.BUCKET_COL] for r in src.select(self.BUCKET_COL).distinct().collect()
         )
         version = self.current_version(name)
-        old_path = (
-            os.path.join(self._table_dir(name), f"v{version}") if version is not None else None
-        )
-        if old_path and os.path.isdir(old_path):
+        old_path = self._version_dir(name, version) if version is not None else ""
+        if os.path.isdir(old_path):
             target = _conform(
                 self._read_buckets(spark, name, version, schema).where(
                     F.col(self.BUCKET_COL).isin([int(b) for b in touched])
@@ -410,41 +382,17 @@ class SnapshotStore:
             target, src.drop(self.BUCKET_COL), keys, matched_update, not_matched_insert,
             matched_condition, matched_delete, not_matched_condition,
         )
-        new_version = (version or 0) + 1
-        new_path = os.path.join(self._table_dir(name), f"v{new_version}")
-        if os.path.exists(new_path):
-            shutil.rmtree(new_path)
-        merged.withColumn(self.BUCKET_COL, self.bucket_expr(key_col, n_buckets)).write.partitionBy(
-            self.BUCKET_COL
-        ).mode("overwrite").parquet(new_path)
-        # carry untouched buckets forward without rewriting their data
-        if old_path and os.path.isdir(old_path):
-            touched_dirs = {f"{self.BUCKET_COL}={b}" for b in touched}
-            for entry in os.listdir(old_path):
-                if not entry.startswith(f"{self.BUCKET_COL}=") or entry in touched_dirs:
-                    continue
-                src_dir = os.path.join(old_path, entry)
-                dst_dir = os.path.join(new_path, entry)
-                os.makedirs(dst_dir, exist_ok=True)
-                for fname in os.listdir(src_dir):
-                    try:
-                        os.link(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
-                    except OSError:
-                        shutil.copy2(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
-        self._flip_version(name, new_version)
-        return new_version
 
-    def _flip_version(self, name: str, version: int) -> None:
-        committed_at = time.time()
-        tmp = self._version_file(name) + ".tmp"
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "committed_at": committed_at}, fh)
-        os.replace(tmp, self._version_file(name))
-        # the pointer flip above IS the commit; the log line is metadata
-        # (snapshots() reconstructs a torn/lost line from the dir mtime)
-        with open(self._snapshot_log(name), "a") as fh:
-            fh.write(json.dumps({"version": version, "committed_at": committed_at}) + "\n")
+        def write(path: str) -> None:
+            self._write_buckets(merged, path, key_col, n_buckets)
+            # carry untouched buckets forward without rewriting their data
+            if os.path.isdir(old_path):
+                touched_dirs = {f"{self.BUCKET_COL}={b}" for b in touched}
+                for entry in os.listdir(old_path):
+                    if entry.startswith(f"{self.BUCKET_COL}=") and entry not in touched_dirs:
+                        _link_tree(os.path.join(old_path, entry), os.path.join(path, entry))
+
+        return self._commit_next(name, write)
 
     # ---------------------------------------------- snapshot lifecycle
     def snapshots(self, name: str) -> list[dict]:
@@ -490,15 +438,8 @@ class SnapshotStore:
         Iceberg's `rollback_to_snapshot` semantics: history stays
         monotonic, the bad snapshots remain inspectable until expired,
         and a concurrent reader of the old current version is unharmed."""
-        src_version = self._resolve_version(name, version)
-        src = os.path.join(self._table_dir(name), f"v{src_version}")
-        new_version = (self.current_version(name) or 0) + 1
-        dst = os.path.join(self._table_dir(name), f"v{new_version}")
-        if os.path.exists(dst):  # leftover from a killed run
-            shutil.rmtree(dst)
-        _link_tree(src, dst)
-        self._flip_version(name, new_version)
-        return new_version
+        src = self._version_dir(name, self._resolve_version(name, version))
+        return self._commit_next(name, lambda dst: _link_tree(src, dst))
 
     def expire_snapshots(self, name: str, keep_last: int = 2) -> list[int]:
         """Delete all but the newest `keep_last` snapshots (always
@@ -512,7 +453,7 @@ class SnapshotStore:
         snaps = [s["version"] for s in self.snapshots(name)]
         expired = []
         for v in snaps[:-keep_last] if len(snaps) > keep_last else []:
-            shutil.rmtree(os.path.join(self._table_dir(name), f"v{v}"), ignore_errors=True)
+            shutil.rmtree(self._version_dir(name, v), ignore_errors=True)
             expired.append(v)
         return expired
 
@@ -522,7 +463,7 @@ class SnapshotStore:
         identical file set proves identical content without reading a
         byte — the same trick Iceberg's changelog gets from comparing
         manifest entries."""
-        path = os.path.join(self._table_dir(name), f"v{version}")
+        path = self._version_dir(name, version)
         out: dict[str, set[tuple]] = {}
         for entry in os.listdir(path):
             if not entry.startswith(f"{self.BUCKET_COL}="):
@@ -620,6 +561,8 @@ class SnapshotStore:
             return {"segment": None, "batch_ids": [], "seq": 0}
 
     def _live_batch_dirs(self, name: str) -> list[int]:
+        """Batch ids whose append committed: a `batch_id=N` dir without
+        Spark's `_SUCCESS` marker is a write a crash cut short."""
         table_dir = self._table_dir(name)
         if not os.path.isdir(table_dir):
             return []
@@ -630,43 +573,64 @@ class SnapshotStore:
                     out.append(int(entry.split("=", 1)[1]))
         return sorted(out)
 
-    def read_appends(self, spark: SparkSession, name: str, schema: T.StructType) -> DataFrame:
+    def _scan_appends(
+        self, spark: SparkSession, name: str, schema: T.StructType, min_batch_id: int | None
+    ) -> tuple[DataFrame, dict]:
+        """The one reader of an append ledger: the committed `batch_id=N`
+        dirs (those from `min_batch_id` on, when it is given) plus the
+        compacted segment when it holds a batch in range. A batch
+        re-appended after it was folded (an idempotent re-run of
+        `append_batch`) lives in both places; the live dir is newer and
+        wins. Returns the rows and a report of what was listed and
+        read (dirs_total, dirs_read, segment_read)."""
         table_dir = self._table_dir(name)
         # some ledgers (visit_log) already carry batch_id as a data column;
         # only append the partition-derived one when the schema lacks it
-        if "batch_id" in schema.fieldNames():
-            full = schema
-        else:
-            full = T.StructType(
-                list(schema.fields) + [T.StructField("batch_id", T.LongType())]
-            )
-        manifest = self._compact_manifest(name)
-        has_live = os.path.isdir(table_dir) and any(
-            e.startswith("batch_id=") for e in os.listdir(table_dir)
+        full = schema if "batch_id" in schema.fieldNames() else T.StructType(
+            list(schema.fields) + [T.StructField("batch_id", T.LongType())]
         )
+
+        def in_range(b: int) -> bool:
+            return min_batch_id is None or b >= min_batch_id
+
+        live = self._live_batch_dirs(name)
+        keep = [b for b in live if in_range(b)]
+        manifest = self._compact_manifest(name)
+        seg_read = bool(manifest["segment"]) and any(map(in_range, manifest["batch_ids"]))
         parts: list[DataFrame] = []
-        if has_live:
-            live = spark.read.schema(schema).option("basePath", table_dir).parquet(
-                os.path.join(table_dir, "batch_id=*")
+        if keep:
+            live_df = spark.read.schema(schema).option("basePath", table_dir).parquet(
+                *[os.path.join(table_dir, f"batch_id={b}") for b in keep]
             )
-            parts.append(live.withColumn("batch_id", F.col("batch_id").cast("long")))
-        if manifest["segment"]:
-            seg = spark.read.schema(full).parquet(
-                os.path.join(table_dir, manifest["segment"])
-            )
-            # a batch re-appended after being folded (idempotent re-run of
-            # append_batch) lives in BOTH places; the live dir is newer and
-            # wins — drop its compacted copy
-            refolded = sorted(set(manifest["batch_ids"]) & set(self._live_batch_dirs(name)))
+            parts.append(live_df.withColumn("batch_id", F.col("batch_id").cast("long")))
+        if seg_read:
+            seg = spark.read.schema(full).parquet(os.path.join(table_dir, manifest["segment"]))
+            if min_batch_id is not None:
+                seg = seg.where(F.col("batch_id") >= F.lit(min_batch_id))
+            refolded = sorted(set(manifest["batch_ids"]) & set(keep))
             if refolded:
                 seg = seg.where(~F.col("batch_id").isin(refolded))
             parts.append(seg)
+        report = {"dirs_total": len(live), "dirs_read": len(keep), "segment_read": seg_read}
         if not parts:
-            return spark.createDataFrame([], full)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return spark.createDataFrame([], full), report
+        return functools.reduce(DataFrame.unionByName, parts), report
+
+    def read_appends(self, spark: SparkSession, name: str, schema: T.StructType) -> DataFrame:
+        """Every committed row of an append ledger."""
+        return self._scan_appends(spark, name, schema, None)[0]
+
+    def read_appends_since(
+        self, spark: SparkSession, name: str, schema: T.StructType, min_batch_id: int
+    ) -> tuple[DataFrame, dict]:
+        """Incremental tail read of an append ledger: list ONLY the
+        live `batch_id >= min_batch_id` dirs and touch the compacted
+        segment only when it still holds batches in range — the
+        O(new-batches) consumption path an incremental consumer needs
+        (the ledger analogue of snapshot CDC's changed-bucket pruning).
+        Returns (DataFrame, report with dirs_total/dirs_read/
+        segment_read)."""
+        return self._scan_appends(spark, name, schema, min_batch_id)
 
     def committed_batches(self, name: str) -> list[int]:
         manifest = self._compact_manifest(name)
@@ -713,28 +677,16 @@ class SnapshotStore:
         )
         if num_files is None:
             # one output file per ~128 MB of folded input, never zero
-            folded_bytes = 0
-            for b in fold_live:
-                d = os.path.join(table_dir, f"batch_id={b}")
-                folded_bytes += sum(
-                    os.path.getsize(os.path.join(d, f))
-                    for f in os.listdir(d)
-                    if f.endswith(".parquet")
-                )
+            folded = [os.path.join(table_dir, f"batch_id={b}") for b in fold_live]
             if manifest["segment"]:
-                old = os.path.join(table_dir, manifest["segment"])
-                folded_bytes += sum(
-                    os.path.getsize(os.path.join(old, f))
-                    for f in os.listdir(old)
-                    if f.endswith(".parquet")
-                )
-            num_files = max(1, folded_bytes // (128 << 20))
+                folded.append(os.path.join(table_dir, manifest["segment"]))
+            num_files = max(1, sum(map(_parquet_bytes, folded)) // (128 << 20))
         src.repartition(int(num_files)).write.mode("overwrite").parquet(seg_abs)
         rows = spark.read.parquet(seg_abs).count()
-        tmp = self._compact_manifest_file(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"segment": seg_rel, "batch_ids": folded_ids, "seq": seq}, fh)
-        os.replace(tmp, self._compact_manifest_file(name))
+        _write_json_atomic(
+            self._compact_manifest_file(name),
+            {"segment": seg_rel, "batch_ids": folded_ids, "seq": seq},
+        )
         for b in fold_live:
             shutil.rmtree(os.path.join(table_dir, f"batch_id={b}"), ignore_errors=True)
         if manifest["segment"] and manifest["segment"] != seg_rel:

@@ -11,15 +11,24 @@ Each micro-batch:
        batches in a host-state table; the delay adapts to a latency
        feed when one is passed, AIMD)
     -> visit-order assignment (the replay contract)
-    -> commit, step by step, each step idempotent: visit-log append
-       (per-batch directory), bloom update, host-state snapshot,
-       ledger row (K5 run ledger, database.py:214-229)
+    -> commit: three idempotent jobs run concurrently — visit-log append
+       (per-batch directory), bloom update, host-state snapshot — and
+       then the ledger row (K5 run ledger, database.py:214-229) is
+       appended and fsynced
+
+The ledger row is the commit point. A batch's prior state is pinned to
+the ledger, never to whatever its own commit jobs may have left: the
+exact seen set is the visit log of the batches before it, and the host
+state is the version the previous ledger row recorded. So a crash
+anywhere inside the commit, with any subset of the three jobs landed,
+re-runs the batch from the same inputs; stale bloom bits only cost an
+exact check.
 
 Deterministic: no wall clock anywhere in the data path — `scheduled_ms`
 is logical time. A killed run resumes from the ledger and reproduces
 the remaining batches byte-identically (north rule), which
-tests/test_replay.py proves by diffing a killed+resumed run against an
-uninterrupted one.
+tests/test_replay.py proves by diffing runs killed between batches and
+inside the commit against an uninterrupted one.
 
 Structured Streaming is deliberately NOT used: ordering + politeness
 need cross-batch global state (per-host counters) and multi-table
@@ -225,8 +234,20 @@ class CrawlEngine:
         allowed = politeness.apply_robots(fresh, robots)
 
         # per-host token-bucket sequence, delay and next send time
-        # carried across batches
-        state = self.host_state().select(
+        # carried across batches: the version the previous ledger row
+        # recorded, read once for the schedule join and the merge below
+        # (no previous row: empty; a row written before the field
+        # existed: the current version)
+        prior = self.committed_batches()
+        prev = max((b for b in prior if b < batch_id), default=None)
+        host_state = (
+            self.spark.createDataFrame([], HOST_STATE)
+            if prev is None
+            else self.store.read(
+                self.spark, "host_state", HOST_STATE, prior[prev].get("host_state_version")
+            )
+        )
+        state = host_state.select(
             "host",
             F.col("next_seq").alias("_base_seq"),
             F.col("delay_ms").alias("_state_delay"),
@@ -258,7 +279,6 @@ class CrawlEngine:
             ).cast("long"),
         )
 
-        prior = self.committed_batches()
         first_seq = max((r["first_seq"] + r["n_visited"] for r in prior.values()), default=0)
         # one range partition for a small batch skips the range-sampling
         # job entirely — the same seq contract, minus two fixed jobs
@@ -308,8 +328,7 @@ class CrawlEngine:
         # struct-max keeps the batch row and leaves untouched hosts on
         # their prior (next_seq, delay, next_ms) — one groupBy, no join
         merged_state = (
-            self.host_state()
-            .unionByName(batch_state)
+            host_state.unionByName(batch_state)
             .groupBy("host")
             .agg(F.max(F.struct("next_seq", "delay_ms", "next_ms")).alias("_s"))
             .select("host", "_s.next_seq", "_s.delay_ms", "_s.next_ms")
@@ -320,7 +339,7 @@ class CrawlEngine:
         # replay, so run them as CONCURRENT Spark jobs — on a cluster
         # the driver otherwise sits idle between three small actions;
         # the ledger write below stays strictly after the group, so the
-        # resume marker still implies all three landed
+        # ledger row implies all three landed
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=3) as pool:
@@ -343,6 +362,7 @@ class CrawlEngine:
             for f in futures:
                 f.result()
         urlseen_health = futures[1].result()
+        host_state_version = futures[2].result()
         ordered.unpersist()
         candidates.unpersist()
         fresh.unpersist()
@@ -359,7 +379,7 @@ class CrawlEngine:
             "n_invalid": (
                 int(n_input - n_valid_arrivals + (n_fresh - n_visited)) if detailed else -1
             ),
-            "frontier_version": self.store.current_version("frontier"),
+            "host_state_version": host_state_version,
             "first_seq": int(first_seq),
             **urlseen_health,
             "stage_sec": timings,
@@ -367,8 +387,7 @@ class CrawlEngine:
         self._commit_ledger(ledger_row)
         # the batch is durable (ledger fsynced) — retire snapshot dirs
         # older than the retention window; local fs metadata ops, no jobs
-        for table in ("host_state", "frontier"):
-            self.store.expire_snapshots(table, keep_last=_SNAPSHOT_RETENTION)
+        self.store.expire_snapshots("host_state", keep_last=_SNAPSHOT_RETENTION)
         if (
             self.config.compact_every
             and len(self.store._live_batch_dirs("visit_log")) >= self.config.compact_every
@@ -402,6 +421,11 @@ class CrawlEngine:
         fetch stage (details_chain's injection point) — e.g.
         fetchparse.read_through_fetch for cache-with-live-fallback, or
         http_fetch_stage for the all-live leg.
+
+        A re-run with the same `run_id` is idempotent: the history
+        insert compares against runs before `run_id` only and overwrites
+        its own append dir, and the frontier merge sets the same
+        last-check values again.
         """
         from gepris_spark.operators import chaining, fetchparse
         from gepris_spark.operators.frontier import Frontier
@@ -510,6 +534,9 @@ class CrawlEngine:
                 frontier.mark_projekte_for_moved_references(hist_df, runs, ctx, run_id)
         if "institution" in moved_contexts:
             frontier.mark_roots_for_moved_subinstitutions(hist_df, runs, run_id)
+        # the frontier's last commit of the batch is above — retire its
+        # snapshot dirs older than the retention window
+        self.store.expire_snapshots("frontier", keep_last=_SNAPSHOT_RETENTION)
         return {
             "run_id": run_id,
             "n_items": items.count(),

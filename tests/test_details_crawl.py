@@ -275,3 +275,40 @@ def test_items_carry_beschreibung(spark, crawl_out):
         if "beschreibung_en" in item:
             assert item["beschreibung_en"].endswith("(en).")
     assert seen_de > 5
+
+
+def test_details_rerun_keeps_history(spark, tmp_path):
+    """A details batch run again under the same run id (a resume after a
+    crash past the history append) leaves history and frontier as the
+    first run left them."""
+    from collections import Counter
+
+    seeds = corpus.gen_seeds_df(spark, 10, seed=1)
+    pages = corpus.gen_pages_df(spark, seeds, seed=1, languages=("de", "en")).localCheckpoint(
+        eager=True
+    )
+    moved = pages.where((F.col("language") == "de") & (F.col("status") == "moved")).select("url")
+    scheduled = (
+        seeds.dropna(subset=["item_id"])
+        .where(~F.col("url").contains("?"))
+        .select("url", "context", "item_id")
+        .distinct()
+        .join(moved, "url", "left_anti")
+        .withColumn("language", F.lit("de"))
+        .localCheckpoint(eager=True)
+    )
+    runs = spark.createDataFrame(
+        [(1, "2021-10-18T06:00:00")], "id long, run_started_at string"
+    ).withColumn("run_started_at", F.to_timestamp("run_started_at"))
+    engine = CrawlEngine(spark, str(tmp_path / "rerun"))
+
+    def state():
+        history = Counter(tuple(r) for r in History(spark, engine.store).read().collect())
+        frontier = Counter(tuple(r) for r in Frontier(spark, engine.store).read().collect())
+        return history, frontier
+
+    engine.run_details_batch(1, scheduled, pages, runs, max_retries=0)
+    first = state()
+    assert sum(first[0].values()) == scheduled.count()
+    engine.run_details_batch(1, scheduled, pages, runs, max_retries=0)
+    assert state() == first

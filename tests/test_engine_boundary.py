@@ -79,3 +79,9 @@ def test_engine_imports_no_contract_surface():
         and any(m == f or m.startswith(f + ".") for f in FORBIDDEN)
     )
     assert leaks == [], f"the crawl engine imports {leaks}"
+
+
+def test_engine_closure_leaves_out_textstats():
+    """`functions/__init__` imports only what the engine uses; the
+    contract surface imports `textstats` by name."""
+    assert "gepris_spark.functions.textstats" not in engine_closure()

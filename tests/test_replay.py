@@ -5,6 +5,8 @@ run must resume byte-identically."""
 
 from __future__ import annotations
 
+import itertools
+import json
 import shutil
 
 import pytest
@@ -116,6 +118,14 @@ def test_resume_from_host_rows_without_delay(spark, tmp_path, seeds_pdf):
     seeds = spark.createDataFrame(seeds_pdf)
     engine = CrawlEngine(spark, str(tmp_path / "nodelay"), EngineConfig(batch_size=25))
     engine.run_seed_list(seeds, max_arrival=49)
+    # that engine's ledger rows did not record a host-state version, so
+    # the next batch reads the current one: the rows planted below
+    with open(engine._ledger_path()) as fh:
+        rows = [json.loads(line) for line in fh]
+    with open(engine._ledger_path(), "w") as fh:
+        for row in rows:
+            del row["host_state_version"]
+            fh.write(json.dumps(row) + "\n")
     no_delay = engine.host_state().select(
         "host",
         "next_seq",
@@ -125,6 +135,69 @@ def test_resume_from_host_rows_without_delay(spark, tmp_path, seeds_pdf):
     engine.store.commit_snapshot(no_delay, "host_state", num_files=1)
     engine.run_seed_list(seeds)
     _assert_match(engine, replay(_seed_rows(seeds_pdf), batch_size=25))
+
+
+class _Crash(Exception):
+    pass
+
+
+_COMMIT_JOBS = {
+    "visit_log": ("store", "append_batch"),
+    "bloom": ("bloom", "add_urls"),
+    "host_state": ("store", "commit_snapshot"),
+}
+# every subset of batch 2's three concurrent commit jobs that lands
+# before the crash (the others raise before they write), and a crash
+# in the ledger write after all three landed
+_CRASH_POINTS = [
+    pytest.param(set(landed), id="+".join(landed) or "none")
+    for n in range(len(_COMMIT_JOBS))
+    for landed in itertools.combinations(_COMMIT_JOBS, n)
+] + [pytest.param("ledger", id="ledger")]
+
+
+@pytest.fixture(scope="module")
+def crash_setup(spark, tmp_path_factory, seeds_pdf):
+    """An uninterrupted run's visit log, and a store holding batches 0
+    and 1 of the same crawl."""
+    seeds = spark.createDataFrame(seeds_pdf)
+    full = CrawlEngine(spark, str(tmp_path_factory.mktemp("full")), EngineConfig(batch_size=25))
+    full.run_seed_list(seeds)
+    two = str(tmp_path_factory.mktemp("two") / "state")
+    CrawlEngine(spark, two, EngineConfig(batch_size=25)).run_seed_list(seeds, max_arrival=49)
+    return seeds, _engine_visits(full), two
+
+
+@pytest.mark.parametrize("landed", _CRASH_POINTS)
+def test_resume_after_crash_inside_commit(spark, tmp_path, seeds_pdf, crash_setup, landed):
+    """A crash inside batch 2's commit, whichever of its commit jobs
+    landed, resumes to the uninterrupted run: the re-run batch reads the
+    prior state the ledger pins, not what its own jobs left behind."""
+    from gepris_spark.operators.politeness import empty_robots
+
+    seeds, want, two = crash_setup
+    root = str(tmp_path / "crashed")
+    shutil.copytree(two, root)
+    engine = CrawlEngine(spark, root, EngineConfig(batch_size=25))
+
+    def refuse(*_args, **_kwargs):
+        raise _Crash()
+
+    if landed == "ledger":
+        engine._commit_ledger = refuse
+    else:
+        for job, (owner, method) in _COMMIT_JOBS.items():
+            if job not in landed:
+                setattr(getattr(engine, owner), method, refuse)
+    batch = seeds.where((F.col("arrival_seq") >= 50) & (F.col("arrival_seq") < 75))
+    with pytest.raises(_Crash):
+        engine.run_batch(2, batch, empty_robots(spark))
+    assert sorted(engine.committed_batches()) == [0, 1]
+
+    resumed = CrawlEngine(spark, root, EngineConfig(batch_size=25))
+    resumed.run_seed_list(seeds)
+    assert _engine_visits(resumed) == want
+    _assert_match(resumed, replay(_seed_rows(seeds_pdf), batch_size=25))
 
 
 def test_bloom_urlseen_no_false_negatives(spark, tmp_path):

@@ -11,13 +11,13 @@ oracle (gepris_spark/replay.py) computes the identical schedule, which
 is what makes "ordering exact-match rate" a checkable contract instead
 of a wall-clock race.
 
-Skew: gepris.dfg.de dominates the corpus (~70-100% of urls), so the
-schedule never partitions by host alone. `assign_schedule`
-range-partitions the batch on (host, priority key): a hot host spans
-many partitions in priority order, and its per-host sequence is the
-rank within a partition plus the host's row count over earlier
-partitions. The per-host delay contract stays exact while no single
-partition holds a hot host's whole batch.
+Skew: gepris.dfg.de dominates the corpus (~70-100% of urls), so no
+rank is a window partitioned by host alone, or by nothing. The per-host
+sequence and the visit order are both one range-partitioned rank
+(`_range_rank`): a hot host spans many partitions in order, and a row's
+rank is its rank within its partition plus its group's row count over
+earlier partitions. The per-host delay contract stays exact while no
+single partition holds a hot host's whole batch.
 
 Robots: a broadcast robots-rules table (host, disallow prefixes,
 crawl_delay_ms). Disallowed urls are dropped before scheduling, and a
@@ -134,6 +134,51 @@ def apply_robots(candidates: DataFrame, robots: DataFrame, url_col: str = "url")
     )
 
 
+def _range_rank(
+    df: DataFrame, groups: list[str], order: list, rank_col: str, num_partitions, cache_registry
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """Adds `rank_col`, each row's 0-based rank by `order` within its
+    `groups` (one group when empty); returns the rows and {group key:
+    row count}.
+
+    No window partitioned by the groups alone, which would put a hot
+    group in ONE partition: the rows are range-partitioned on (groups,
+    order), and a rank is the row's rank within (group, partition) plus
+    the group's count over earlier partitions. The (group, partition)
+    counts are collected once; only a group that crosses a partition
+    boundary has a nonzero offset, so the offsets are a CASE over at
+    most `num_partitions - 1` pairs, however many groups there are.
+
+    `num_partitions` bounds the range partitioning (an explicit count
+    disables AQE coalescing, so pass the caller's batch bound). The
+    persist is correctness-critical (counts and ranks must see ONE
+    partition layout); `cache_registry` receives it for unpersisting,
+    or it stays cached for the session.
+    """
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    ranged = (
+        df.repartitionByRange(n, *[F.col(g).asc() for g in groups], *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    if cache_registry is not None:
+        cache_registry.append(ranged)
+    totals: dict[tuple, int] = {}
+    offset = F.lit(0)
+    for row in sorted(ranged.groupBy(*groups, "_pid").count().collect(), key=lambda r: r["_pid"]):
+        key = tuple(row[g] for g in groups)
+        before = totals.get(key, 0)
+        if before:
+            hit = F.col("_pid") == row["_pid"]
+            for g, value in zip(groups, key):
+                hit &= F.col(g).eqNullSafe(value)
+            offset = F.when(hit, before).otherwise(offset)
+        totals[key] = before + row["count"]
+    win = Window.partitionBy(*groups, "_pid").orderBy(*order)
+    rank = F.row_number().over(win).cast("long") - 1 + offset.cast("long")
+    return ranged.withColumn(rank_col, rank).drop("_pid"), totals
+
+
 def assign_schedule(
     batch: DataFrame,
     num_partitions: int | None = None,
@@ -148,53 +193,15 @@ def assign_schedule(
 
     Output adds: host_seq (0-based per-host position), scheduled_ms.
 
-    Scale note: a plain `row_number() OVER (PARTITION BY host)` puts a
-    hot host's entire batch in ONE shuffle partition (gepris.dfg.de is
-    70-100% of the corpus). Instead the batch is range-partitioned on
-    (host, priority key) — a parallel global sort in which a hot host
-    spans many partitions in priority order — then
-    host_seq = rank within (host, partition) + the host's cumulative
-    row count over earlier partitions (a tiny (host, pid) count table,
-    broadcast back). Identical semantics, no single-partition sort.
-
-    `num_partitions` bounds the range partitioning (pass the caller's
-    known batch bound — an explicit repartition count disables AQE
-    coalescing, so an unsized tiny batch pays full-parallelism task
-    launch). The internal persist is correctness-critical (offsets and
-    ranks must see ONE partition layout); pass `cache_registry` to
-    receive it for unpersisting after the final consuming action —
-    without it the block stays cached for the session.
+    Scale note: host_seq is a `_range_rank`, never `row_number() OVER
+    (PARTITION BY host)`, so a hot host spans partitions. The (host,
+    partition) counts are collected when this is called.
     """
     order = [
-        F.col("priority_type").asc_nulls_first(),
-        F.col("recency_ts").asc_nulls_first(),
-        F.col("url").asc(),
+        F.col("priority_type").asc_nulls_first(), F.col("recency_ts").asc_nulls_first(), "url"
     ]
-    spark = batch.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = (
-        batch.repartitionByRange(n, F.col("host").asc(), *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    if cache_registry is not None:
-        cache_registry.append(ranged)
-    counts = ranged.groupBy("host", "_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    cum = Window.partitionBy("host").orderBy("_pid")
-    offsets = counts.withColumn(
-        "_off", (F.sum("_cnt").over(cum) - F.col("_cnt")).cast("long")
-    ).select("host", "_pid", "_off")
-    win = Window.partitionBy("host", "_pid").orderBy(*order)
-    scheduled = (
-        ranged.join(F.broadcast(offsets), ["host", "_pid"])
-        .withColumn(
-            "host_seq",
-            F.row_number().over(win).cast("long") - 1 + F.col("_off"),
-        )
-        .drop("_pid", "_off")
-        .withColumn("scheduled_ms", F.col("host_seq") * F.col("delay_ms"))
-    )
-    return scheduled
+    ranked, _ = _range_rank(batch, ["host"], order, "host_seq", num_partitions, cache_registry)
+    return ranked.withColumn("scheduled_ms", F.col("host_seq") * F.col("delay_ms"))
 
 
 def visit_order_with_count(
@@ -204,52 +211,15 @@ def visit_order_with_count(
 ) -> tuple[DataFrame, int]:
     """The crawl's total visit order: logical send time, then priority,
     then canonical url — the replay contract both engine and oracle
-    compute (SURVEY §7.4 risk 1).
+    compute (SURVEY §7.4 risk 1). Returns the rows with `seq` and their
+    count.
 
-    Scale: a global `row_number() OVER (ORDER BY ...)` window moves the
-    whole batch to ONE partition — fatal at 10^10-URL scale. Instead:
-    range-partition on the sort key (parallel global sort), count rows
-    per partition (tiny driver-side array), and assign
-    seq = partition_offset + rank-within-partition with a window
-    partitioned by partition id. The sort key ends in the unique
-    canonical url, so the total order is strict and the resulting seq
-    is independent of where the range boundaries land.
+    Scale: seq is a `_range_rank` over one group, never a global
+    `row_number() OVER (ORDER BY ...)`, which moves the whole batch to
+    ONE partition. The key ends in the unique url, so seq does not
+    depend on where the range boundaries land. The count comes from
+    the same offsets pass, so callers pay no second count job.
     """
-    keys = [
-        F.col("scheduled_ms").asc(),
-        F.col("priority_type").asc_nulls_last(),
-        F.col("url").asc(),
-    ]
-    spark = scheduled.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = (
-        scheduled.repartitionByRange(n, *keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    if cache_registry is not None:
-        cache_registry.append(ranged)
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if offsets:
-        offset_expr = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in kv]
-        )[F.col("_pid")]
-    else:
-        offset_expr = F.lit(0)
-    win = Window.partitionBy("_pid").orderBy(*keys)
-    out = ranged.withColumn(
-        "seq",
-        (F.row_number().over(win).cast("long") - 1 + F.coalesce(offset_expr, F.lit(0)).cast("long")),
-    ).drop("_pid")
-    # total row count falls out of the offsets pass — callers need it
-    # for the ledger and should not pay a second count job
-    return out, acc
-
+    keys = ["scheduled_ms", F.col("priority_type").asc_nulls_last(), "url"]
+    ordered, totals = _range_rank(scheduled, [], keys, "seq", num_partitions, cache_registry)
+    return ordered, totals.get((), 0)

@@ -300,18 +300,18 @@ class BloomUrlSeen:
     ) -> DataFrame:
         """Return candidates whose url is NOT in the seen set.
 
-        Bloom fast path: misses pass straight through (no join); only
-        bloom hits (a small, false-positive-bounded subset) are checked
-        exactly via left-anti join against the truth table. An empty
-        bloom (fresh crawl, batch 0) means nothing can be seen — the
-        probe shuffle and the anti-join are skipped entirely.
+        Each candidate is probed once. A bloom miss is definitely new;
+        only a bloom hit (a small, false-positive-bounded subset) is
+        checked exactly, in one left-anti join against the truth table
+        keyed on the url for hits and on NULL for misses, which matches
+        nothing. An empty bloom (fresh crawl, batch 0) means nothing can
+        be seen: the probe shuffle and the anti-join are skipped.
         """
         if self.is_empty():
             return candidates
         probed = self.with_maybe_seen(candidates, url_col, num_partitions=num_partitions)
-        definite_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-        needs_check = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = needs_check.join(
-            seen_urls.select(F.col(url_col)).distinct(), url_col, "left_anti"
-        )
-        return definite_new.unionByName(confirmed_new)
+        # a shuffled join puts every NULL key (every miss) in one
+        # partition: at most the batch's candidates
+        keyed = probed.withColumn("_hit", F.when(F.col("maybe_seen"), F.col(url_col)))
+        seen = seen_urls.select(F.col(url_col).alias("_hit"))
+        return keyed.join(seen, "_hit", "left_anti").drop("_hit", "maybe_seen")

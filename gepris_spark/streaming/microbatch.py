@@ -264,34 +264,28 @@ class CrawlEngine:
                 F.greatest(F.coalesce(F.col("_state_delay"), F.col("delay_ms")), F.col("delay_ms")),
             )
         )
-        scheduled = politeness.assign_schedule(
-            joined, num_partitions=n_batch_parts, cache_registry=batch_caches
-        )
-        # logical send time continues from the host's next_ms with this
-        # batch's delay as the spacing (a host row without next_ms was
-        # written by the fixed-delay schedule: next_seq * delay_ms)
-        base_seq = F.coalesce(F.col("_base_seq"), F.lit(0))
-        scheduled = scheduled.withColumn("host_seq", F.col("host_seq") + base_seq).withColumn(
-            "scheduled_ms",
-            (
-                F.coalesce(F.col("_base_ms"), base_seq * F.col("delay_ms"))
-                + F.col("scheduled_ms")
-            ).cast("long"),
-        )
-
         first_seq = max((r["first_seq"] + r["n_visited"] for r in prior.values()), default=0)
-        # one range partition for a small batch skips the range-sampling
-        # job entirely — the same seq contract, minus two fixed jobs
-        ordered, n_visited = timed(
-            "schedule_order",
-            lambda: (lambda df, n: (df.persist(), n))(
-                *politeness.visit_order_with_count(
-                    scheduled,
-                    num_partitions=n_batch_parts,
-                    cache_registry=batch_caches,
-                )
-            ),
-        )
+
+        def schedule_and_order():
+            scheduled = politeness.assign_schedule(
+                joined, num_partitions=n_batch_parts, cache_registry=batch_caches
+            )
+            # logical send time continues from the host's next_ms with
+            # this batch's delay as the spacing (a host row without
+            # next_ms was written by the fixed-delay schedule:
+            # next_seq * delay_ms)
+            base_seq = F.coalesce(F.col("_base_seq"), F.lit(0))
+            base_ms = F.coalesce(F.col("_base_ms"), base_seq * F.col("delay_ms"))
+            scheduled = scheduled.withColumn("host_seq", F.col("host_seq") + base_seq).withColumn(
+                "scheduled_ms", (base_ms + F.col("scheduled_ms")).cast("long")
+            )
+            return politeness.visit_order_with_count(
+                scheduled, num_partitions=n_batch_parts, cache_registry=batch_caches
+            )
+
+        # the span holds both rank passes and their count collects; a
+        # small batch's one range partition skips range sampling
+        ordered, n_visited = timed("schedule_order", schedule_and_order)
 
         # ---- commit sequence (each step idempotent for resume) ----
         visits = ordered.select(
@@ -363,7 +357,6 @@ class CrawlEngine:
                 f.result()
         urlseen_health = futures[1].result()
         host_state_version = futures[2].result()
-        ordered.unpersist()
         candidates.unpersist()
         fresh.unpersist()
         for df in batch_caches:

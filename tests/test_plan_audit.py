@@ -202,8 +202,8 @@ def test_shuffle_shards_window_is_per_shard_not_global(spark):
 
 def test_pack_sequences_global_cumsum_is_partition_offset_pattern(spark):
     """Sequence packing's global token cumsum must use the range-
-    partition + driver-offsets pattern (politeness.visit_order_with_count's), not
-    a global single-partition window."""
+    partition + driver-offsets pattern (politeness._range_rank's, which ranks
+    the crawl's visit order), not a global single-partition window."""
     from gepris_spark.plans.datapipe import q_pack_sequences
 
     plan = _plan(q_pack_sequences(spark, SF))
@@ -744,3 +744,24 @@ def test_hybrid_rrf_ann_legs_broadcast(spark):
     assert plan.count("BroadcastHashJoin") >= 2
     assert "hashpartitioning(query_id" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_filter_new_probes_once(spark, tmp_path):
+    """The URL-seen filter probes each candidate once: bloom hits and
+    misses share one anti-join, so the executed plan holds one
+    MapInPandas probe, not one per branch."""
+    from gepris_spark.operators.urlseen import BloomUrlSeen
+
+    def urls(lo, hi):
+        return spark.range(lo, hi).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
+
+    bloom = BloomUrlSeen(str(tmp_path / "bloom"), n_buckets=4)
+    bloom.add_urls(urls(0, 300))
+    fresh = bloom.filter_new(urls(200, 500), urls(0, 300))
+    assert sorted(r["url"] for r in fresh.collect()) == sorted(
+        f"https://h/x{i}" for i in range(300, 500)
+    )
+    plan = fresh._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert final.count("MapInPandas") == 1

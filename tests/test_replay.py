@@ -370,3 +370,60 @@ def test_compaction_preserves_visit_log_exactly(spark, tmp_path, seeds_pdf):
     b = _engine_visits(compacted)
     assert a == b
     _assert_match(compacted, replay(_seed_rows(seeds_pdf), batch_size=25))
+
+
+def test_edge_batches_commit_empty(spark, tmp_path, seeds_pdf):
+    """An empty batch, a batch of only non-GEPRIS urls and a batch of
+    only already-visited urls, run between normal batches, each commit
+    a ledger row with no visits and the oracle's invalid and dup counts,
+    and the whole visit log still equals the oracle's."""
+    from gepris_spark.operators.politeness import empty_robots
+
+    size = 25
+    rows = _seed_rows(seeds_pdf)
+    first, last = rows[:size], rows[size : 2 * size]
+    visited = [v["url"] for v in replay(first).visits]
+    invalid = [
+        {"url": f"https://example.org/about/{i}", "priority_type": 1, "recency_ts": None}
+        for i in range(size)
+    ]
+    again = [
+        {"url": visited[i % len(visited)], "priority_type": 0, "recency_ts": None}
+        for i in range(size)
+    ]
+    # the oracle cannot hold an empty batch: engine batch 1 is left out
+    # of its list, and engine batches 2-4 are its batches 1-3
+    oracle_rows = first + invalid + again + last
+    oracle_batch = {0: 0, 2: 1, 3: 2, 4: 3}
+
+    def oracle_counts(n_batches):
+        res = replay(oracle_rows[: n_batches * size], batch_size=size)
+        return res.invalid, res.dup_arrivals
+
+    schema = "url string, priority_type long, recency_ts timestamp"
+    batches = [first, [], invalid, again, last]
+    engine = CrawlEngine(spark, str(tmp_path / "edge"), EngineConfig(batch_size=size))
+    ledger = []
+    for batch_id, batch in enumerate(batches):
+        df = spark.createDataFrame(
+            [(r["url"], r["priority_type"], r["recency_ts"]) for r in batch], schema
+        )
+        ledger.append(engine.run_batch(batch_id, df, empty_robots(spark)))
+    for row in ledger[1:4]:
+        assert row["n_visited"] == 0
+    for batch_id, row in enumerate(ledger):
+        k = oracle_batch.get(batch_id)
+        if k is None:
+            want = (0, 0)
+        else:
+            after, before = oracle_counts(k + 1), oracle_counts(k)
+            want = (after[0] - before[0], after[1] - before[1])
+        assert (row["n_invalid"], row["n_dup_or_seen"]) == want, batch_id
+
+    oracle = replay(oracle_rows, batch_size=size)
+    to_engine = {k: b for b, k in oracle_batch.items()}
+    want = [
+        (v["seq"], v["url"], v["scheduled_ms"], to_engine[v["batch_id"]]) for v in oracle.visits
+    ]
+    assert _engine_visits(engine) == want
+    assert {r["url"] for r in engine.url_seen().collect()} == oracle.url_seen

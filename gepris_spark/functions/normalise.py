@@ -6,11 +6,13 @@ The reference normalizes each scraped item in Python dict-land
 trees.py:16-117). Here the same semantics are DataFrame-shaped:
 
 * N1 `normalise_attributes` — map-key recode of the raw German
-  attribute keys via a broadcast lookup, unknown keys quarantined
-  (the reference raises UnexpectedFieldError; a distributed engine
-  routes the row to a quarantine status instead and keeps going),
-  split-processing for grammar-valued keys (foerderung_zeitraum ->
-  begin/end years, project_attributes.py:301-316), key drops.
+  attribute keys via a literal lookup keyed by each row's own
+  `context`, so one pass serves projekt, person and institution rows;
+  unknown keys quarantined (the reference raises UnexpectedFieldError;
+  a distributed engine routes the row to a quarantine status instead
+  and keeps going), split-processing for grammar-valued keys
+  (foerderung_zeitraum -> begin/end years on projekt rows,
+  project_attributes.py:301-316), key drops.
 * N2 `gender_person_sets` — union of person-id arrays whose *German*
   key implies a gender (project_attributes.py:371-404; full 76-entry
   gender map at :225-297).
@@ -113,33 +115,36 @@ INSTITUTION_REFERENCE_KEYS = [
 ]
 
 
-def _key_map_expr(context: str) -> Column:
-    """Literal map German key -> normalized key (broadcast to every
-    task as part of the plan; no shuffle, no Python)."""
+def _key_map_expr() -> Column:
+    """Literal map context -> (German key -> normalized key), looked up
+    with the row's own `context` (part of the plan; no shuffle, no
+    Python)."""
     pairs: list[Column] = []
-    for raw, (norm, _g) in KEY_MAPS[context].items():
-        pairs.extend([F.lit(raw), F.lit(norm)])
+    for ctx, key_map in KEY_MAPS.items():
+        keys = [F.lit(x) for raw, (norm, _g) in key_map.items() for x in (raw, norm)]
+        pairs.extend([F.lit(ctx), F.create_map(*keys)])
     return F.create_map(*pairs)
 
 
 # ------------------------------------------------------------------ N1
-def normalise_attributes(
-    parsed: DataFrame, context: str, attrs_col: str = "attributes"
-) -> DataFrame:
+def normalise_attributes(parsed: DataFrame, attrs_col: str = "attributes") -> DataFrame:
     """N1 (normalisation.py:4-17): recode raw attribute-map keys to the
-    canonical names, split-process grammar keys, drop noise keys.
+    canonical names of the row's `context`, split-process grammar keys,
+    drop noise keys.
 
     Adds:
       norm_attributes  map<string,array<string>> with canonical keys
       unknown_keys     array<string> (reference raises; engine
                        quarantines — rows with unknown keys keep their
                        data and carry the evidence)
-      foerderung_beginn / foerderung_ende (projekt only, F12)
+      foerderung_beginn / foerderung_ende (F12; NULL unless projekt)
 
     Pure built-ins: map_entries -> transform over the entry array with
     a literal lookup map -> map_from_entries. No explode, no shuffle.
+    The projekt drop set applies to every row: only projekt keys recode
+    to its names.
     """
-    km = _key_map_expr(context)
+    km = _key_map_expr()[F.col("context")]
     entries = F.map_entries(F.coalesce(F.col(attrs_col), F.map_from_arrays(
         F.array().cast("array<string>"), F.array().cast("array<array<string>>"))))
     recoded = F.transform(
@@ -155,23 +160,19 @@ def normalise_attributes(
         "unknown_keys",
         F.transform(F.filter(F.col("_rec"), lambda e: e["unknown"]), lambda e: e["key"]),
     )
-    keep = F.filter(F.col("_rec"), lambda e: ~e["unknown"])
-    if context == "projekt":
-        # NOTE: a 2-arg lambda in F.filter means (element, index) — keep
-        # the drop-set check single-argument
-        drop = sorted(PROJEKT_KEYS_TO_REMOVE | PROJEKT_KEYS_TO_PROCESS)
-        keep = F.filter(keep, lambda e: ~e["key"].isin(drop))
+    # NOTE: a 2-arg lambda in F.filter means (element, index) — keep the
+    # drop-set check single-argument
+    drop = sorted(PROJEKT_KEYS_TO_REMOVE | PROJEKT_KEYS_TO_PROCESS)
+    keep = F.filter(F.col("_rec"), lambda e: ~e["unknown"] & ~e["key"].isin(drop))
     df = df.withColumn(
         "norm_attributes",
         F.map_from_entries(F.transform(keep, lambda e: F.struct(e["key"], e["value"]))),
     ).drop("_rec")
-    if context == "projekt":
-        zeitraum = F.element_at(F.element_at(F.col(attrs_col), "Förderung"), 1)
-        parsed_zeitraum = C.parse_foerderung_zeitraum(zeitraum)
+    zeitraum = F.element_at(F.element_at(F.col(attrs_col), "Förderung"), 1)
+    years = C.parse_foerderung_zeitraum(zeitraum)
+    for name in ("foerderung_beginn", "foerderung_ende"):
         df = df.withColumn(
-            "foerderung_beginn", parsed_zeitraum.getField("foerderung_beginn").cast("int")
-        ).withColumn(
-            "foerderung_ende", parsed_zeitraum.getField("foerderung_ende").cast("int")
+            name, F.when(F.col("context") == "projekt", years.getField(name).cast("int"))
         )
     return df
 

@@ -97,52 +97,37 @@ def normalised_success_rows(terminal_success: DataFrame) -> DataFrame:
     read that normalized shape back. Round 1 stored raw attributes,
     which silently starved those views on the engine's own output.
 
-    One branch per context (the key maps and tree dispatch are
-    per-context), unioned back; the input is the persisted de parse so
-    the 3-way branch costs no recompute. `ref_ids` carries the L7
-    extraction for every whitelisted relation key as map<key, ids>."""
+    One pass over all three contexts: the key recode and the tree
+    dispatch look up each row's own `context`, and the gender sets are
+    NULL outside projekt rows. `ref_ids` carries the L7 extraction for
+    every whitelisted relation key as map<key, ids>."""
     from gepris_spark.functions import normalise as N
 
-    parts = []
-    for ctx in ("projekt", "person", "institution"):
-        df = terminal_success.where(F.col("context") == ctx)
-        df = N.normalise_attributes(df, ctx)
-        if ctx == "projekt":
-            df = N.gender_person_sets(df)
-        else:
-            df = (
-                df.withColumn("male_personen", F.lit(None).cast("array<bigint>"))
-                .withColumn("female_personen", F.lit(None).cast("array<bigint>"))
-                .withColumn("foerderung_beginn", F.lit(None).cast("int"))
-                .withColumn("foerderung_ende", F.lit(None).cast("int"))
+    is_projekt = F.col("context") == "projekt"
+    df = N.gender_person_sets(
+        N.normalise_attributes(terminal_success.where(F.col("context").isin(list(N.KEY_MAPS))))
+    )
+    df = N.normalise_trees(
+        df.withColumn("male_personen", F.when(is_projekt, F.col("male_personen")))
+        .withColumn("female_personen", F.when(is_projekt, F.col("female_personen")))
+    )
+    entries = F.map_entries("norm_attributes")
+    p_entries = F.filter(entries, lambda e: e["key"].isin(N.PERSON_REFERENCE_KEYS))
+    i_entries = F.filter(entries, lambda e: e["key"].isin(N.INSTITUTION_REFERENCE_KEYS))
+    ref_map = F.map_concat(
+        F.map_from_entries(
+            F.transform(
+                p_entries, lambda e: F.struct(e["key"], N.reference_ids(e["value"], "person"))
             )
-        df = N.normalise_trees(df)
-        entries = F.map_entries("norm_attributes")
-        p_entries = F.filter(entries, lambda e: e["key"].isin(N.PERSON_REFERENCE_KEYS))
-        i_entries = F.filter(
-            entries, lambda e: e["key"].isin(N.INSTITUTION_REFERENCE_KEYS)
-        )
-        ref_map = F.map_concat(
-            F.map_from_entries(
-                F.transform(
-                    p_entries,
-                    lambda e: F.struct(e["key"], N.reference_ids(e["value"], "person")),
-                )
-            ),
-            F.map_from_entries(
-                F.transform(
-                    i_entries,
-                    lambda e: F.struct(
-                        e["key"], N.reference_ids(e["value"], "institution")
-                    ),
-                )
-            ),
-        )
-        parts.append(df.withColumn("ref_ids", ref_map).select(*_NORM_COLS))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        ),
+        F.map_from_entries(
+            F.transform(
+                i_entries,
+                lambda e: F.struct(e["key"], N.reference_ids(e["value"], "institution")),
+            )
+        ),
+    )
+    return df.withColumn("ref_ids", ref_map).select(*_NORM_COLS)
 
 
 _ASSEMBLED_SCHEMA = (

@@ -7,6 +7,10 @@ The reference does this in SQL functions over JSONB
   parse_stage -> normalise_attributes (N1) -> gender_person_sets (N2)
               -> normalise_trees (N3-N6) -> these builders
 
+N1 and N3-N6 read each row's own `context`, so the same calls serve
+one context's rows here and all three in the details crawl
+(operators/chaining.normalised_success_rows).
+
 All builders are pure built-ins (map lookups, explode, joins,
 broadcast); the per-entity tables partition naturally by id for the
 downstream frontier MERGE.
@@ -25,7 +29,7 @@ from gepris_spark.functions import normalise as N
 def normalised_items(parsed: DataFrame, context: str) -> DataFrame:
     """Full normalization chain for one context's parsed success rows."""
     df = parsed.where((F.col("context") == context) & (F.col("status") == "success"))
-    df = N.normalise_attributes(df, context)
+    df = N.normalise_attributes(df)
     if context == "projekt":
         df = N.gender_person_sets(df)
     return N.normalise_trees(df)

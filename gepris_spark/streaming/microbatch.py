@@ -38,6 +38,7 @@ mirroring the reference's run-ledger semantics (SURVEY §7.4 risk 5).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -49,13 +50,13 @@ from pyspark.sql import types as T
 from gepris_spark import schemas
 from gepris_spark.functions import canonical as C
 from gepris_spark.operators import politeness
+from gepris_spark.operators.urlseen import BloomUrlSeen
+from gepris_spark.store.table import SnapshotStore
 
 # target rows per range partition of the per-batch global visit order —
 # enough to amortize task launch, small enough that a partition's sort
 # fits comfortably in executor memory at any batch size
 _ORDER_ROWS_PER_PARTITION = 8192
-from gepris_spark.operators.urlseen import BloomUrlSeen
-from gepris_spark.store.table import SnapshotStore
 
 # snapshots of the mutable state tables (frontier, host_state) kept
 # after each committed batch: the current one and its predecessor. Each
@@ -90,7 +91,6 @@ class EngineConfig:
     # urlseen.FP_BOUND, so it never saturates into "everything pays the
     # exact anti-join"; each ledger row reports its size and fill
     bloom_buckets: int = 16
-    bloom_hashes: int = 5
     # detailed per-batch accounting (input/dup/invalid counts) costs 3
     # extra count jobs per batch; throughput-critical deployments can
     # turn it off — visit counts and stage timings are always kept
@@ -109,9 +109,7 @@ class CrawlEngine:
         self.root = root
         self.config = config or EngineConfig()
         self.store = SnapshotStore(root)
-        self.bloom = BloomUrlSeen(
-            root, n_buckets=self.config.bloom_buckets, k=self.config.bloom_hashes
-        )
+        self.bloom = BloomUrlSeen(root, n_buckets=self.config.bloom_buckets)
 
     # ------------------------------------------------------------ state
     def _ledger_path(self) -> str:
@@ -403,11 +401,12 @@ class CrawlEngine:
         max_retries: int = 2,
         fetch=None,
     ) -> dict:
-        """§3.1 lifecycle, steps 4-7: fetch+parse the scheduled de batch,
-        loop A5 retries until exhausted (each retry refetches, mirroring
-        refresh_cache=True), chain the en stage (A6), insert bilingual
-        items + terminal non-success rows into history (K3), mark the
-        ids checked in the frontier (K2).
+        """§3.1 lifecycle, steps 4-7: run the de -> en chain (A6) over
+        the scheduled batch, then again over its retry rows until the A5
+        budget is spent (each retry refetches, mirroring
+        refresh_cache=True), insert bilingual items + terminal
+        non-success rows into history (K3), mark the ids checked in the
+        frontier (K2).
 
         `pages` is the page source (corpus-backed fetch); `runs` the run
         ledger for the history latest-view join. `fetch` overrides the
@@ -428,44 +427,39 @@ class CrawlEngine:
         # fetch-join ceiling; a >=50M-row design-point batch must take
         # the shuffle-join path (fetchparse.FETCH_BROADCAST_MAX_ROWS)
         bcast = self.config.batch_size <= fetchparse.FETCH_BROADCAST_MAX_ROWS
-        result = chaining.details_chain(
-            scheduled,
-            pages,
-            fetchparse.parse_stage,
-            max_retries=max_retries,
-            broadcast_fetch=bcast,
-            fetch=fetch,
-        )
-        items, nonsuccess = result["items"], result["terminal_nonsuccess"]
-        cached = list(result.get("_cached", []))
-        # A5: re-fetch retries until the attempt budget is gone; the
-        # corpus fetch is deterministic, so retries that keep failing
+        # A5: the first attempt and every re-fetch run the same chain
+        # until the attempt budget is gone or nothing is left to retry;
+        # the corpus fetch is deterministic, so retries that keep failing
         # drain to terminal errors via route_statuses' exhaustion rule.
-        # Each iteration's retry set is localCheckpoint'd (eager) so the
+        # Each attempt's retry set is localCheckpoint'd (eager) so the
         # isEmpty probe and the next chain never re-execute the full
-        # upstream fetch+parse lineage; items/nonsuccess unions are
-        # likewise checkpointed per iteration, as downstream runs >1
-        # action over them (history insert, frontier mark, counts).
-        retry = result["retry"].localCheckpoint(eager=True)
-        attempt = 0
-        while attempt < max_retries:
-            if retry.isEmpty():
-                break
-            again = chaining.details_chain(
-                retry.select("url", "context", "item_id", F.lit("de").alias("language"), "attempt"),
+        # upstream fetch+parse lineage.
+        item_parts, nonsuccess_parts, cached = [], [], []
+        batch = scheduled
+        for attempt in range(max_retries + 1):
+            result = chaining.details_chain(
+                batch,
                 pages,
                 fetchparse.parse_stage,
                 max_retries=max_retries,
                 broadcast_fetch=bcast,
                 fetch=fetch,
             )
-            items = items.unionByName(again["items"])
-            nonsuccess = nonsuccess.unionByName(again["terminal_nonsuccess"])
-            retry = again["retry"].localCheckpoint(eager=True)
-            cached.extend(again.get("_cached", []))
-            attempt += 1
-        items = items.localCheckpoint(eager=True)
-        nonsuccess = nonsuccess.localCheckpoint(eager=True)
+            item_parts.append(result["items"])
+            nonsuccess_parts.append(result["terminal_nonsuccess"])
+            cached.extend(result["_cached"])
+            retry = result["retry"].localCheckpoint(eager=True)
+            if attempt == max_retries or retry.isEmpty():
+                break
+            batch = retry.select(
+                "url", "context", "item_id", F.lit("de").alias("language"), "attempt"
+            )
+        # downstream runs >1 action over items and non-success rows
+        # (history insert, frontier mark, counts): checkpoint each once
+        items = functools.reduce(DataFrame.unionByName, item_parts).localCheckpoint(eager=True)
+        nonsuccess = functools.reduce(DataFrame.unionByName, nonsuccess_parts).localCheckpoint(
+            eager=True
+        )
         # the checkpoints above materialized everything downstream of
         # the chain's stage-boundary persists — release them now so a
         # long-running engine doesn't accumulate cached batches
@@ -492,26 +486,19 @@ class CrawlEngine:
             run_id,
         )
 
+        # one small aggregate gives the batch's counts and the contexts
+        # the close-of-run passes need: items are always `success` and
+        # non-success rows never are
+        counts = batch_rows.groupBy("context", "status").count().collect()
+        n_items = sum(r["count"] for r in counts if r["status"] == "success")
+        batch_contexts = {r["context"] for r in counts if r["context"]}
+        moved_contexts = {r["context"] for r in counts if r["context"] and r["status"] == "moved"}
+
         # close-of-run database operations (pipelines.py:34-46):
         # projekt runs discover newly-referenced persons (Q4); person/
         # institution runs invalidate dependents of moved ids (Q5/Q6).
-        # The context/moved probes are O(contexts) driver lookups, so a
-        # clean batch pays nothing beyond two tiny aggregations.
         from gepris_spark.operators import views
 
-        batch_contexts = {
-            r["context"]
-            for r in batch_rows.select("context").distinct().collect()
-            if r["context"]
-        }
-        moved_contexts = {
-            r["context"]
-            for r in nonsuccess.where(F.col("status") == "moved")
-            .select("context")
-            .distinct()
-            .collect()
-            if r["context"]
-        }
         hist_df = history.read()
         if "projekt" in batch_contexts:
             run_refs = views.person_projekt_references(
@@ -532,8 +519,8 @@ class CrawlEngine:
         self.store.expire_snapshots("frontier", keep_last=_SNAPSHOT_RETENTION)
         return {
             "run_id": run_id,
-            "n_items": items.count(),
-            "n_nonsuccess": nonsuccess.count(),
+            "n_items": n_items,
+            "n_nonsuccess": sum(r["count"] for r in counts) - n_items,
             "n_unresolved_retries": retry.count(),
         }
 

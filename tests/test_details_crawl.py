@@ -42,6 +42,17 @@ def test_counts_cover_every_scheduled_id(spark, corpus_dir, crawl_out):
     assert stats["n_unresolved_retries"] == 0
 
 
+def test_counts_split_by_status(spark, crawl_out):
+    """n_items counts the success rows of the batch and n_nonsuccess
+    every other row, as history records them."""
+    engine, runs, stats, scheduled = crawl_out
+    history = History(spark, engine.store).read()
+    n_success = history.where(F.col("status") == "success").count()
+    assert stats["n_items"] == n_success
+    assert stats["n_nonsuccess"] == history.count() - n_success
+    assert stats["n_nonsuccess"] > 0
+
+
 def test_history_rows_and_latest_view(spark, crawl_out):
     engine, runs, stats, scheduled = crawl_out
     history = History(spark, engine.store).read()

@@ -93,8 +93,7 @@ def parsed_projekt(spark, corpus_dir):
 
 def test_normalise_attributes_recode_and_split(spark, parsed_projekt):
     norm = N.normalise_attributes(
-        parsed_projekt.where((F.col("context") == "projekt") & (F.col("status") == "success")),
-        "projekt",
+        parsed_projekt.where((F.col("context") == "projekt") & (F.col("status") == "success"))
     )
     row = norm.orderBy("url", "language").first()
     keys = set(row["norm_attributes"].keys())
@@ -114,7 +113,7 @@ def test_normalise_attributes_quarantines_unknown_keys(spark):
         [("u", "projekt", 1, "success", {"Antragsteller": ["x"], "Klingon": ["y"]})],
         "url string, context string, item_id long, status string, attributes map<string,array<string>>",
     )
-    norm = N.normalise_attributes(df, "projekt")
+    norm = N.normalise_attributes(df)
     row = norm.first()
     assert row["unknown_keys"] == ["Klingon"]
     assert set(row["norm_attributes"].keys()) == {"antragsteller_personen"}

@@ -765,3 +765,52 @@ def test_filter_new_probes_once(spark, tmp_path):
     final = plan.split("== Initial Plan ==")[0]
     assert "== Final Plan ==" in final
     assert final.count("MapInPandas") == 1
+
+
+def test_normalise_is_one_pass(spark):
+    """Details normalisation runs one plan for projekt, person and
+    institution rows: the key recode reads each row's own context, so
+    the optimized plan holds one tree MapInPandas and no per-context
+    Union."""
+    import json
+
+    from gepris_spark.operators.chaining import normalised_success_rows
+
+    def ref(path):
+        return json.dumps({"value": "x", "path": path})
+
+    # the person row also carries projekt-only raw keys: they stay
+    # unknown there and yield no funding years or gender sets
+    projekt_only = {
+        "Antragsteller": [ref("/gepris/person/11")],
+        "Förderung": ["Förderung von 2001 bis 2004"],
+    }
+    rows = [
+        ("https://h/gepris/projekt/1", "projekt", 1, projekt_only),
+        ("https://h/gepris/person/2", "person", 2, {"Adresse": ["Str 1"], **projekt_only}),
+        ("https://h/gepris/institution/3", "institution", 3, {"Telefon": ["123"]}),
+    ]
+    parsed = spark.createDataFrame(
+        [(u, c, i, "success", f"n{i}", None, None, None, None, a, None) for u, c, i, a in rows],
+        "url string, context string, item_id long, status string, name string, "
+        "beschreibung string, caption string, image_id string, phash long, "
+        "attributes map<string,array<string>>, trees_json string",
+    )
+    norm = normalised_success_rows(parsed)
+    plan = norm._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Union" not in plan
+
+    got = {r["context"]: r for r in norm.collect()}
+    assert set(got) == {"projekt", "person", "institution"}
+    p = got["projekt"]
+    assert set(p["norm_attributes"]) == {"antragsteller_personen"}
+    assert (p["foerderung_beginn"], p["foerderung_ende"]) == (2001, 2004)
+    assert p["male_personen"] == [11] and p["female_personen"] == []
+    assert set(got["person"]["norm_attributes"]) == {"adressen"}
+    assert sorted(got["person"]["unknown_keys"]) == ["Antragsteller", "Förderung"]
+    assert set(got["institution"]["norm_attributes"]) == {"telefon"}
+    for ctx in ("person", "institution"):
+        r = got[ctx]
+        assert r["foerderung_beginn"] is None and r["foerderung_ende"] is None
+        assert r["male_personen"] is None and r["female_personen"] is None

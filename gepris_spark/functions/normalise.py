@@ -127,7 +127,7 @@ def _key_map_expr() -> Column:
 
 
 # ------------------------------------------------------------------ N1
-def normalise_attributes(parsed: DataFrame, attrs_col: str = "attributes") -> DataFrame:
+def normalise_attributes(parsed: DataFrame) -> DataFrame:
     """N1 (normalisation.py:4-17): recode raw attribute-map keys to the
     canonical names of the row's `context`, split-process grammar keys,
     drop noise keys.
@@ -145,7 +145,7 @@ def normalise_attributes(parsed: DataFrame, attrs_col: str = "attributes") -> Da
     to its names.
     """
     km = _key_map_expr()[F.col("context")]
-    entries = F.map_entries(F.coalesce(F.col(attrs_col), F.map_from_arrays(
+    entries = F.map_entries(F.coalesce(F.col("attributes"), F.map_from_arrays(
         F.array().cast("array<string>"), F.array().cast("array<array<string>>"))))
     recoded = F.transform(
         entries,
@@ -168,7 +168,7 @@ def normalise_attributes(parsed: DataFrame, attrs_col: str = "attributes") -> Da
         "norm_attributes",
         F.map_from_entries(F.transform(keep, lambda e: F.struct(e["key"], e["value"]))),
     ).drop("_rec")
-    zeitraum = F.element_at(F.element_at(F.col(attrs_col), "Förderung"), 1)
+    zeitraum = F.element_at(F.element_at(F.col("attributes"), "Förderung"), 1)
     years = C.parse_foerderung_zeitraum(zeitraum)
     for name in ("foerderung_beginn", "foerderung_ende"):
         df = df.withColumn(
@@ -193,7 +193,7 @@ def reference_ids(values: Column, context: str) -> Column:
 
 
 # ------------------------------------------------------------------ N2
-def gender_person_sets(df: DataFrame, attrs_col: str = "attributes") -> DataFrame:
+def gender_person_sets(df: DataFrame) -> DataFrame:
     """N2 (project_attributes.py:371-404): for each *raw German* key
     whose gender tag is male/female, collect the person ids referenced
     under it; output distinct unions `male_personen`/`female_personen`.
@@ -206,7 +206,7 @@ def gender_person_sets(df: DataFrame, attrs_col: str = "attributes") -> DataFram
     for raw, (norm, g) in PROJEKT_KEY_MAP.items():
         if norm not in PERSON_REFERENCE_KEYS:
             continue
-        vals = F.element_at(F.col(attrs_col), raw)
+        vals = F.element_at(F.col("attributes"), raw)
         ids = F.when(vals.isNotNull(), reference_ids(vals, "person")).otherwise(
             F.array().cast("array<bigint>")
         )
@@ -336,7 +336,7 @@ def normalise_trees_dict(trees: dict, context: str) -> dict:
     return out
 
 
-def normalise_trees(parsed: DataFrame, trees_col: str = "trees_json") -> DataFrame:
+def normalise_trees(parsed: DataFrame) -> DataFrame:
     """N3-N6 over the whole DataFrame: one Arrow-batched mapInPandas
     adding `norm_trees_json` + `tree_error` (fail-loud evidence; the
     reference raises mid-crawl, the engine quarantines the row)."""
@@ -351,7 +351,7 @@ def normalise_trees(parsed: DataFrame, trees_col: str = "trees_json") -> DataFra
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             norm, errs = [], []
-            for trees_json, context in zip(pdf[trees_col], pdf["context"]):
+            for trees_json, context in zip(pdf["trees_json"], pdf["context"]):
                 if trees_json is None or (isinstance(trees_json, float) and pd.isna(trees_json)):
                     norm.append(None)
                     errs.append(None)

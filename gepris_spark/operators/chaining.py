@@ -22,12 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gepris_spark.functions import canonical as C
 
-CHAIN_LANGS = ("de", "en")
-
-
-def continuation_rows(parsed_de: DataFrame, language: str = "en") -> DataFrame:
+def continuation_rows(parsed_de: DataFrame) -> DataFrame:
     """Follow-up frontier rows for the next language stage: only pages
     that parsed successfully in german get an english fetch
     (details.py:59-76 yields the en request from parse_german)."""
@@ -35,11 +31,11 @@ def continuation_rows(parsed_de: DataFrame, language: str = "en") -> DataFrame:
         "url",
         "context",
         "item_id",
-        F.lit(language).alias("language"),
+        F.lit("en").alias("language"),
     )
 
 
-def result_continuation_rows(parsed_en: DataFrame, language: str = "de") -> DataFrame:
+def result_continuation_rows(parsed_en: DataFrame) -> DataFrame:
     """Frontier rows for the projekt result page (A6 stage 3).
 
     The reference follows the result tab found on the ENGLISH details
@@ -67,17 +63,8 @@ def result_continuation_rows(parsed_en: DataFrame, language: str = "de") -> Data
             resolved.alias("url"),
             "context",
             "item_id",
-            F.lit(language).alias("language"),
+            F.lit("de").alias("language"),
         )
-    )
-
-
-def _result_struct_type() -> str:
-    return (
-        "struct<ergebnis_zusammenfassung_de:string,"
-        "ergebnis_zusammenfassung_en:string,"
-        "ergebnis_publikationen:array<array<string>>,"
-        "attributes:struct<ergebnis_erstellungsjahr:int>>"
     )
 
 
@@ -245,10 +232,7 @@ def _assemble_items_stage(joined: DataFrame) -> DataFrame:
 
 
 def assemble_bilingual(
-    parsed_de: DataFrame,
-    parsed_en: DataFrame,
-    result_de: DataFrame | None = None,
-    result_en: DataFrame | None = None,
+    parsed_de: DataFrame, parsed_en: DataFrame, result_de: DataFrame, result_en: DataFrame
 ) -> DataFrame:
     """Final details item: german fields + english name/attributes where
     the english page succeeded (details.py:78-117 merges the en parse
@@ -303,39 +287,32 @@ def assemble_bilingual(
     # (details.py:103-110). Divergence from the reference, documented:
     # a failed result fetch degrades to a partial/absent `result`
     # instead of losing the whole projekt item to the errback.
-    if result_de is not None:
-        rde = result_de.where(F.col("status") == "success").select(
-            "context",
-            F.col("item_id").cast("long").alias("item_id"),
-            F.col("summary").alias("_r_sum_de"),
-            F.col("erstellungsjahr").alias("_r_jahr"),
-            F.col("publications").alias("_r_pubs"),
-        )
-        joined = joined.join(rde, ["context", "item_id"], "left")
-        if result_en is not None:
-            ren = result_en.where(F.col("status") == "success").select(
-                "context",
-                F.col("item_id").cast("long").alias("item_id"),
-                F.col("summary").alias("_r_sum_en"),
-            )
-            joined = joined.join(ren, ["context", "item_id"], "left")
-        else:
-            joined = joined.withColumn("_r_sum_en", F.lit(None).cast("string"))
-        result_col = F.when(
-            F.col("_r_pubs").isNotNull()
-            | F.col("_r_sum_de").isNotNull()
-            | F.col("_r_jahr").isNotNull(),
-            F.struct(
-                F.col("_r_sum_de").alias("ergebnis_zusammenfassung_de"),
-                F.col("_r_sum_en").alias("ergebnis_zusammenfassung_en"),
-                F.col("_r_pubs").alias("ergebnis_publikationen"),
-                F.struct(F.col("_r_jahr").alias("ergebnis_erstellungsjahr")).alias(
-                    "attributes"
-                ),
-            ),
-        )
-    else:
-        result_col = F.lit(None).cast(_result_struct_type())
+    rde = result_de.where(F.col("status") == "success").select(
+        "context",
+        F.col("item_id").cast("long").alias("item_id"),
+        F.col("summary").alias("_r_sum_de"),
+        F.col("erstellungsjahr").alias("_r_jahr"),
+        F.col("publications").alias("_r_pubs"),
+    )
+    ren = result_en.where(F.col("status") == "success").select(
+        "context",
+        F.col("item_id").cast("long").alias("item_id"),
+        F.col("summary").alias("_r_sum_en"),
+    )
+    joined = joined.join(rde, ["context", "item_id"], "left").join(
+        ren, ["context", "item_id"], "left"
+    )
+    result_col = F.when(
+        F.col("_r_pubs").isNotNull()
+        | F.col("_r_sum_de").isNotNull()
+        | F.col("_r_jahr").isNotNull(),
+        F.struct(
+            F.col("_r_sum_de").alias("ergebnis_zusammenfassung_de"),
+            F.col("_r_sum_en").alias("ergebnis_zusammenfassung_en"),
+            F.col("_r_pubs").alias("ergebnis_publikationen"),
+            F.struct(F.col("_r_jahr").alias("ergebnis_erstellungsjahr")).alias("attributes"),
+        ),
+    )
 
     joined = joined.select(
         F.col("item_id").alias("id"),

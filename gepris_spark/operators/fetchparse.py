@@ -190,6 +190,28 @@ def extract_trees(content: Node) -> dict:
 
 _DATA_URI_RE = re.compile(r"^data:image/(\w+);base64,(.*)$", re.S)
 
+_NOT_FOUND = ("Page not found", "Seite nicht gefunden")
+
+
+def _page_status(doc: Node, expected_language: str | None) -> str | None:
+    """The middleware validators every details and result page passes
+    through: "moved" (P10, page exists, middlewares.py:97-103), "error"
+    (P9, structure, :78-85), "retry" (P11, language, :106-114), or None
+    for a page that parses on."""
+    title = doc.find("title")
+    title_text = _clean(" ".join(title.all_text())) if title else ""
+    if title_text in _NOT_FOUND or any(
+        _clean(" ".join(h2.all_text())) in _NOT_FOUND for h2 in doc.find_all("h2")
+    ):
+        return "moved"
+    if doc.find("h2", cls="h2-context-title") is None or doc.find("abbr") is None:
+        return "error"
+    html_node = doc.find("html")
+    page_lang = (html_node.attrs.get("lang") if html_node else None) or ""
+    if expected_language and page_lang and page_lang != expected_language:
+        return "retry"
+    return None
+
 
 def _parse_one(
     url: str,
@@ -222,27 +244,9 @@ def _parse_one(
         "beschreibung": None,
     }
     doc = parse_html(html)
-
-    # P10 — page-exists validator (middlewares.py:97-103)
-    title = doc.find("title")
-    title_text = _clean(" ".join(title.all_text())) if title else ""
-    if title_text in ("Page not found", "Seite nicht gefunden") or any(
-        _clean(" ".join(h2.all_text())) in ("Page not found", "Seite nicht gefunden")
-        for h2 in doc.find_all("h2")
-    ):
-        out["status"] = "moved"
-        return out
-
-    # P9 — structure validator (middlewares.py:78-85)
-    if doc.find("h2", cls="h2-context-title") is None or doc.find("abbr") is None:
-        out["status"] = "error"
-        return out
-
-    # P11 — language validator (middlewares.py:106-114)
-    html_node = doc.find("html")
-    page_lang = (html_node.attrs.get("lang") if html_node else None) or ""
-    if expected_language and page_lang and page_lang != expected_language:
-        out["status"] = "retry"
+    status = _page_status(doc, expected_language)
+    if status is not None:
+        out["status"] = status
         return out
 
     # P5 — name
@@ -656,15 +660,11 @@ def parse_stage(
     fetched: DataFrame,
     ref_pixels_fn: Callable[[str], np.ndarray] | None = None,
     expected_caption_fn: Callable[[str], str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """One mapInPandas over the fetched batch -> PARSED rows.
-
-    `num_partitions` forces a balancing repartition first — use it when
-    the input comes out of an AQE-coalesced shuffle with few fat
-    partitions; when the input is a parquet scan (the broadcast-join
-    fetch path), the 32 MB split size already yields balanced small
-    partitions and a shuffle of the html would only burn I/O."""
+    """One mapInPandas over the fetched batch -> PARSED rows, in the
+    fetched batch's own partitions: a parquet scan (the broadcast-join
+    fetch path) already splits into balanced small partitions, and a
+    shuffle of the html would only burn I/O."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -694,10 +694,7 @@ def parse_stage(
     for opt in ("context", "item_id"):
         if opt in fetched.columns:
             cols.append(opt)
-    out = fetched.select(*cols)
-    if num_partitions:
-        out = out.repartition(num_partitions)
-    return out.mapInPandas(run, schemas.PARSED)
+    return fetched.select(*cols).mapInPandas(run, schemas.PARSED)
 
 
 # ----------------------------------------------------- result-page parse
@@ -738,24 +735,11 @@ def _parse_result_one(
         "unknown_result_keys": [],
     }
     doc = parse_html(html)
-
     # same middleware validators as the details pages: the result fetch
     # goes through details_request too (details.py:100-103)
-    title = doc.find("title")
-    title_text = _clean(" ".join(title.all_text())) if title else ""
-    if title_text in ("Page not found", "Seite nicht gefunden") or any(
-        _clean(" ".join(h2.all_text())) in ("Page not found", "Seite nicht gefunden")
-        for h2 in doc.find_all("h2")
-    ):
-        out["status"] = "moved"
-        return out
-    if doc.find("h2", cls="h2-context-title") is None or doc.find("abbr") is None:
-        out["status"] = "error"
-        return out
-    html_node = doc.find("html")
-    page_lang = (html_node.attrs.get("lang") if html_node else None) or ""
-    if expected_language and page_lang and page_lang != expected_language:
-        out["status"] = "retry"
+    status = _page_status(doc, expected_language)
+    if status is not None:
+        out["status"] = status
         return out
 
     desc = next(

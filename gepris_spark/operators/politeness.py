@@ -74,7 +74,7 @@ def empty_robots(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], ROBOTS_SCHEMA)
 
 
-def parse_robots_txt(host: str, text: str, default_delay_ms: int = DEFAULT_DELAY_MS) -> dict:
+def parse_robots_txt(host: str, text: str) -> dict:
     """Parse one robots.txt body into a robots-rules row (A4:
     ROBOTSTXT_OBEY, settings.py:66). Honors the `User-agent: *` group's
     Disallow prefixes and Crawl-delay (seconds -> ms); other UA groups
@@ -101,7 +101,7 @@ def parse_robots_txt(host: str, text: str, default_delay_ms: int = DEFAULT_DELAY
     return {
         "host": host,
         "disallow_prefixes": disallow,
-        "crawl_delay_ms": crawl_delay_ms if crawl_delay_ms is not None else default_delay_ms,
+        "crawl_delay_ms": crawl_delay_ms if crawl_delay_ms is not None else DEFAULT_DELAY_MS,
     }
 
 
@@ -112,14 +112,14 @@ def robots_table(spark: SparkSession, bodies: dict[str, str]) -> DataFrame:
     return spark.createDataFrame(rows, ROBOTS_SCHEMA) if rows else empty_robots(spark)
 
 
-def apply_robots(candidates: DataFrame, robots: DataFrame, url_col: str = "url") -> DataFrame:
+def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop robots-disallowed urls; attach effective per-host delay.
 
     The robots table is tiny (one row per host) — broadcast join, no
     shuffle on the candidate side.
     """
     joined = candidates.join(F.broadcast(robots), "host", "left")
-    path = F.regexp_replace(F.col(url_col), r"^https?://[^/]*", "")
+    path = F.regexp_replace(F.col("url"), r"^https?://[^/]*", "")
     disallowed = F.exists(
         F.coalesce(F.col("disallow_prefixes"), F.array().cast("array<string>")),
         lambda p: path.startswith(p),

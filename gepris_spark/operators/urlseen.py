@@ -17,7 +17,7 @@ Storage: one little-endian uint64 `.npy` bitset per bucket under
 `<root>/urlseen/`. A bucket's size m is its file's length in bits
 (`len(bits) * 64`), so buckets size independently and files written
 at any size stay readable. Updates happen once per micro-batch on the
-driver (a batch is bounded — 50k urls * k positions — regardless of
+driver (a batch is bounded — 50k urls * `K` positions — regardless of
 corpus size); membership tests run on executors via mmap'd bucket
 files, so each task touches only its bucket's slice (candidates are
 repartitioned by bucket first). Swap note: on a real cluster the bucket
@@ -26,10 +26,10 @@ available, puffin DataSketches attached to the frontier table serve the
 same role.
 
 Growth: a new bucket starts at `FLOOR_BITS` (8 KiB). When an update
-leaves a bucket so full that its false-positive rate `fill ** k`
+leaves a bucket so full that its false-positive rate `fill ** K`
 passes `FP_BOUND`, the bucket is rebuilt at twice its size (more if
 one update overfills that), from the exact seen set plus the update —
-one bitset per bucket, so a probe stays at k lookups (scalable bloom
+one bitset per bucket, so a probe stays at `K` lookups (scalable bloom
 filters, Almeida et al. 2007, keep a list of generations instead
 because they have no exact set to rebuild from). Sizes double, so the
 rebuilds cost amortized O(1) per URL. The old file stays in place
@@ -53,19 +53,21 @@ H1 = "_bloom_h1"
 H2 = "_bloom_h2"
 BUCKET = "_bloom_bucket"
 
-# bits of a new bucket (8 KiB): ~3.8k urls before growth at k=5
+# bit positions per url
+K = 5
+# bits of a new bucket (8 KiB): ~3.8k urls before growth
 FLOOR_BITS = 1 << 16
-# a bucket whose estimated false-positive rate fill ** k passes this
-# bound is rebuilt larger; at k=5 a grown bucket holds 17-35 bits per url
+# a bucket whose estimated false-positive rate fill ** K passes this
+# bound is rebuilt larger; a grown bucket holds 17-35 bits per url
 FP_BOUND = 1e-3
 
 _BUCKET_FILE = re.compile(r"bucket(\d{5})\.npy")
 _TMP_SUFFIX = ".tmp.npy"
 
 
-def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.ndarray:
-    """(n, k) bit positions via double hashing, vectorized."""
-    i = np.arange(k, dtype=np.uint64)[None, :]
+def _positions(h1: np.ndarray, h2: np.ndarray, m_bits: int) -> np.ndarray:
+    """(n, K) bit positions via double hashing, vectorized."""
+    i = np.arange(K, dtype=np.uint64)[None, :]
     return (h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)
 
 
@@ -78,23 +80,22 @@ def _fill(bits: np.ndarray) -> float:
     return int(_POP8[bits.view(np.uint8)].sum(dtype=np.uint64)) / (bits.size * 64)
 
 
-def _grown_bits(m_bits: int, fill: float, k: int) -> int:
+def _grown_bits(m_bits: int, fill: float) -> int:
     """Twice `m_bits`, or the smallest larger power of two that holds
-    the bucket's URLs with fill ** k under `FP_BOUND` if twice is not
+    the bucket's URLs with fill ** K under `FP_BOUND` if twice is not
     enough. A bucket rebuilt as it passes the bound is then half full:
     its URLs can double before it grows again. The URL count is
-    estimated from the fill, n = -(m/k) ln(1 - fill); a saturated
+    estimated from the fill, n = -(m/K) ln(1 - fill); a saturated
     bucket counts as one bit short of full."""
-    n = -(m_bits / k) * math.log(max(1.0 - fill, 1.0 / m_bits))
-    need = -n * k / math.log1p(-(FP_BOUND ** (1 / k)))
+    n = -(m_bits / K) * math.log(max(1.0 - fill, 1.0 / m_bits))
+    need = -n * K / math.log1p(-(FP_BOUND ** (1 / K)))
     return max(2 * m_bits, 1 << math.ceil(math.log2(need)))
 
 
 class BloomUrlSeen:
-    def __init__(self, root: str, n_buckets: int = 16, k: int = 5):
+    def __init__(self, root: str, n_buckets: int = 16):
         self.dir = os.path.join(root, "urlseen")
         self.n_buckets = n_buckets
-        self.k = k
         os.makedirs(self.dir, exist_ok=True)
         # a bitset half-written by a crashed update is never read
         for entry in os.listdir(self.dir):
@@ -102,8 +103,8 @@ class BloomUrlSeen:
                 os.remove(os.path.join(self.dir, entry))
 
     # ---------------------------------------------------------- hashing
-    def with_hashes(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        url = F.col(url_col)
+    def with_hashes(self, df: DataFrame) -> DataFrame:
+        url = F.col("url")
         return (
             df.withColumn(H1, F.xxhash64(url))
             .withColumn(H2, F.xxhash64(url, F.lit(0x9E3779B9)))
@@ -146,7 +147,6 @@ class BloomUrlSeen:
         driver receives only a few rows of (bucket, m/8 bytes) per
         bucket to OR together. The driver never sees per-url rows (a
         collect of a 10^7-url batch would be the bottleneck)."""
-        k = self.k
 
         def pack(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
@@ -155,7 +155,7 @@ class BloomUrlSeen:
             m_bits = sizes.get(bucket, FLOOR_BITS)
             h1 = pdf[H1].to_numpy(dtype=np.int64).astype(np.uint64)
             h2 = pdf[H2].to_numpy(dtype=np.int64).astype(np.uint64)
-            pos = _positions(h1, h2, k, m_bits).ravel()
+            pos = _positions(h1, h2, m_bits).ravel()
             bits = np.zeros(m_bits // 64, dtype=np.uint64)
             np.bitwise_or.at(bits, (pos // 64).astype(np.int64), np.uint64(1) << (pos % 64))
             return pd.DataFrame({"bucket": [bucket], "bits": [bits.tobytes()]})
@@ -177,47 +177,40 @@ class BloomUrlSeen:
             out[b] = out[b] | bits if b in out else bits.copy()
         return out
 
-    def add_urls(
-        self,
-        df: DataFrame,
-        url_col: str = "url",
-        assume_distinct: bool = False,
-        seen_urls: DataFrame | None = None,
-    ) -> dict:
+    def add_urls(self, df: DataFrame, seen_urls: DataFrame | None = None) -> dict:
         """OR the batch's urls into the bucket bitsets, rebuilding any
         bucket the batch fills past `FP_BOUND` at a larger size.
 
         `seen_urls` is every url added before this call (the exact seen
-        set, one `url_col` column); a rebuild re-adds them. It may be
-        None only while the filter is empty. Buckets whose bits do not
-        change are not rewritten. `assume_distinct` skips the dedup
-        shuffle when the caller already guarantees unique urls (the
-        visit log does).
+        set, one `url` column); a rebuild re-adds them. It may be None
+        only while the filter is empty. Buckets whose bits do not change
+        are not rewritten. The urls need no dedup: a url ORed in twice
+        sets the same bits, and sizing reads the bits, not a url count.
 
         Returns the filter's health after the update: `urlseen_bits`
         (total bits), `urlseen_fill_max` (fill ratio of the fullest
-        bucket), `urlseen_fp_est` (fill_max ** k) and `urlseen_grown`
+        bucket), `urlseen_fp_est` (fill_max ** K) and `urlseen_grown`
         (buckets rebuilt)."""
         sizes = self._sizes()
         if seen_urls is None and sizes:
             raise ValueError("add_urls on a non-empty filter needs seen_urls")
-        urls = df.select(url_col) if assume_distinct else df.select(url_col).distinct()
+        urls = df.select("url")
         fills: dict[int, float] = {}
         grow: dict[int, int] = {}
 
         def settle(b: int, bits: np.ndarray, old: np.ndarray | None = None) -> None:
             fills[b] = _fill(bits)
-            if fills[b] ** self.k > FP_BOUND:
+            if fills[b] ** K > FP_BOUND:
                 # the old file stays until the rebuilt one replaces it
-                grow[b] = _grown_bits(len(bits) * 64, fills[b], self.k)
+                grow[b] = _grown_bits(len(bits) * 64, fills[b])
             elif old is None or not np.array_equal(bits, old):
                 self._save(b, bits)
 
-        for b, packed in self._pack(self.with_hashes(urls, url_col), sizes).items():
+        for b, packed in self._pack(self.with_hashes(urls), sizes).items():
             old = np.load(self._bucket_path(b)) if b in sizes else None
             settle(b, packed if old is None else old | packed, old)
-        every = urls if seen_urls is None else seen_urls.select(url_col).unionByName(urls)
-        hashed = self.with_hashes(every, url_col)
+        every = urls if seen_urls is None else seen_urls.select("url").unionByName(urls)
+        hashed = self.with_hashes(every)
         grown: set[int] = set()
         while grow:
             # a saturated bucket's url count is underestimated, so its
@@ -235,14 +228,12 @@ class BloomUrlSeen:
         return {
             "urlseen_bits": sum(sizes.values()),
             "urlseen_fill_max": fill_max,
-            "urlseen_fp_est": fill_max**self.k,
+            "urlseen_fp_est": fill_max**K,
             "urlseen_grown": len(grown),
         }
 
     # ------------------------------------------------------- membership
-    def with_maybe_seen(
-        self, df: DataFrame, url_col: str = "url", num_partitions: int | None = None
-    ) -> DataFrame:
+    def with_maybe_seen(self, df: DataFrame, num_partitions: int | None = None) -> DataFrame:
         """Adds boolean `maybe_seen`. Executors mmap only their bucket's
         bitset and take its size m from the file; candidates are
         repartitioned by bucket so each file is opened once per task.
@@ -258,8 +249,8 @@ class BloomUrlSeen:
         par = num_partitions or max(
             df.sparkSession.sparkContext.defaultParallelism, self.n_buckets
         )
-        hashed = self.with_hashes(df, url_col).repartition(par, F.col(BUCKET), F.col(H1))
-        bloom_dir, k = self.dir, self.k
+        hashed = self.with_hashes(df).repartition(par, F.col(BUCKET), F.col(H1))
+        bloom_dir = self.dir
         # fresh StructType — .add() would mutate the DataFrame's cached schema
         out_schema = T.StructType(
             list(hashed.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
@@ -282,7 +273,7 @@ class BloomUrlSeen:
                     if bits is None:
                         continue
                     mask = (pdf[BUCKET] == b).to_numpy()
-                    p = _positions(h1[mask], h2[mask], k, len(bits) * 64)
+                    p = _positions(h1[mask], h2[mask], len(bits) * 64)
                     word = np.asarray(bits[(p // 64).astype(np.int64)])
                     hit = (word >> (p % 64)) & np.uint64(1)
                     seen[mask] = hit.all(axis=1)
@@ -292,11 +283,7 @@ class BloomUrlSeen:
 
     # ------------------------------------------------------ full filter
     def filter_new(
-        self,
-        candidates: DataFrame,
-        seen_urls: DataFrame,
-        url_col: str = "url",
-        num_partitions: int | None = None,
+        self, candidates: DataFrame, seen_urls: DataFrame, num_partitions: int | None = None
     ) -> DataFrame:
         """Return candidates whose url is NOT in the seen set.
 
@@ -309,9 +296,9 @@ class BloomUrlSeen:
         """
         if self.is_empty():
             return candidates
-        probed = self.with_maybe_seen(candidates, url_col, num_partitions=num_partitions)
+        probed = self.with_maybe_seen(candidates, num_partitions=num_partitions)
         # a shuffled join puts every NULL key (every miss) in one
         # partition: at most the batch's candidates
-        keyed = probed.withColumn("_hit", F.when(F.col("maybe_seen"), F.col(url_col)))
-        seen = seen_urls.select(F.col(url_col).alias("_hit"))
+        keyed = probed.withColumn("_hit", F.when(F.col("maybe_seen"), F.col("url")))
+        seen = seen_urls.select(F.col("url").alias("_hit"))
         return keyed.join(seen, "_hit", "left_anti").drop("_hit", "maybe_seen")

@@ -135,11 +135,16 @@ def institution_projekt_references(latest: DataFrame) -> DataFrame:
     return reference_edges(latest, INSTITUTION_PROJEKT_RELATIONS, "institution_id")
 
 
-def institution_hierarchy(latest: DataFrame, max_depth: int = 32) -> DataFrame:
+# nesting levels `institution_hierarchy` follows at most: a runaway
+# guard, real trees nest 5 deep or less
+MAX_HIERARCHY_DEPTH = 32
+
+
+def institution_hierarchy(latest: DataFrame) -> DataFrame:
     """Q8 — recursive institution hierarchy closure
     (dfg-gepris.sql:117-141): Spark has no recursive CTE, so iterate
-    one nesting level per pass until fixpoint (depth in practice <=5;
-    max_depth is a runaway guard).
+    one nesting level per pass until fixpoint, at most
+    `MAX_HIERARCHY_DEPTH` passes.
 
     Input: latest institution items whose trees carry
     `normalised_subinstitutions` — a nested JSON array where a string
@@ -165,7 +170,7 @@ def institution_hierarchy(latest: DataFrame, max_depth: int = 32) -> DataFrame:
     closure = roots.select("id", "parent_id", "root_id")
     frontier = roots.where(F.col("children_json").isNotNull())
     depth = 0
-    while depth < max_depth:
+    while depth < MAX_HIERARCHY_DEPTH:
         entries = frontier.select(
             F.col("id").alias("parent_id"),
             "root_id",

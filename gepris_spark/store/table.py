@@ -347,10 +347,8 @@ class SnapshotStore:
         keys: list[str],
         matched_update,
         not_matched_insert=None,
-        matched_condition=None,
         matched_delete=None,
         not_matched_condition=None,
-        key_col: str | None = None,
         n_buckets: int = 64,
     ) -> int:
         """Bucket-pruned MERGE: only the hash buckets the source batch
@@ -358,8 +356,8 @@ class SnapshotStore:
         HARDLINKED from the previous snapshot (O(1) per file). This is
         the Iceberg merge-on-read economics at 10^10-frontier scale —
         a 50k-row micro-batch touches at most 50k of the 64 buckets'
-        worth of files, not the whole table."""
-        key_col = key_col or keys[0]
+        worth of files, not the whole table. Rows bucket on `keys[0]`."""
+        key_col = keys[0]
         # pruning with a modulus other than the committed layout's would
         # silently skip live buckets — validate before any work
         self._commit_layout(name, key_col, n_buckets, allow_change=False)
@@ -379,8 +377,13 @@ class SnapshotStore:
         else:
             target = spark.createDataFrame([], schema)
         merged = merge_upsert(
-            target, src.drop(self.BUCKET_COL), keys, matched_update, not_matched_insert,
-            matched_condition, matched_delete, not_matched_condition,
+            target,
+            src.drop(self.BUCKET_COL),
+            keys,
+            matched_update,
+            not_matched_insert=not_matched_insert,
+            matched_delete=matched_delete,
+            not_matched_condition=not_matched_condition,
         )
 
         def write(path: str) -> None:
@@ -642,7 +645,6 @@ class SnapshotStore:
         name: str,
         schema: T.StructType,
         keep_last: int = 2,
-        num_files: int | None = None,
     ) -> dict:
         """Fold older `batch_id=*` dirs (and any prior compacted segment)
         into ONE consolidated parquet segment — Iceberg's
@@ -653,12 +655,14 @@ class SnapshotStore:
         one segment plus the `keep_last` newest live batches (left live
         so in-flight idempotent re-runs of recent batches stay cheap).
 
-        Per-row `batch_id` identity is preserved as a real column in the
-        segment, so readers see byte-identical rows before and after.
-        Crash-safe ordering: segment write -> atomic manifest flip ->
-        cleanup of folded dirs; a crash between flip and cleanup leaves
-        duplicate storage but not duplicate reads (read_appends prefers
-        the live dir for any folded id, and its content is identical).
+        The segment is one parquet file per ~128 MB of folded input,
+        never zero. Per-row `batch_id` identity is preserved as a real
+        column in the segment, so readers see byte-identical rows
+        before and after. Crash-safe ordering: segment write -> atomic
+        manifest flip -> cleanup of folded dirs; a crash between flip
+        and cleanup leaves duplicate storage but not duplicate reads
+        (read_appends prefers the live dir for any folded id, and its
+        content is identical).
 
         Returns {"folded": [...], "segment": str, "rows": int}."""
         table_dir = self._table_dir(name)
@@ -675,13 +679,11 @@ class SnapshotStore:
         src = self.read_appends(spark, name, schema).where(
             F.col("batch_id").isin(folded_ids)
         )
-        if num_files is None:
-            # one output file per ~128 MB of folded input, never zero
-            folded = [os.path.join(table_dir, f"batch_id={b}") for b in fold_live]
-            if manifest["segment"]:
-                folded.append(os.path.join(table_dir, manifest["segment"]))
-            num_files = max(1, sum(map(_parquet_bytes, folded)) // (128 << 20))
-        src.repartition(int(num_files)).write.mode("overwrite").parquet(seg_abs)
+        folded = [os.path.join(table_dir, f"batch_id={b}") for b in fold_live]
+        if manifest["segment"]:
+            folded.append(os.path.join(table_dir, manifest["segment"]))
+        num_files = max(1, sum(map(_parquet_bytes, folded)) // (128 << 20))
+        src.repartition(num_files).write.mode("overwrite").parquet(seg_abs)
         rows = spark.read.parquet(seg_abs).count()
         _write_json_atomic(
             self._compact_manifest_file(name),

@@ -116,19 +116,24 @@ class CrawlEngine:
         return os.path.join(self.root, "ledger.jsonl")
 
     def committed_batches(self) -> dict[int, dict]:
-        out: dict[int, dict] = {}
+        """{batch_id: ledger row} of every committed batch. A last line
+        with no newline is a row whose write and fsync never finished
+        (a run killed mid-write), so its batch did not commit."""
         try:
             with open(self._ledger_path()) as fh:
-                for line in fh:
-                    row = json.loads(line)
-                    out[row["batch_id"]] = row
+                lines = fh.read().split("\n")
         except OSError:
-            pass
-        return out
+            return {}
+        # lines[-1] is "" or that torn row
+        rows = [json.loads(line) for line in lines[:-1]]
+        return {row["batch_id"]: row for row in rows}
 
     def _commit_ledger(self, row: dict) -> None:
-        with open(self._ledger_path(), "a") as fh:
-            fh.write(json.dumps(row) + "\n")
+        with open(self._ledger_path(), "a+b") as fh:
+            # cut a torn row off, so this row starts on a line of its own
+            fh.seek(0)
+            fh.truncate(fh.read().rfind(b"\n") + 1)
+            fh.write((json.dumps(row) + "\n").encode())
             fh.flush()
             os.fsync(fh.fileno())
 
@@ -342,9 +347,7 @@ class CrawlEngine:
                 ),
                 pool.submit(
                     timed, "bloom_update",
-                    lambda: self.bloom.add_urls(
-                        visits.select("url"), assume_distinct=True, seen_urls=prior_seen
-                    ),
+                    lambda: self.bloom.add_urls(visits.select("url"), seen_urls=prior_seen),
                 ),
                 pool.submit(
                     timed, "state_commit",

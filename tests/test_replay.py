@@ -200,10 +200,31 @@ def test_resume_after_crash_inside_commit(spark, tmp_path, seeds_pdf, crash_setu
     _assert_match(resumed, replay(_seed_rows(seeds_pdf), batch_size=25))
 
 
+def test_resume_after_torn_ledger_tail(spark, tmp_path, seeds_pdf, crash_setup):
+    """A run killed while writing batch 2's ledger row leaves half a row
+    with no newline: batch 2 did not commit, the next run resumes from
+    it to the uninterrupted run, and its row starts a line of its own."""
+    seeds, want, two = crash_setup
+    root = str(tmp_path / "torn")
+    shutil.copytree(two, root)
+    engine = CrawlEngine(spark, root, EngineConfig(batch_size=25))
+    row = json.dumps({**engine.committed_batches()[1], "batch_id": 2})
+    with open(engine._ledger_path(), "a") as fh:
+        fh.write(row[: len(row) // 2])
+    assert sorted(engine.committed_batches()) == [0, 1]
+
+    engine.run_seed_list(seeds)
+    assert _engine_visits(engine) == want
+    _assert_match(engine, replay(_seed_rows(seeds_pdf), batch_size=25))
+    with open(engine._ledger_path()) as fh:
+        rows = [json.loads(line) for line in fh]
+    assert [r["batch_id"] for r in rows] == list(range(len(rows)))
+
+
 def test_bloom_urlseen_no_false_negatives(spark, tmp_path):
     from gepris_spark.operators.urlseen import BloomUrlSeen
 
-    bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=4, k=5)
+    bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=4)
     urls = spark.range(500).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
     bloom.add_urls(urls)
     probed = bloom.with_maybe_seen(urls)

@@ -369,7 +369,7 @@ def test_compact_appends_preserves_rows_and_batch_ids(spark, store_dir):
     before = _append_rows(store.read_appends(spark, "led", SCHEMA))
     assert store.committed_batches("led") == [1, 2, 3, 4, 5]
 
-    res = store.compact_appends(spark, "led", SCHEMA, keep_last=2, num_files=1)
+    res = store.compact_appends(spark, "led", SCHEMA, keep_last=2)
     assert res["folded"] == [1, 2, 3]
     assert res["rows"] == 6
     # only the two newest batches remain as live dirs
@@ -384,10 +384,10 @@ def test_compact_appends_repeated_folds_prior_segment(spark, store_dir):
     store = SnapshotStore(store_dir)
     for b in range(1, 4):
         store.append_batch(_df(spark, [(b, f"v{b}")]), "led", b)
-    store.compact_appends(spark, "led", SCHEMA, keep_last=1, num_files=1)
+    store.compact_appends(spark, "led", SCHEMA, keep_last=1)
     for b in range(4, 7):
         store.append_batch(_df(spark, [(b, f"v{b}")]), "led", b)
-    res = store.compact_appends(spark, "led", SCHEMA, keep_last=1, num_files=1)
+    res = store.compact_appends(spark, "led", SCHEMA, keep_last=1)
     assert res["folded"] == [1, 2, 3, 4, 5]
     # exactly one segment dir survives
     segs = [e for e in os.listdir(os.path.join(store_dir, "led")) if e.startswith("_compact_seg")]
@@ -402,7 +402,7 @@ def test_compact_appends_reappended_batch_wins_over_segment(spark, store_dir):
     store = SnapshotStore(store_dir)
     for b in range(1, 4):
         store.append_batch(_df(spark, [(b, f"v{b}")]), "led", b)
-    store.compact_appends(spark, "led", SCHEMA, keep_last=0, num_files=1)
+    store.compact_appends(spark, "led", SCHEMA, keep_last=0)
     # idempotent re-run of folded batch 2 with corrected content
     store.append_batch(_df(spark, [(2, "FIXED")]), "led", 2)
     rows = _append_rows(store.read_appends(spark, "led", SCHEMA))

@@ -67,6 +67,23 @@ def test_bucket_grows_and_stays_exact(spark, tmp_path):
     assert open(path, "rb").read() == before
 
 
+@pytest.mark.parametrize("n", [1000, 5000])
+def test_duplicate_urls_set_the_same_bits(spark, tmp_path, n):
+    """A url added twice in one update sets the bits it sets once, so
+    add_urls needs no dedup: with and without duplicates the bucket
+    file and the health are equal, below the bound (n=1000) and through
+    a growth rebuild (n=5000)."""
+    first, second = _urls(spark, 0, 500), _urls(spark, 500, n)
+    out = []
+    for name, batch in (("once", second), ("twice", second.unionByName(second))):
+        bloom = BloomUrlSeen(str(tmp_path / name), n_buckets=1)
+        bloom.add_urls(first)
+        health = bloom.add_urls(batch, seen_urls=first)
+        out.append((health, open(bloom._bucket_path(0), "rb").read()))
+    assert out[0] == out[1]
+    assert out[0][0]["urlseen_grown"] == (n > 1000)
+
+
 def test_add_urls_needs_the_seen_set_once_filled(spark, tmp_path):
     bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=1)
     bloom.add_urls(_urls(spark, 0, 10))
@@ -83,7 +100,7 @@ def test_fixed_size_bucket_stays_readable(spark, tmp_path):
     hashed = bloom.with_hashes(old).toPandas()
     h1 = hashed["_bloom_h1"].to_numpy(dtype=np.int64).astype(np.uint64)
     h2 = hashed["_bloom_h2"].to_numpy(dtype=np.int64).astype(np.uint64)
-    pos = _positions(h1, h2, bloom.k, m_bits).ravel()
+    pos = _positions(h1, h2, m_bits).ravel()
     bits = np.zeros(m_bits // 64, dtype=np.uint64)
     np.bitwise_or.at(bits, (pos // 64).astype(np.int64), np.uint64(1) << (pos % 64))
     np.save(bloom._bucket_path(0), bits)

@@ -64,10 +64,6 @@ def is_lossless(fmt: str) -> bool:
     return fmt == "png"
 
 
-def is_lossy(fmt: str) -> bool:
-    return fmt in ("qdct", "jpeg", "jpg")
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB between two uint8 images."""
     diff = a.astype(np.float64) - b.astype(np.float64)

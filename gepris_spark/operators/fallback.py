@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gepris_spark import cacheutil
-from gepris_spark.functions import canonical as C
+from gepris_spark.functions import parity as P
 from gepris_spark.operators import fetchparse
 
 # person_details.py:44-47 — the fixed disguise UA used for cache hits
@@ -153,7 +153,7 @@ def google_cache_fallback_fetch(
     branches consume it."""
     ua_pool = user_agent_pool if user_agent_pool is not None else []
     cache_sched = scheduled.select(
-        C.google_cache_url(F.col("url")).alias("url"),
+        P.google_cache_url(F.col("url")).alias("url"),
         F.col("url").alias("origin_url"),
         "context",
         "item_id",
@@ -188,5 +188,5 @@ def google_cache_fallback_fetch(
     else:
         fetched_live = fetched_live.withColumn("user_agent", F.lit(DEFAULT_USER_AGENT))
     out = hits.unionByName(fetched_live.select(*hits.columns))
-    out = assign_rotation(out, [C.format_proxy_str(p) for p in (proxy_pool or [])], "proxy")
+    out = assign_rotation(out, [P.format_proxy_str(p) for p in (proxy_pool or [])], "proxy")
     return out

@@ -17,10 +17,13 @@ vectorized pandas/Arrow UDFs, no per-row Python UDF serde):
 * P2 extract_text_and_links with singleton unwrap (base.py:120-160),
 * P3 ul/li tree extraction under content_frame divs (base.py:172-205),
 * P5 h1.facelift name (details.py:142-144),
-* P12 embedded-image decode (data URI), phash, caption from
-  figcaption, and — when a reference-pixels provider is given — the
-  input_hint per-row invariant (allclose for lossless, PSNR>=40dB for
-  lossy) + caption equality.
+* P12 embedded-image decode (data URI): dims, phash and the payload
+  bytes, caption from figcaption. The per-row pixel invariant (allclose
+  for lossless, PSNR>=40dB for lossy) is checked downstream by
+  `operators/multimodal.decode_verify_stage` over the emitted bytes.
+
+The search-results sweep (P6/P7) parses with the same helpers in
+`operators/search.py`.
 """
 
 from __future__ import annotations
@@ -30,17 +33,15 @@ import json
 import re
 from collections.abc import Callable, Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gepris_spark import schemas
 from gepris_spark.codecs import image as imagecodec
 from gepris_spark.operators.htmldom import Node, parse_html
-
-_WS_RE = re.compile(r"\s+")
 
 # Per-worker decode-metadata cache: dims + phash are pure functions of
 # the payload bytes, and a crawl sees the same payload many times
@@ -49,8 +50,7 @@ _WS_RE = re.compile(r"\s+")
 # payloads themselves; bounded FIFO so a 100 TB run with mostly-unique
 # images just misses at O(1) cost. Failures are cached too — a corrupt
 # payload served on every page should not pay the failing decode per
-# page. Only the verification paths (ref_pixels_fn given) still decode
-# the full pixel array.
+# page.
 _DECODE_META_MAX = 4096
 _decode_meta_cache: dict[bytes, tuple] = {}
 
@@ -191,6 +191,7 @@ def extract_trees(content: Node) -> dict:
 _DATA_URI_RE = re.compile(r"^data:image/(\w+);base64,(.*)$", re.S)
 
 _NOT_FOUND = ("Page not found", "Seite nicht gefunden")
+_NO_ABSTRACT = ("Keine Zusammenfassung vorhanden", "No abstract available")
 
 
 def _page_status(doc: Node, expected_language: str | None) -> str | None:
@@ -219,8 +220,6 @@ def _parse_one(
     expected_language: str | None,
     context: str | None,
     item_id,
-    ref_pixels_fn: Callable[[str], np.ndarray] | None,
-    expected_caption_fn: Callable[[str], str] | None,
 ) -> dict:
     out = {
         "url": url,
@@ -238,8 +237,6 @@ def _parse_one(
         "image_h": None,
         "image_fmt": None,
         "phash": None,
-        "psnr_db": None,
-        "pixels_ok": None,
         "result_href": None,
         "beschreibung": None,
     }
@@ -297,10 +294,7 @@ def _parse_one(
                 for t in (_clean(s) for s in d.all_text())
                 if t != ""
             ]
-            if len(texts) == 1 and texts[0] in (
-                "Keine Zusammenfassung vorhanden",
-                "No abstract available",
-            ):
+            if len(texts) == 1 and texts[0] in _NO_ABSTRACT:
                 texts = []
             out["beschreibung"] = " ".join(texts) if texts else None
 
@@ -331,146 +325,10 @@ def _parse_one(
                 out["image_h"], out["image_w"], out["phash"] = _decode_meta(raw, fmt)
                 out["image_bytes"] = raw
                 out["image_fmt"] = fmt
-                if ref_pixels_fn is not None and out["image_id"]:
-                    # verification path: the pixel-level compare needs
-                    # the full array, not the memoized metadata
-                    pixels = imagecodec.decode(raw, fmt)
-                    ref = ref_pixels_fn(out["image_id"])
-                    ok, value = imagecodec.pixels_match(pixels, ref, fmt)
-                    if expected_caption_fn is not None:
-                        ok = ok and (out["caption"] == _clean(expected_caption_fn(out["image_id"])))
-                    out["pixels_ok"] = bool(ok)
-                    out["psnr_db"] = None if value == float("inf") else float(value)
             except (ValueError, NotImplementedError):
                 # fields stay None: _decode_meta raises before any is set
                 out["status"] = "error"
     return out
-
-
-def _parse_search_page(url: str, context: str, html: str) -> list[dict]:
-    """P6/P7/G3/G4 — search-results page parse (search_results.py:36-100):
-    iterate `#liste` children minus `.pagination`, skip `/null` links
-    (counted as warns), per-context payload (projekt attribute pairs /
-    person beschreibung / institution subInstitution exploder), page
-    total from `#result-info@data-result-count` (dot-stripped)."""
-    doc = parse_html(html)
-    total = None
-    info = next((n for n in doc.iter() if n is not doc and n.attrs.get("id") == "result-info"), None)
-    if info is not None and info.attrs.get("data-result-count"):
-        try:
-            total = int(info.attrs["data-result-count"].replace(".", ""))
-        except ValueError:
-            total = None
-    liste = next((n for n in doc.iter() if n is not doc and n.attrs.get("id") == "liste"), None)
-    items: list[dict] = []
-    n_null_links = 0
-    if liste is not None:
-        for result in liste.child_elements():
-            if "pagination" in (result.attrs.get("class") or "").split():
-                continue
-            link = next(
-                (a for h2 in result.find_all("h2") for a in h2.find_all("a")), None
-            )
-            if link is None:
-                continue
-            href = link.attrs.get("href") or ""
-            if href == f"/gepris/{context}/null":
-                n_null_links += 1
-                continue
-            item_id = href.rsplit("/", 1)[-1]
-            base = {
-                "url": url,
-                "context": context,
-                "item_id": int(item_id) if item_id.isdigit() else None,
-                "name_de": _non_empty_text(link),
-                "addresse": None,
-                "attributes": None,
-                "uebergeordnete_institution": None,
-            }
-            if context == "projekt":
-                attrs: dict[str, list[str]] = {}
-                for detail_div in result.find_all("div", cls="details"):
-                    for line in detail_div.child_elements():
-                        for key, value in attributes_pairs_list(list(line.find_all("span"))):
-                            if key is None:
-                                continue
-                            if value is None:
-                                attrs[key] = []
-                            elif isinstance(value, list):
-                                attrs[key] = [
-                                    v if isinstance(v, str) else json.dumps(v, ensure_ascii=False)
-                                    for v in value
-                                ]
-                            else:
-                                attrs[key] = [value if isinstance(value, str) else json.dumps(value)]
-                base["attributes"] = attrs
-                items.append(base)
-            elif context == "person":
-                besch = result.find("div", cls="beschreibung")
-                text = _extract_text_and_links(besch) if besch is not None else None
-                base["addresse"] = text if isinstance(text, str) else (
-                    json.dumps(text, ensure_ascii=False) if text else None
-                )
-                items.append(base)
-            else:  # institution: parent row + one item per subInstitution (P7)
-                items.append(base)
-                for sub in result.find_all("div", cls="subInstitution"):
-                    sub_link = next(iter(sub.find_all("a")), None)
-                    if sub_link is None:
-                        continue
-                    sub_href = sub_link.attrs.get("href") or ""
-                    sub_id = sub_href.rsplit("/", 1)[-1]
-                    sub_text = [
-                        _clean(t) for t in sub.children if isinstance(t, str) and _clean(t)
-                    ]
-                    items.append(
-                        {
-                            "url": url,
-                            "context": context,
-                            "item_id": int(sub_id) if sub_id.isdigit() else None,
-                            "name_de": _non_empty_text(sub_link),
-                            "addresse": sub_text[0] if sub_text else None,
-                            "attributes": None,
-                            "uebergeordnete_institution": base["item_id"],
-                        }
-                    )
-    for it in items:
-        it["total_result_count"] = total
-        it["n_loaded_on_page"] = len(items)
-        it["n_null_links"] = n_null_links
-    return items
-
-
-def parse_search_stage(fetched: DataFrame) -> DataFrame:
-    """mapInPandas 1->n over fetched search pages (columns url, context,
-    html) -> one row per search-result item."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("context", T.StringType()),
-            T.StructField("item_id", T.LongType()),
-            T.StructField("name_de", T.StringType()),
-            T.StructField("addresse", T.StringType()),
-            T.StructField("attributes", T.MapType(T.StringType(), T.ArrayType(T.StringType()))),
-            T.StructField("uebergeordnete_institution", T.LongType()),
-            T.StructField("total_result_count", T.LongType()),
-            T.StructField("n_loaded_on_page", T.IntegerType()),
-            T.StructField("n_null_links", T.IntegerType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(
-                    _parse_search_page(r.url, r.context, r.html if isinstance(r.html, str) else "")
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return fetched.select("url", "context", "html").mapInPandas(run, out_schema)
 
 
 # Above this many scheduled rows the fetch join stops broadcasting the
@@ -527,12 +385,7 @@ def fetch_pages(
     page_keys = pages.select(
         F.col("url").alias("_p_url"), F.col("language").alias("_p_language")
     )
-    missing = scheduled.join(
-        page_keys,
-        (scheduled["url"] == F.col("_p_url"))
-        & (scheduled["language"] == F.col("_p_language")),
-        "left_anti",
-    ).select(
+    missing = scheduled.join(page_keys, cond, "left_anti").select(
         "*",
         F.lit(None).cast("string").alias("fetch_status"),
         F.lit(None).cast("string").alias("html"),
@@ -589,8 +442,6 @@ def http_fetch_stage(scheduled: DataFrame, http_fetch_fn: Callable) -> DataFrame
     Reference parity: gepris_helper.py:58-83 (the live fetcher) behind
     the same stage boundary as the cache read-through
     (middlewares.py:118-138)."""
-    from pyspark.sql import types as T
-
     out_schema = T.StructType(
         list(scheduled.schema.fields)
         + [
@@ -656,51 +507,49 @@ def urllib_fetcher(
     return fetch
 
 
-def parse_stage(
-    fetched: DataFrame,
-    ref_pixels_fn: Callable[[str], np.ndarray] | None = None,
-    expected_caption_fn: Callable[[str], str] | None = None,
-) -> DataFrame:
-    """One mapInPandas over the fetched batch -> PARSED rows, in the
+def _map_pages(fetched: DataFrame, parse_one: Callable[..., dict], schema) -> DataFrame:
+    """One mapInPandas of `parse_one` over the fetched pages, in the
     fetched batch's own partitions: a parquet scan (the broadcast-join
     fetch path) already splits into balanced small partitions, and a
     shuffle of the html would only burn I/O."""
+    names = schema.fieldNames()
+    longs = [f.name for f in schema.fields if isinstance(f.dataType, T.LongType)]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [
-                _parse_one(
+                parse_one(
                     r.url,
                     r.html if isinstance(r.html, str) else "",
                     getattr(r, "language", None),
                     getattr(r, "context", None),
                     getattr(r, "item_id", None),
-                    ref_pixels_fn,
-                    expected_caption_fn,
                 )
                 for r in pdf.itertuples(index=False)
             ]
-            out = pd.DataFrame(rows, columns=[f.name for f in schemas.PARSED.fields])
+            out = pd.DataFrame(rows, columns=names)
             # pandas promotes an int column to float64 when the batch
-            # mixes image and no-image rows (None -> NaN) — float64 has
-            # a 53-bit mantissa, so the 64-bit phash silently loses its
-            # low bits depending on HOW ROWS HAPPEN TO BATCH. Nullable
-            # Int64 keeps it exact (caught by the http-vs-join fetch
+            # mixes values and None (None -> NaN) — float64 has a 53-bit
+            # mantissa, so a 64-bit phash silently loses its low bits
+            # depending on HOW ROWS HAPPEN TO BATCH. Nullable Int64 keeps
+            # every long column exact (caught by the http-vs-join fetch
             # parity test, which batches the same rows differently).
-            out["phash"] = pd.array([r["phash"] for r in rows], dtype="Int64")
+            for name in longs:
+                out[name] = pd.array([r[name] for r in rows], dtype="Int64")
             yield out
 
-    cols = ["url", "language", "html"]
-    for opt in ("context", "item_id"):
-        if opt in fetched.columns:
-            cols.append(opt)
-    return fetched.select(*cols).mapInPandas(run, schemas.PARSED)
+    cols = ["url", "language", "html"] + [c for c in ("context", "item_id") if c in fetched.columns]
+    return fetched.select(*cols).mapInPandas(run, schema)
+
+
+def parse_stage(fetched: DataFrame) -> DataFrame:
+    """The fetched details pages -> PARSED rows."""
+    return _map_pages(fetched, _parse_one, schemas.PARSED)
 
 
 # ----------------------------------------------------- result-page parse
 # A6 stages 3-4 (spiders/details.py:98-117 + items.py:133-149 loader).
 
-_NO_ABSTRACT = ("Keine Zusammenfassung vorhanden", "No abstract available")
 # MapCompose(filter_parenthesis, filter_strings(..., '(Siehe online unter'))
 _PUB_DROP = ("(", ")", "(Siehe online unter")
 # normalisation/project_result_attributes.py:7-9
@@ -796,27 +645,7 @@ def _parse_result_one(
 
 
 def parse_result_stage(fetched: DataFrame) -> DataFrame:
-    """mapInPandas over fetched result pages -> RESULT_PARSED rows.
-    Same single-pass Arrow-batched shape as parse_stage; result pages
-    are text-only (no image decode), so the per-row cost is the DOM
-    walk alone."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _parse_result_one(
-                    r.url,
-                    r.html if isinstance(r.html, str) else "",
-                    getattr(r, "language", None),
-                    getattr(r, "context", None),
-                    getattr(r, "item_id", None),
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in schemas.RESULT_PARSED.fields])
-
-    cols = ["url", "language", "html"]
-    for opt in ("context", "item_id"):
-        if opt in fetched.columns:
-            cols.append(opt)
-    return fetched.select(*cols).mapInPandas(run, schemas.RESULT_PARSED)
+    """The fetched result pages -> RESULT_PARSED rows, in the same
+    single pass as parse_stage; result pages are text-only (no image
+    decode), so the per-row cost is the DOM walk alone."""
+    return _map_pages(fetched, _parse_result_one, schemas.RESULT_PARSED)

@@ -4,9 +4,7 @@ Reproduces the reference's `available_items` state machine
 (/root/reference/gepris_crawler/database.py) with Iceberg-style MERGE
 over the snapshot store:
 
-* K1 search upsert with null-safe change detection (database.py:77-96)
 * K2 details upsert (database.py:66-76)
-* Q7 vanished-item marking (database.py:149-161)
 * Q4 newly-referenced-person discovery, an anti-join (database.py:118-147)
 * Q5/Q6 moved-reference invalidation (database.py:163-207)
 * A2 priority queue: never-checked first, then stalest-first
@@ -17,6 +15,9 @@ MERGE joins are equi-joins on the bucket keys, micro-batch sources are
 broadcast, and the priority select is a per-partition top-k followed by
 a global top-k (TakeOrderedAndProject), so nothing materializes the
 full 10^10-row table on one node.
+
+The search-results sweep's K1 upsert and Q7 vanish marking run through
+the same `merge` and `commit` paths from `operators/search.py`.
 """
 
 from __future__ import annotations
@@ -42,12 +43,12 @@ class Frontier:
     def read(self) -> DataFrame:
         return self.store.read_bucketed(self.spark, TABLE, schemas.FRONTIER)
 
-    def _commit(self, df: DataFrame) -> int:
+    def commit(self, df: DataFrame) -> int:
         """Full-table rewrite path (sweep updates that touch every
         bucket: vanish marking, moved-invalidation)."""
         return self.store.commit_bucketed(df, TABLE, "id", self.n_buckets)
 
-    def _merge(self, source: DataFrame, matched_update, not_matched_insert) -> int:
+    def merge(self, source: DataFrame, matched_update, not_matched_insert) -> int:
         """Bucket-pruned MERGE path (micro-batch upserts): only hash
         buckets present in the source are read + rewritten; the rest of
         the frontier is hardlinked forward (store.merge_bucketed)."""
@@ -61,52 +62,6 @@ class Frontier:
             not_matched_insert,
             n_buckets=self.n_buckets,
         )
-
-    # ---------------------------------------------------------------- K1
-    def upsert_search_batch(self, batch: DataFrame, run_id: int) -> int:
-        """Search-results upsert with change detection (database.py:77-96).
-
-        `batch`: columns (id, context, item) — item is the JSON of the
-        search-result row. Semantics (Postgres ON CONFLICT mirrored):
-
-        * NOT MATCHED -> insert with last_available_seen/change=run,
-          detail_check_needed=True.
-        * MATCHED -> last_available_seen=run, item overwritten;
-          last_available_change=run only when item IS DISTINCT FROM old;
-          detail_check_needed=True only when the item changed AND the
-          row had been seen by a search run before.
-        """
-        run = F.lit(run_id).cast("long")
-        source = batch.select(
-            F.col("id").cast("long"),
-            "context",
-            F.col("item").alias("last_available_item"),
-        )
-
-        def updates(t, s):
-            changed = ~F.col("t.last_available_item").eqNullSafe(F.col("s.last_available_item"))
-            return {
-                "last_available_seen": run,
-                "last_available_change": F.when(
-                    changed, run
-                ).otherwise(F.col("t.last_available_change")),
-                "last_available_item": F.col("s.last_available_item"),
-                "detail_check_needed": F.when(
-                    changed & F.col("t.last_available_seen").isNotNull(), F.lit(True)
-                ).otherwise(F.col("t.detail_check_needed")),
-            }
-
-        def inserts(s):
-            return {
-                "id": F.col("s.id"),
-                "context": F.col("s.context"),
-                "last_available_seen": run,
-                "last_available_change": run,
-                "last_available_item": F.col("s.last_available_item"),
-                "detail_check_needed": F.lit(True),
-            }
-
-        return self._merge(source, updates, inserts)
 
     # ---------------------------------------------------------------- K2
     def upsert_details_batch(self, ids: DataFrame, run_id: int) -> int:
@@ -127,35 +82,7 @@ class Frontier:
                 "detail_check_needed": F.lit(False),
             }
 
-        return self._merge(source, updates, inserts)
-
-    # ---------------------------------------------------------------- Q7
-    def mark_vanished(self, context: str, run_id: int) -> int:
-        """Vanished-item marking after a search sweep (database.py:149-161)."""
-        run = F.lit(run_id).cast("long")
-        frontier = self.read()
-        cond = (
-            (F.col("context") == context)
-            & (F.col("last_available_seen") != run)
-            & F.col("last_available_seen").isNotNull()
-            & F.col("last_available_item").isNotNull()
-        )
-        updated = frontier.select(
-            "id",
-            "context",
-            "last_available_seen",
-            F.when(cond, run).otherwise(F.col("last_available_change")).alias(
-                "last_available_change"
-            ),
-            F.when(cond, F.lit(None).cast("string"))
-            .otherwise(F.col("last_available_item"))
-            .alias("last_available_item"),
-            "last_detail_check",
-            F.when(cond, F.lit(True)).otherwise(F.col("detail_check_needed")).alias(
-                "detail_check_needed"
-            ),
-        )
-        return self._commit(updated)
+        return self.merge(source, updates, inserts)
 
     # ---------------------------------------------------------------- Q4
     def discover_new_persons(self, referenced_person_ids: DataFrame, run_id: int) -> int:
@@ -182,7 +109,7 @@ class Frontier:
                 "detail_check_needed": F.lit(True),
             }
 
-        return self._merge(source, updates, inserts)
+        return self.merge(source, updates, inserts)
 
     # ------------------------------------------------------------- Q5/Q6
     def mark_check_needed_for_ids(self, ids: DataFrame) -> int:
@@ -207,7 +134,7 @@ class Frontier:
             )
             .select(*schemas.FRONTIER.fieldNames())
         )
-        return self._commit(flagged)
+        return self.commit(flagged)
 
     def mark_projekte_for_moved_references(
         self, history: DataFrame, runs: DataFrame, context: str, run_id: int

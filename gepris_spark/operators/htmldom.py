@@ -9,8 +9,6 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-VOID_TAGS = {"br", "img", "hr", "meta", "link", "input", "abbr "}
-
 
 class Node:
     __slots__ = ("tag", "attrs", "children", "parent")

@@ -46,10 +46,10 @@ DEFAULT_DELAY_MS = 2000  # AutoThrottle start delay (settings.py:121)
 #                          lo(h), AIMD_MAX_DELAY_MS)
 #
 # with lo(h) = the robots crawl-delay override when present else the
-# 2 s start delay (target concurrency 1.0 makes the target delay equal
-# the observed latency, as in the reference). All-integer arithmetic so
-# the single-threaded replay oracle reproduces it bit-for-bit.
-AIMD_MIN_DELAY_MS = 2000
+# 2 s start delay, DEFAULT_DELAY_MS (target concurrency 1.0 makes the
+# target delay equal the observed latency, as in the reference).
+# All-integer arithmetic so the single-threaded replay oracle
+# reproduces it bit-for-bit.
 AIMD_MAX_DELAY_MS = 30000
 
 

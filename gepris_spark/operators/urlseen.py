@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gepris_spark.store.table import replace_durably
+
 H1 = "_bloom_h1"
 H2 = "_bloom_h2"
 BUCKET = "_bloom_bucket"
@@ -128,7 +130,7 @@ class BloomUrlSeen:
         path = self._bucket_path(bucket)
         tmp = path + _TMP_SUFFIX
         np.save(tmp, bits)
-        os.replace(tmp, path)
+        replace_durably(tmp, path)
 
     def is_empty(self) -> bool:
         """True when no bits have ever been set (fresh crawl)."""

@@ -165,7 +165,7 @@ from gepris_spark.plans.contract_truth import FIXTURE_DIR  # noqa: E402
 
 _SITEMAPS_PATH = str(FIXTURE_DIR / "sitemaps.parquet")
 _VISIT_LOG_PATH = str(FIXTURE_DIR / "crawl_replay_visit_log.parquet")
-# the canonical-url grammar (F2, functions/canonical.py:39-77):
+# the canonical-url grammar (F2, functions/canonical.py):
 # scheme://host/gepris/{context}/{numeric id}, query/fragment stripped
 _CANON_RE = r"^https://([^/]+)/gepris/(projekt|person|institution)/([0-9]+)([?#].*)?$"
 

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gepris_spark.functions import canonical as C
+from gepris_spark.functions import parity as P
 from gepris_spark.functions import normalise as N
 
 
@@ -51,13 +51,13 @@ def projekte_table(norm: DataFrame) -> DataFrame:
     )
     return norm.select(
         F.col("item_id").cast("long").alias("id"),
-        C.clean_string(F.col("name")).alias("name"),
+        P.clean_string(F.col("name")).alias("name"),
         _first_attr("dfg_verfahren").alias("dfg_verfahren"),
-        C.split_comma_space(_first_attr("fachliche_zuordnungen")).alias("fachrichtungen"),
+        P.split_comma_space(_first_attr("fachliche_zuordnungen")).alias("fachrichtungen"),
         F.col("foerderung_beginn"),
         F.col("foerderung_ende"),
-        C.split_comma_space(_first_attr("internationaler_bezug")).alias("internationaler_bezug"),
-        C.remove_http_prefix(_first_attr("webseite")).alias("webseite"),
+        P.split_comma_space(_first_attr("internationaler_bezug")).alias("internationaler_bezug"),
+        P.remove_http_prefix(_first_attr("webseite")).alias("webseite"),
         # leaves only: branch entries serialize as JSON objects
         F.transform(
             F.filter(tree_ids, lambda x: x.rlike("^[0-9]+$")), lambda x: x.cast("long")
@@ -104,12 +104,12 @@ def personen_table(norm: DataFrame) -> DataFrame:
     raw_name = F.col("name")
     return norm.select(
         F.col("item_id").cast("long").alias("id"),
-        C.clean_string(C.remove_crucifix_suffix(raw_name)).alias("name"),
-        C.has_crucifix_suffix(raw_name).alias("verstorben"),
-        C.guess_gender_from_title(raw_name).alias("gender"),
+        P.clean_string(P.remove_crucifix_suffix(raw_name)).alias("name"),
+        P.has_crucifix_suffix(raw_name).alias("verstorben"),
+        P.guess_gender_from_title(raw_name).alias("gender"),
         _first_attr("adressen").alias("adresse"),
         _first_attr("mail").alias("mail"),
-        C.remove_http_prefix(_first_attr("internet")).alias("internet"),
+        P.remove_http_prefix(_first_attr("internet")).alias("internet"),
     )
 
 
@@ -119,9 +119,9 @@ def institutionen_table(norm: DataFrame) -> DataFrame:
     the hierarchy closure (views.institution_hierarchy)."""
     return norm.select(
         F.col("item_id").cast("long").alias("id"),
-        C.clean_string(F.col("name")).alias("name"),
+        P.clean_string(F.col("name")).alias("name"),
         _first_attr("adressen").alias("adresse"),
-        C.remove_http_prefix(_first_attr("internet")).alias("internet"),
+        P.remove_http_prefix(_first_attr("internet")).alias("internet"),
         F.get_json_object("norm_trees_json", "$.normalised_subinstitutions").alias(
             "subinstitutions_json"
         ),

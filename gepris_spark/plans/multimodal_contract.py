@@ -131,21 +131,23 @@ def q_crawl_image_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay the seeded seed list through the micro-batch engine (bloom
     URL-seen, politeness schedule), fetch the visited pages, parse them
     in the vectorized mapInPandas stage (decoding each page-embedded
-    data-URI image, recomputing dims + phash, validating decoded pixels
-    against the (seed,index)-formula reference and the caption against
-    the generator's), and materialize the image+caption catalog in the
+    data-URI image, recomputing dims + phash), verify every page's
+    image with decode_verify_stage (decoded pixels against the
+    (seed,index)-formula reference) and its caption against the
+    generator's, and materialize the image+caption catalog in the
     input_hint shape — one row per image with the exact-payload md5,
-    visited-page count, and the per-row validation verdicts folded in.
+    visited-page count, and the per-page validation verdicts folded in.
     Oracle: the independent single-threaded replay oracle's visit log
     walked against the generator primitives (truth.py), never through
     the engine's scheduler/parser (fixture crawl_image_catalog)."""
+    from gepris_spark.functions.parity import clean_string
     from gepris_spark.operators import fetchparse
+    from gepris_spark.operators.multimodal import decode_verify_stage
     from gepris_spark.sources import corpus
     from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
 
     seeds_pdf = corpus.gen_seeds_pdf(30, seed=42)
     images_pdf = corpus.gen_images_pdf(24, seed=42)
-    captions = dict(zip(images_pdf["image_id"], images_pdf["caption"]))
     engine = CrawlEngine(
         spark,
         tempfile.mkdtemp(prefix="gepris_imgcat_"),
@@ -156,26 +158,49 @@ def q_crawl_image_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine.run_seed_list(spark.createDataFrame(seeds_pdf))
     visits = engine.visit_log().withColumn("language", F.lit("de"))
     pages = spark.createDataFrame(corpus.gen_pages_pdf(seeds_pdf, images_pdf))
-    parsed = fetchparse.parse_stage(
-        fetchparse.fetch_pages(visits, pages),
-        ref_pixels_fn=lambda iid: corpus.ref_pixels(int(iid[3:]), seed=42),
-        expected_caption_fn=captions.get,
+    parsed = fetchparse.parse_stage(fetchparse.fetch_pages(visits, pages)).where(
+        F.col("image_id").isNotNull()
+    )
+    # every page with a decoded payload is verified on its own: its
+    # pixels here, its caption against the generator's after the F1
+    # clean in the catalog aggregate
+    decoded = parsed.where(F.col("image_bytes").isNotNull())
+    pixels = (
+        decode_verify_stage(
+            decoded.selectExpr(
+                "image_id", "image_bytes AS bytes", "image_w AS w", "image_h AS h",
+                "image_fmt AS fmt", "phash",
+            ),
+            lambda iid: corpus.ref_pixels(int(iid[3:]), seed=42),
+        )
+        .groupBy("image_id")
+        .agg(F.bool_and("pixels_ok").alias("_pixels_ok"), F.min("psnr_db").alias("min_psnr_db"))
+    )
+    expected = F.create_map(
+        *[F.lit(v) for pair in zip(images_pdf["image_id"], images_pdf["caption"]) for v in pair]
+    )
+    caption_ok = F.when(
+        F.col("image_bytes").isNotNull(),
+        F.col("caption").eqNullSafe(clean_string(expected[F.col("image_id")])),
+    )
+    catalog = parsed.groupBy("image_id").agg(
+        F.first("image_fmt").alias("fmt"),
+        F.first("image_w").alias("w"),
+        F.first("image_h").alias("h"),
+        F.first("caption").alias("caption"),
+        F.first("phash").alias("phash"),
+        F.length(F.first("image_bytes")).cast("long").alias("n_bytes"),
+        F.md5(F.first("image_bytes")).alias("bytes_md5"),
+        F.count(F.lit(1)).alias("n_pages"),
+        F.min("url").alias("first_url"),
+        F.bool_and(caption_ok).alias("_captions_ok"),
     )
     return (
-        parsed.where(F.col("image_id").isNotNull())
-        .groupBy("image_id")
-        .agg(
-            F.first("image_fmt").alias("fmt"),
-            F.first("image_w").alias("w"),
-            F.first("image_h").alias("h"),
-            F.first("caption").alias("caption"),
-            F.first("phash").alias("phash"),
-            F.length(F.first("image_bytes")).cast("long").alias("n_bytes"),
-            F.md5(F.first("image_bytes")).alias("bytes_md5"),
-            F.count(F.lit(1)).alias("n_pages"),
-            F.min("url").alias("first_url"),
-            F.bool_and("pixels_ok").alias("all_pixels_ok"),
-            F.min("psnr_db").alias("min_psnr_db"),
+        catalog.join(pixels, "image_id", "left")
+        .select(
+            *catalog.columns[:-1],
+            (F.col("_pixels_ok") & F.col("_captions_ok")).alias("all_pixels_ok"),
+            "min_psnr_db",
         )
         .orderBy("image_id")
     )
@@ -185,7 +210,7 @@ def q_search_results_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6/P7 search-results parse (1->n mapInPandas) over the seeded
     paginated search corpus — institution pages include the
     sub-institution exploder rows."""
-    from gepris_spark.operators.fetchparse import parse_search_stage
+    from gepris_spark.operators.search import parse_search_stage
     from gepris_spark.sources import corpus
 
     pages = spark.createDataFrame(
@@ -473,6 +498,7 @@ def q_frontier_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     without touching the engine's MERGE."""
     from gepris_spark import schemas
     from gepris_spark.operators.frontier import Frontier
+    from gepris_spark.operators.search import upsert_search_batch
     from gepris_spark.store.table import SnapshotStore
 
     store = SnapshotStore(tempfile.mkdtemp(prefix="gepris_cdc_"))
@@ -486,7 +512,7 @@ def q_frontier_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = "id long, context string, item string"
     batch1 = spark.createDataFrame([(i, ctx(i), item(i, 1)) for i in range(1, 31)], cols)
-    fr.upsert_search_batch(batch1, run_id=1)  # -> snapshot v1
+    upsert_search_batch(fr, batch1, run_id=1)  # -> snapshot v1
     checked = spark.createDataFrame(
         [(i, ctx(i)) for i in range(1, 31)], "item_id long, context string"
     )
@@ -497,7 +523,7 @@ def q_frontier_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(i, ctx(i), item(i, 1)) for i in range(31, 37)],
         cols,
     )
-    fr.upsert_search_batch(batch2, run_id=2)  # -> snapshot v3
+    upsert_search_batch(fr, batch2, run_id=2)  # -> snapshot v3
 
     return store.changes(
         spark, "frontier", schemas.FRONTIER, 2, 3, keys=["id", "context"]

@@ -17,7 +17,7 @@ identically in plan and SQL):
   URL rewrite rules (trailing slash, session-id params) from pages
   whose content digests collide, so the frontier canonicalizes them
   BEFORE fetching (reference analogue: extract_id/is_gepris_path
-  canonicalization, functions/canonical.py:39).
+  canonicalization, functions/canonical.py).
 * `graph_hits` — Kleinberg hub/authority scoring over the bipartite
   order graph, the second link-analysis priority signal next to
   `graph_pagerank`; fixed iterations with integer mass normalization

@@ -11,7 +11,6 @@ Table lineage to the reference's Postgres schema
 * FRONTIER      <- available_items        (dfg-gepris.sql:22-32)
 * HISTORY       <- details_items_history  (dfg-gepris.sql:34-45)
 * RUNS          <- spider_runs            (dfg-gepris.sql:11-20)
-* DATA_MONITOR  <- data_monitor           (dfg-gepris.sql:143-161)
 
 IMAGES is mandated by BASELINE.json input_hint:
 (image_id:string, bytes:binary, w:int32, h:int32, fmt:string,
@@ -23,12 +22,10 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 CONTEXTS = ["projekt", "person", "institution"]
-LANGUAGES = ["de", "en"]
 # Priority rank for the frontier queue ("ordered by GEPRIS item type"):
 # projekt gets the largest daily crawl budget in the reference cron
 # (docker/scheduler_cronfile:6-33), so it ranks first.
 CONTEXT_PRIORITY = {"projekt": 0, "person": 1, "institution": 2}
-DETAIL_STATUSES = ["success", "error", "moved"]
 
 # ---------------------------------------------------------------- frontier
 FRONTIER = T.StructType(
@@ -66,32 +63,6 @@ RUNS = T.StructType(
     ]
 )
 
-# ------------------------------------------------------------------- seeds
-SEEDS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("context", T.StringType(), True),
-        T.StructField("item_id", T.LongType(), True),
-        T.StructField("language", T.StringType(), False),
-        T.StructField("priority_type", T.IntegerType(), True),
-        T.StructField("recency_ts", T.TimestampType(), True),
-        T.StructField("host", T.StringType(), False),
-    ]
-)
-
-# ------------------------------------------------------------------- pages
-# Synthetic fetched-page corpus standing in for live HTTP (FIXTURES.md §3).
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("language", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("html", T.StringType(), True),
-        T.StructField("embedded_image_ids", T.ArrayType(T.StringType()), True),
-        T.StructField("fetch_cost_ms", T.IntegerType(), True),
-    ]
-)
-
 # ------------------------------------------------------------------ images
 IMAGES = T.StructType(
     [
@@ -102,28 +73,6 @@ IMAGES = T.StructType(
         T.StructField("fmt", T.StringType(), True),
         T.StructField("caption", T.StringType(), True),
         T.StructField("phash", T.LongType(), True),
-    ]
-)
-
-# ------------------------------------------------------------ data_monitor
-DATA_MONITOR = T.StructType(
-    [
-        T.StructField("run_ended_at", T.TimestampType(), True),
-        T.StructField("last_update", T.DateType(), True),
-        T.StructField("last_approval", T.DateType(), True),
-        T.StructField("finished_project_count", T.LongType(), True),
-        T.StructField("project_count", T.LongType(), True),
-        T.StructField("person_count", T.LongType(), True),
-        T.StructField("institution_count", T.LongType(), True),
-        T.StructField("humanities_count", T.LongType(), True),
-        T.StructField("life_count", T.LongType(), True),
-        T.StructField("natural_count", T.LongType(), True),
-        T.StructField("engineering_count", T.LongType(), True),
-        T.StructField("infrastructure_count", T.LongType(), True),
-        T.StructField("research_infrastructure_count", T.LongType(), True),
-        T.StructField("gepris_version", T.StringType(), True),
-        T.StructField("current_index_version", T.StringType(), True),
-        T.StructField("current_index_date", T.TimestampType(), True),
     ]
 )
 
@@ -159,8 +108,6 @@ PARSED = T.StructType(
         T.StructField("image_h", T.IntegerType(), True),
         T.StructField("image_fmt", T.StringType(), True),
         T.StructField("phash", T.LongType(), True),
-        T.StructField("psnr_db", T.DoubleType(), True),
-        T.StructField("pixels_ok", T.BooleanType(), True),
         # projekt result-tab link (spiders/details.py:91-96: exactly one
         # li#tabbutton2 > a triggers the 3rd/4th fetch of the chain)
         T.StructField("result_href", T.StringType(), True),

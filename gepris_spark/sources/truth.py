@@ -221,7 +221,7 @@ def fallback_truth(spark, n: int = 40, seed: int = 42) -> pd.DataFrame:
     """Expected q_person_details_fallback rows: route (cache hit vs
     live), rotated UA/proxy, parse status and attribute count — all
     from generator formulas."""
-    from gepris_spark.functions.canonical import format_proxy_str
+    from gepris_spark.functions.parity import format_proxy_str
 
     seeds = corpus.gen_seeds_pdf({"person": n}, seed=seed)
     uniq = seeds.dropna(subset=["item_id"])

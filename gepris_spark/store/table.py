@@ -81,6 +81,20 @@ def _link_tree(src_root: str, dst_root: str) -> None:
                 shutil.copy2(src, dst)
 
 
+def replace_durably(tmp: str, path: str) -> None:
+    """Rename a fully written `tmp` over `path` so that an OS crash
+    leaves the old file or the new one, never an empty one: fsync the
+    file, rename it, then fsync the directory that holds the rename."""
+    with open(tmp, "rb") as fh:
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    dir_fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
+
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Replace a small metadata file in one step: write a tmp file
     beside it, then rename it over the old one."""
@@ -88,7 +102,19 @@ def _write_json_atomic(path: str, obj: dict) -> None:
     tmp = path + ".tmp"
     with open(tmp, "w") as fh:
         json.dump(obj, fh)
-    os.replace(tmp, path)
+    replace_durably(tmp, path)
+
+
+def _read_json(path: str):
+    """A metadata file's content, or None when it does not exist. Any
+    other failure (a zero-length or torn file) raises: reading it as
+    absent would hide committed data and let the next commit reuse or
+    drop it."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
 
 
 def _parquet_bytes(path: str) -> int:
@@ -186,11 +212,8 @@ class SnapshotStore:
         return os.path.join(self._table_dir(name), f"v{version}")
 
     def current_version(self, name: str) -> int | None:
-        try:
-            with open(self._version_file(name)) as fh:
-                return int(json.load(fh)["version"])
-        except (OSError, ValueError, KeyError):
-            return None
+        record = _read_json(self._version_file(name))
+        return None if record is None else int(record["version"])
 
     def _snapshot_log(self, name: str) -> str:
         return os.path.join(self._table_dir(name), "_SNAPSHOTS")
@@ -281,11 +304,7 @@ class SnapshotStore:
     def bucket_layout(self, name: str) -> dict | None:
         """Committed partition spec (Iceberg partition-spec metadata):
         {"key_col": ..., "n_buckets": ...}, or None before first commit."""
-        try:
-            with open(self._layout_file(name)) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
+        return _read_json(self._layout_file(name))
 
     def _commit_layout(self, name: str, key_col: str, n_buckets: int, allow_change: bool) -> None:
         """Record the bucket spec; refuse a silent spec change on the
@@ -557,11 +576,10 @@ class SnapshotStore:
         return os.path.join(self._table_dir(name), "_COMPACT")
 
     def _compact_manifest(self, name: str) -> dict:
-        try:
-            with open(self._compact_manifest_file(name)) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
+        manifest = _read_json(self._compact_manifest_file(name))
+        if manifest is None:
             return {"segment": None, "batch_ids": [], "seq": 0}
+        return manifest
 
     def _live_batch_dirs(self, name: str) -> list[int]:
         """Batch ids whose append committed: a `batch_id=N` dir without

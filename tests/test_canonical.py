@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gepris_spark.functions import canonical as C
+from gepris_spark.functions import parity as P
 
 GOLDEN_STRINGS = [
     "  hello   world  ",
@@ -43,7 +44,7 @@ def _run_str(spark, col_expr, values):
 
 
 def test_clean_string_parity(spark):
-    got = _run_str(spark, C.clean_string, GOLDEN_STRINGS)
+    got = _run_str(spark, P.clean_string, GOLDEN_STRINGS)
     expected = [py_clean_string(s) for s in GOLDEN_STRINGS]
     assert got == expected
 
@@ -94,17 +95,17 @@ def test_canonical_url_and_host(spark):
 
 def test_filters_and_prefixes(spark):
     vals = ["", "(", ")", "x", "Keine Zusammenfassung vorhanden", "No abstract available"]
-    got = _run_str(spark, lambda c: C.filter_empty_string(c), vals)
+    got = _run_str(spark, lambda c: P.filter_empty_string(c), vals)
     assert got == [None, "(", ")", "x", vals[4], vals[5]]
-    got = _run_str(spark, lambda c: C.filter_parenthesis(c), vals)
+    got = _run_str(spark, lambda c: P.filter_parenthesis(c), vals)
     assert got == ["", None, None, "x", vals[4], vals[5]]
-    got = _run_str(spark, lambda c: C.filter_no_abstracts_found(c), vals)
+    got = _run_str(spark, lambda c: P.filter_no_abstracts_found(c), vals)
     assert got == ["", "(", ")", "x", None, None]
-    got = _run_str(spark, C.remove_http_prefix, ["http://x.de/a", "https://y.de", "ftp://z"])
+    got = _run_str(spark, P.remove_http_prefix, ["http://x.de/a", "https://y.de", "ftp://z"])
     assert got == ["x.de/a", "y.de", "ftp://z"]
-    got = _run_str(spark, C.remove_crucifix_suffix, ["Meier (†)", "Meier(†)", "(†)Meier"])
+    got = _run_str(spark, P.remove_crucifix_suffix, ["Meier (†)", "Meier(†)", "(†)Meier"])
     assert got == ["Meier ", "Meier", "(†)Meier"]
-    got = _run_str(spark, C.has_crucifix_suffix, ["Meier(†)", "Meier"])
+    got = _run_str(spark, P.has_crucifix_suffix, ["Meier(†)", "Meier"])
     assert got == [True, False]
 
 
@@ -116,23 +117,23 @@ def test_gender_and_split(spark):
         "Privatdozentin Dr. Ana": "female",
         "Dr. Kim": "unknown",
     }
-    got = _run_str(spark, C.guess_gender_from_title, list(cases))
+    got = _run_str(spark, P.guess_gender_from_title, list(cases))
     assert got == list(cases.values())
     df = spark.createDataFrame([("a, b, c",), ("x",)], "s string")
-    got = [r[0] for r in df.select(C.split_comma_space(F.col("s"))).collect()]
+    got = [r[0] for r in df.select(P.split_comma_space(F.col("s"))).collect()]
     assert got == [["a", "b", "c"], ["x"]]
 
 
 def test_format_proxy(spark):
-    got = _run_str(spark, C.format_proxy, ["1.2.3.4:8080:user:pw"])
+    got = _run_str(spark, P.format_proxy, ["1.2.3.4:8080:user:pw"])
     assert got == ["http://user:pw@1.2.3.4:8080"]
 
 
 def test_build_url_and_details_url(spark):
     df = spark.createDataFrame([(5, "projekt")], "id long, ctx string")
     row = df.select(
-        C.details_url(F.col("id"), F.col("ctx")).alias("u"),
-        C.build_url(
+        P.details_url(F.col("id"), F.col("ctx")).alias("u"),
+        P.build_url(
             "https://gepris.dfg.de/gepris/OCTOPUS",
             {"context": F.col("ctx"), "task": "doSearchExtended", "index": "0"},
         ).alias("b"),
@@ -144,8 +145,8 @@ def test_build_url_and_details_url(spark):
 def test_dates(spark):
     df = spark.createDataFrame([("18.10.2021", "Mon Oct 18 14:12:00 CEST 2021")], "d string, t string")
     row = df.select(
-        C.to_german_date(F.col("d")).alias("date"),
-        C.parse_monitor_timestamp(F.col("t")).alias("ts"),
+        P.to_german_date(F.col("d")).alias("date"),
+        P.parse_monitor_timestamp(F.col("t")).alias("ts"),
     ).collect()[0]
     assert str(row["date"]) == "2021-10-18"
     # 14:12 Berlin DST (CEST=UTC+2) -> 12:12 UTC
@@ -173,5 +174,5 @@ def test_drop_attribute_keys(spark):
         [({"Antragsteller": ["a"], "Fachliche Zuordnung": ["b"]},)],
         "m map<string, array<string>>",
     )
-    got = df.select(C.drop_attribute_keys(F.col("m"), "Antragsteller").alias("o")).collect()[0]["o"]
+    got = df.select(P.drop_attribute_keys(F.col("m"), "Antragsteller").alias("o")).collect()[0]["o"]
     assert got == {"Fachliche Zuordnung": ["b"]}

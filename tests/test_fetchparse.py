@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from gepris_spark.operators import fetchparse
 from gepris_spark.operators.htmldom import parse_html
+from gepris_spark.operators.multimodal import decode_verify_stage
 from gepris_spark.sources import corpus
 
 
@@ -17,14 +18,7 @@ from gepris_spark.sources import corpus
 def parsed_df(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
     fetched = pages.select("url", "language", "html")
-
-    def ref_pixels_fn(image_id: str):
-        return corpus.ref_pixels(int(image_id[3:]))
-
-    def caption_fn(image_id: str):
-        return corpus.caption_for(int(image_id[3:]))
-
-    out = fetchparse.parse_stage(fetched, ref_pixels_fn, caption_fn)
+    out = fetchparse.parse_stage(fetched)
     out.persist()
     out.count()
     return out
@@ -96,15 +90,36 @@ def test_success_rows_have_attributes_and_trees(parsed_df):
 
 
 def test_image_invariants_all_pass(parsed_df):
-    """input_hint: decoded-pixel allclose / PSNR>=40dB + caption equality."""
+    """input_hint: decoded-pixel allclose / PSNR>=40dB + caption
+    equality on every parsed page, the pixels through
+    decode_verify_stage over the emitted bytes."""
     ok = parsed_df.where(F.col("status") == "success")
-    n_img = ok.where(F.col("image_id").isNotNull()).count()
+    images = ok.where(F.col("image_id").isNotNull())
+    n_img = images.count()
     assert n_img > 50
-    bad = ok.where(F.col("image_id").isNotNull() & ~F.col("pixels_ok")).collect()
-    assert bad == [], f"{len(bad)} rows failed pixel/caption invariants: {bad[:3]}"
+    verified = decode_verify_stage(
+        images.select(
+            "image_id",
+            F.col("image_bytes").alias("bytes"),
+            F.col("image_w").alias("w"),
+            F.col("image_h").alias("h"),
+            F.col("image_fmt").alias("fmt"),
+            "phash",
+        ),
+        lambda image_id: corpus.ref_pixels(int(image_id[3:])),
+    ).collect()
+    assert len(verified) == n_img
+    bad = [r for r in verified if not (r["pixels_ok"] and r["phash_ok"])]
+    assert bad == [], f"{len(bad)} rows failed pixel invariants: {bad[:3]}"
     # lossless rows must have psnr null (infinite); lossy rows >= 40
-    lossy = ok.where(F.col("image_fmt") == "qdct")
-    assert lossy.where(F.col("psnr_db") < 40.0).count() == 0
+    lossy = [r["psnr_db"] for r in verified if r["fmt"] == "qdct" and r["psnr_db"] is not None]
+    assert not [p for p in lossy if p < 40.0]
+    bad_captions = [
+        (r["image_id"], r["caption"])
+        for r in images.select("image_id", "caption").collect()
+        if r["caption"] != fetchparse._clean(corpus.caption_for(int(r["image_id"][3:])))
+    ]
+    assert bad_captions == [], f"{len(bad_captions)} rows failed caption equality"
     phashes = ok.where(F.col("phash").isNotNull()).select("image_id", "phash").distinct()
     # phash must be consistent per image across pages
     assert phashes.groupBy("image_id").count().where(F.col("count") > 1).count() == 0

@@ -12,6 +12,7 @@ from gepris_spark import schemas
 from gepris_spark.operators.frontier import Frontier
 from gepris_spark.operators.history import History
 from gepris_spark.operators import views
+from gepris_spark.operators.search import mark_vanished, upsert_search_batch
 from gepris_spark.store.table import SnapshotStore
 
 
@@ -70,14 +71,14 @@ def test_upsert_search_and_details_sequence(spark, store_dir):
     def batch(item_id, item):
         return spark.createDataFrame([(item_id, "projekt", item)], "id long, context string, item string")
 
-    fr.upsert_search_batch(batch(1, item_p1), run_id=1)
+    upsert_search_batch(fr, batch(1, item_p1), run_id=1)
     assert _frontier_rows(fr) == {(1, "projekt"): (1, 1, item_p1, None, True)}
 
-    fr.upsert_search_batch(batch(1, item_p1), run_id=2)  # same item: seen bumps, change stays
+    upsert_search_batch(fr, batch(1, item_p1), run_id=2)  # same item: seen bumps, change stays
     assert _frontier_rows(fr) == {(1, "projekt"): (2, 1, item_p1, None, True)}
 
     item_p3 = '{"id": 1, "name_de": "p3"}'
-    fr.upsert_search_batch(batch(1, item_p3), run_id=3)  # changed item
+    upsert_search_batch(fr, batch(1, item_p3), run_id=3)  # changed item
     assert _frontier_rows(fr) == {(1, "projekt"): (3, 3, item_p3, None, True)}
 
     ids = spark.createDataFrame([(1, "projekt")], "item_id long, context string")
@@ -89,7 +90,7 @@ def test_upsert_search_and_details_sequence(spark, store_dir):
     assert _frontier_rows(fr)[(2, "projekt")] == (None, None, None, 4, False)
 
     item2 = '{"id": 2, "name_de": "p1"}'
-    fr.upsert_search_batch(batch(2, item2), run_id=5)
+    upsert_search_batch(fr, batch(2, item2), run_id=5)
     # change detected (NULL -> item) but seen was NULL -> needed stays False
     assert _frontier_rows(fr)[(2, "projekt")] == (5, 5, item2, 4, False)
 
@@ -103,11 +104,13 @@ def test_discover_new_persons(spark, store_dir):
         spark,
         [(1, "search_results", "projekt", 1), (2, "search_results", "person", 1), (3, "details", "projekt", 1)],
     )
-    fr.upsert_search_batch(
+    upsert_search_batch(
+        fr,
         spark.createDataFrame([(100, "projekt", '{"id": 100, "name_de": "test"}')], "id long, context string, item string"),
         run_id=1,
     )
-    fr.upsert_search_batch(
+    upsert_search_batch(
+        fr,
         spark.createDataFrame([(201, "person", '{"id": 201, "name_de": "test"}')], "id long, context string, item string"),
         run_id=2,
     )
@@ -130,10 +133,11 @@ def test_mark_vanished(spark, store_dir):
     """test_database.py:126-145 — Q7."""
     fr = Frontier(spark, SnapshotStore(store_dir))
     item = '{"id": 1, "name_de": "p1"}'
-    fr.upsert_search_batch(
+    upsert_search_batch(
+        fr,
         spark.createDataFrame([(1, "projekt", item)], "id long, context string, item string"), run_id=1
     )
-    fr.mark_vanished("projekt", run_id=2)
+    mark_vanished(fr, "projekt", run_id=2)
     assert _frontier_rows(fr) == {(1, "projekt"): (1, 2, None, None, True)}
 
 

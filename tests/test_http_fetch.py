@@ -159,7 +159,7 @@ def test_aimd_over_real_http_matches_replay_oracle(spark, tmp_path):
 
     import pandas as pd
 
-    from gepris_spark.operators.politeness import AIMD_MIN_DELAY_MS
+    from gepris_spark.operators.politeness import DEFAULT_DELAY_MS
     from gepris_spark.replay import replay
     from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
 
@@ -214,7 +214,7 @@ def test_aimd_over_real_http_matches_replay_oracle(spark, tmp_path):
         slow_costs = [c for u, c in measured.items() if "localhost" in u]
         fast_costs = [c for u, c in measured.items() if "localhost" not in u]
         assert min(slow_costs) >= int(slow_s * 1000)
-        assert max(fast_costs) < AIMD_MIN_DELAY_MS
+        assert max(fast_costs) < DEFAULT_DELAY_MS
 
         lat_df = spark.createDataFrame(
             [(u, int(c)) for u, c in measured.items()], "url string, fetch_cost_ms long"
@@ -238,8 +238,8 @@ def test_aimd_over_real_http_matches_replay_oracle(spark, tmp_path):
         assert got == want and len(got) == len(rows)
 
         state = {r["host"]: r["delay_ms"] for r in engine.host_state().collect()}
-        assert state["localhost"] > AIMD_MIN_DELAY_MS  # stretched by real latency
-        assert state["127.0.0.1"] == AIMD_MIN_DELAY_MS  # clamped at the floor
+        assert state["localhost"] > DEFAULT_DELAY_MS  # stretched by real latency
+        assert state["127.0.0.1"] == DEFAULT_DELAY_MS  # clamped at the floor
     finally:
         srv.shutdown()
 

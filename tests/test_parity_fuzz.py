@@ -12,6 +12,7 @@ import random
 from pyspark.sql import functions as F
 
 from gepris_spark.functions import canonical as C
+from gepris_spark.functions import parity as P
 
 
 def _python_clean(text: str) -> str:
@@ -46,7 +47,7 @@ def test_clean_string_matches_python_semantics(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(corpus)], "i int, s string")
     got = {
         r["i"]: r["c"]
-        for r in df.select("i", C.clean_string(F.col("s")).alias("c")).collect()
+        for r in df.select("i", P.clean_string(F.col("s")).alias("c")).collect()
     }
     mismatches = [
         (corpus[i], got[i], _python_clean(corpus[i]))

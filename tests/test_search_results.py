@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gepris_spark.operators import fetchparse
+from gepris_spark.operators import search
 from gepris_spark.operators.frontier import Frontier
 from gepris_spark.sources import corpus
 from gepris_spark.store.table import SnapshotStore
@@ -21,7 +21,7 @@ def search_parsed(spark):
     for context in ("projekt", "person", "institution"):
         pages = corpus.gen_search_pages_pdf(context, n_items=120, page_size=50, seed=42)
         df = spark.createDataFrame(pages)
-        parsed = fetchparse.parse_search_stage(df)
+        parsed = search.parse_search_stage(df)
         parsed.persist().count()
         out[context] = (pages, parsed)
     return out
@@ -86,13 +86,13 @@ def test_search_sweep_upserts_and_vanish(spark, tmp_path):
 
     def sweep(n_items, run_id):
         pages = corpus.gen_search_pages_pdf("projekt", n_items=n_items, page_size=50, seed=42)
-        parsed = fetchparse.parse_search_stage(spark.createDataFrame(pages))
+        parsed = search.parse_search_stage(spark.createDataFrame(pages))
         batch = parsed.select(
             "item_id",
             F.to_json(F.struct("name_de", "attributes")).alias("item"),
         ).select(F.col("item_id").alias("id"), F.lit("projekt").alias("context"), "item")
-        frontier.upsert_search_batch(batch, run_id)
-        frontier.mark_vanished("projekt", run_id)
+        search.upsert_search_batch(frontier, batch, run_id)
+        search.mark_vanished(frontier, "projekt", run_id)
 
     sweep(100, run_id=1)
     n_after_1 = frontier.read().count()

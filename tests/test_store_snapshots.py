@@ -419,6 +419,34 @@ def test_compact_appends_noop_when_nothing_to_fold(spark, store_dir):
 
 
 
+def test_zero_length_version_file_raises(spark, store_dir):
+    """A zero-length `_VERSION` (a rename whose data never reached the
+    disk) is a fault, not an empty table: read as empty, the next
+    commit would take version 1 again and delete the committed v1."""
+    store = SnapshotStore(store_dir)
+    store.commit_snapshot(_df(spark, [(1, "a")]), "t")
+    open(os.path.join(store_dir, "t", "_VERSION"), "w").close()
+    with pytest.raises(ValueError):
+        store.read(spark, "t", SCHEMA)
+    with pytest.raises(ValueError):
+        store.commit_snapshot(_df(spark, [(2, "b")]), "t")
+    v1 = os.path.join(store_dir, "t", "v1")
+    assert _vals(spark.read.schema(SCHEMA).parquet(v1)) == {(1, "a")}
+
+
+def test_zero_length_compact_manifest_raises(spark, store_dir):
+    """A zero-length `_COMPACT` must not hide the folded batches: read
+    as no manifest, every batch in the segment would vanish from
+    `read_appends`."""
+    store = SnapshotStore(store_dir)
+    for b in range(1, 4):
+        store.append_batch(_df(spark, [(b, f"v{b}")]), "led", b)
+    store.compact_appends(spark, "led", SCHEMA, keep_last=1)
+    open(os.path.join(store_dir, "led", "_COMPACT"), "w").close()
+    with pytest.raises(ValueError):
+        store.read_appends(spark, "led", SCHEMA)
+
+
 def _append_ten_rows_per_batch(spark, store, n_batches):
     for b in range(n_batches):
         store.append_batch(

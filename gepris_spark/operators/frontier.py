@@ -41,7 +41,7 @@ class Frontier:
 
     # ------------------------------------------------------------- state
     def read(self) -> DataFrame:
-        return self.store.read_bucketed(self.spark, TABLE, schemas.FRONTIER)
+        return self.store.read(self.spark, TABLE, schemas.FRONTIER)
 
     def commit(self, df: DataFrame) -> int:
         """Full-table rewrite path (sweep updates that touch every

@@ -85,7 +85,11 @@ def _parse_search_page(url: str, context: str, html: str) -> list[dict]:
                                     for v in value
                                 ]
                             else:
-                                attrs[key] = [value if isinstance(value, str) else json.dumps(value)]
+                                attrs[key] = [
+                                    value
+                                    if isinstance(value, str)
+                                    else json.dumps(value, ensure_ascii=False)
+                                ]
                 base["attributes"] = attrs
                 items.append(base)
             elif context == "person":

@@ -15,14 +15,14 @@ from Iceberg:
   write one subdirectory per batch id; replaying a batch overwrites its
   own subdirectory only, so re-runs are exactly-once.
 * **snapshot lifecycle** (Iceberg table-maintenance parity): a
-  `_SNAPSHOTS` commit log per table, time-travel reads
-  (`read(..., version=N)`), `rollback()` that — like Iceberg's
-  `rollback_to_snapshot` — commits a NEW version whose content is the
-  old snapshot (hardlinks, O(1) per file), and `expire_snapshots()` so
-  a long crawl does not accumulate one full table copy per micro-batch.
-  Expiration is safe under the hardlink layout: deleting an old
-  version directory only decrements link counts on files the newer
-  snapshots still reference.
+  history (`snapshots()`: the version dirs up to `_VERSION`, no side
+  log), time-travel reads (`read(..., version=N)`), `rollback()` that
+  — like Iceberg's `rollback_to_snapshot` — commits a NEW version
+  whose content is the old snapshot (hardlinks, O(1) per file), and
+  `expire_snapshots()` so a long crawl does not accumulate one full
+  table copy per micro-batch. Expiration is safe under the hardlink
+  layout: deleting an old version directory only decrements link
+  counts on files the newer snapshots still reference.
 
 At cluster scale you swap this class for an Iceberg catalog: the MERGE
 becomes `MERGE INTO` SQL with partition pruning, appends become
@@ -44,24 +44,11 @@ import functools
 import json
 import os
 import shutil
-import time
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Schema evolution on read (Iceberg add/drop-column semantics):
-    columns in `schema` missing from the stored files surface as typed
-    nulls — old snapshots stay readable after the table grows a column
-    — and stored columns no longer in `schema` are dropped. Purely a
-    projection; no rewrite of existing snapshots."""
-    for field in schema.fields:
-        if field.name not in df.columns:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df.select(*schema.fieldNames())
 
 
 def _link_tree(src_root: str, dst_root: str) -> None:
@@ -129,14 +116,13 @@ def merge_upsert(
     keys: list[str],
     matched_update: Callable[[DataFrame, DataFrame], dict[str, Column]],
     not_matched_insert: Callable[[DataFrame], dict[str, Column]] | None = None,
-    matched_condition: Callable[[DataFrame, DataFrame], Column] | None = None,
     matched_delete: Callable[[DataFrame, DataFrame], Column] | None = None,
     not_matched_condition: Callable[[DataFrame], Column] | None = None,
 ) -> DataFrame:
     """Iceberg `MERGE INTO target USING source ON keys` as DataFrame ops.
 
     WHEN MATCHED [AND matched_delete] THEN DELETE
-    WHEN MATCHED [AND matched_condition] THEN UPDATE SET matched_update
+    WHEN MATCHED THEN UPDATE SET matched_update
     WHEN NOT MATCHED [AND not_matched_condition] THEN INSERT
       not_matched_insert (or source columns).
 
@@ -162,8 +148,6 @@ def merge_upsert(
     is_insert = F.col(f"t.{keys[0]}").isNull()
     has_source = F.col(f"s.{keys[0]}").isNotNull()
     update_cond = has_source & ~is_insert
-    if matched_condition is not None:
-        update_cond = update_cond & matched_condition(t, s)
 
     updates = matched_update(t, s)
     inserts = (
@@ -183,7 +167,7 @@ def merge_upsert(
         out_cols.append(col.cast(field.dataType).alias(name))
     keep = F.lit(True)
     if matched_delete is not None:
-        drop_matched = has_source & ~is_insert & F.coalesce(matched_delete(t, s), F.lit(False))
+        drop_matched = update_cond & F.coalesce(matched_delete(t, s), F.lit(False))
         keep = keep & ~drop_matched
     if not_matched_condition is not None:
         keep = keep & F.when(
@@ -215,9 +199,6 @@ class SnapshotStore:
         record = _read_json(self._version_file(name))
         return None if record is None else int(record["version"])
 
-    def _snapshot_log(self, name: str) -> str:
-        return os.path.join(self._table_dir(name), "_SNAPSHOTS")
-
     def _resolve_version(self, name: str, version: int | None) -> int | None:
         """Current pointer, or an explicit time-travel version — which
         must still be on disk (not expired, not a never-committed
@@ -244,13 +225,36 @@ class SnapshotStore:
         schema: T.StructType,
         version: int | None = None,
     ) -> DataFrame:
-        """Read the current snapshot, or time-travel to `version`
-        (Iceberg `VERSION AS OF`). Explicit versions must still exist;
+        """Read the current snapshot of a plain or bucketed table, or
+        time-travel to `version` (Iceberg `VERSION AS OF`), returning
+        exactly `schema`'s columns. Explicit versions must still exist;
         the default read of an empty table returns an empty frame."""
         version = self._resolve_version(name, version)
         if version is None:
             return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(self._version_dir(name, version))
+        return self._scan(spark, name, version, schema, None)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        name: str,
+        version: int,
+        schema: T.StructType,
+        buckets: list[int] | None,
+    ) -> DataFrame:
+        """The one reader of a snapshot dir: exactly `schema`'s columns,
+        pruned to the `_bucket=N` dirs in `buckets` unless it is None.
+        After a schema evolution a dir mixes files with and without a
+        new column (untouched buckets are hardlinks); the explicit
+        schema null-fills it file by file, Iceberg's read-time
+        add-column semantics, where inference would pick one footer."""
+        read_schema = T.StructType(
+            list(schema.fields) + [T.StructField(self.BUCKET_COL, T.IntegerType())]
+        )
+        df = spark.read.schema(read_schema).parquet(self._version_dir(name, version))
+        if buckets is not None:
+            df = df.where(F.col(self.BUCKET_COL).isin(buckets))
+        return df.select(*schema.fieldNames())
 
     def commit_snapshot(self, df: DataFrame, name: str, num_files: int | None = None) -> int:
         """Write the next snapshot version and atomically flip the pointer.
@@ -268,12 +272,7 @@ class SnapshotStore:
         if os.path.exists(path):
             shutil.rmtree(path)
         write(path)
-        record = {"version": version, "committed_at": time.time()}
-        _write_json_atomic(self._version_file(name), record)
-        # the pointer flip above IS the commit; the log line is metadata
-        # (snapshots() reconstructs a torn/lost line from the dir mtime)
-        with open(self._snapshot_log(name), "a") as fh:
-            fh.write(json.dumps(record) + "\n")
+        _write_json_atomic(self._version_file(name), {"version": version})
         return version
 
     # ----------------------------------------- bucketed mutable tables
@@ -282,21 +281,6 @@ class SnapshotStore:
     @staticmethod
     def bucket_expr(key_col: str, n_buckets: int) -> Column:
         return F.pmod(F.abs(F.xxhash64(F.col(key_col))), F.lit(n_buckets)).cast("int")
-
-    def _read_buckets(
-        self, spark: SparkSession, name: str, version: int, schema: T.StructType
-    ) -> DataFrame:
-        """Read a bucketed snapshot dir with an EXPLICIT schema (+ the
-        `_bucket` partition column). After a schema evolution the dir
-        mixes files with and without the new column (untouched buckets
-        are hardlinks of pre-evolution files); schema inference would
-        pick one footer at random and either miss the column or fail —
-        an explicit schema makes the reader null-fill per file, which
-        is exactly Iceberg's read-time add-column semantics."""
-        read_schema = T.StructType(
-            list(schema.fields) + [T.StructField(self.BUCKET_COL, T.IntegerType())]
-        )
-        return spark.read.schema(read_schema).parquet(self._version_dir(name, version))
 
     def _layout_file(self, name: str) -> str:
         return os.path.join(self._table_dir(name), "_LAYOUT")
@@ -324,21 +308,6 @@ class SnapshotStore:
                 "(commit_bucketed), as in Iceberg partition-spec evolution."
             )
         _write_json_atomic(self._layout_file(name), spec)
-
-    def read_bucketed(
-        self,
-        spark: SparkSession,
-        name: str,
-        schema: T.StructType,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Read a hash-bucketed table (partition dirs `_bucket=N`),
-        returning exactly `schema`'s columns; `version` time-travels."""
-        version = self._resolve_version(name, version)
-        if version is None:
-            return spark.createDataFrame([], schema)
-        df = self._read_buckets(spark, name, version, schema)
-        return _conform(df, schema)
 
     def commit_bucketed(
         self, df: DataFrame, name: str, key_col: str, n_buckets: int = 64
@@ -382,17 +351,12 @@ class SnapshotStore:
         self._commit_layout(name, key_col, n_buckets, allow_change=False)
         src = source.withColumn(self.BUCKET_COL, self.bucket_expr(key_col, n_buckets))
         touched = sorted(
-            r[self.BUCKET_COL] for r in src.select(self.BUCKET_COL).distinct().collect()
+            int(r[self.BUCKET_COL]) for r in src.select(self.BUCKET_COL).distinct().collect()
         )
         version = self.current_version(name)
         old_path = self._version_dir(name, version) if version is not None else ""
         if os.path.isdir(old_path):
-            target = _conform(
-                self._read_buckets(spark, name, version, schema).where(
-                    F.col(self.BUCKET_COL).isin([int(b) for b in touched])
-                ),
-                schema,
-            )
+            target = self._scan(spark, name, version, schema, touched)
         else:
             target = spark.createDataFrame([], schema)
         merged = merge_upsert(
@@ -418,25 +382,15 @@ class SnapshotStore:
 
     # ---------------------------------------------- snapshot lifecycle
     def snapshots(self, name: str) -> list[dict]:
-        """Iceberg-style snapshot history: every committed version still
-        on disk, oldest first, with commit time and a `current` flag.
-        Leftover dirs past the pointer (a killed, never-committed write)
-        are not snapshots and are excluded."""
+        """Iceberg-style snapshot history: every committed version dir
+        still on disk, oldest first, with its commit time (the dir's
+        mtime) and a `current` flag. Leftover dirs past the `_VERSION`
+        pointer (a killed, never-committed write) are not snapshots and
+        are excluded."""
         table_dir = self._table_dir(name)
         current = self.current_version(name)
         if current is None or not os.path.isdir(table_dir):
             return []
-        logged: dict[int, float] = {}
-        try:
-            with open(self._snapshot_log(name)) as fh:
-                for line in fh:
-                    try:
-                        rec = json.loads(line)
-                        logged[int(rec["version"])] = float(rec["committed_at"])
-                    except (ValueError, KeyError, TypeError):
-                        continue  # torn tail write from a killed run
-        except OSError:
-            pass
         out = []
         for entry in os.listdir(table_dir):
             path = os.path.join(table_dir, entry)
@@ -448,7 +402,7 @@ class SnapshotStore:
             out.append(
                 {
                     "version": v,
-                    "committed_at": logged.get(v, os.path.getmtime(path)),
+                    "committed_at": os.path.getmtime(path),
                     "current": v == current,
                 }
             )
@@ -535,15 +489,11 @@ class SnapshotStore:
         if not buckets:
             return spark.createDataFrame([], empty_out)
 
-        def side(version: int) -> DataFrame:
-            df = self._read_buckets(spark, name, version, schema)
-            # partition-column predicate -> Spark prunes the dirs
-            return _conform(df.where(F.col(self.BUCKET_COL).isin(buckets)), schema)
-
         # presence is decided by a marker column, not value columns
         # (all-null value rows are legal)
-        old = side(from_version).withColumn("_present_o", F.lit(True))
-        new = side(to_version).withColumn("_present_n", F.lit(True))
+        old, new = (self._scan(spark, name, v, schema, buckets) for v in (from_version, to_version))
+        old = old.withColumn("_present_o", F.lit(True))
+        new = new.withColumn("_present_n", F.lit(True))
         joined = old.alias("o").join(new.alias("n"), on=keys, how="full_outer")
         same = F.lit(True)
         for c in value_cols:

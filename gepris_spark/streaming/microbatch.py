@@ -74,7 +74,7 @@ HOST_STATE = T.StructType(
         # current token-bucket delay and the logical send time of its
         # next request. Without a latency feed the delay holds at its
         # floor and next_ms = next_seq * delay_ms, the fixed-delay
-        # schedule. NULL only in host rows written before these existed.
+        # schedule.
         T.StructField("delay_ms", T.LongType(), True),
         T.StructField("next_ms", T.LongType(), True),
     ]
@@ -110,32 +110,36 @@ class CrawlEngine:
         self.config = config or EngineConfig()
         self.store = SnapshotStore(root)
         self.bloom = BloomUrlSeen(root, n_buckets=self.config.bloom_buckets)
+        # the ledger is read once, here: the engine is its root's only
+        # writer. A last line with no newline is a row whose write never
+        # finished, so its batch did not commit; `_ledger_len` ends before it
+        try:
+            with open(self._ledger_path(), "rb") as fh:
+                data = fh.read()
+        except FileNotFoundError:
+            data = b""
+        self._ledger_len = data.rfind(b"\n") + 1
+        rows = [json.loads(line) for line in data[: self._ledger_len].splitlines()]
+        self._committed = {row["batch_id"]: row for row in rows}
 
     # ------------------------------------------------------------ state
     def _ledger_path(self) -> str:
         return os.path.join(self.root, "ledger.jsonl")
 
     def committed_batches(self) -> dict[int, dict]:
-        """{batch_id: ledger row} of every committed batch. A last line
-        with no newline is a row whose write and fsync never finished
-        (a run killed mid-write), so its batch did not commit."""
-        try:
-            with open(self._ledger_path()) as fh:
-                lines = fh.read().split("\n")
-        except OSError:
-            return {}
-        # lines[-1] is "" or that torn row
-        rows = [json.loads(line) for line in lines[:-1]]
-        return {row["batch_id"]: row for row in rows}
+        """{batch_id: ledger row} of every committed batch."""
+        return dict(self._committed)
 
     def _commit_ledger(self, row: dict) -> None:
-        with open(self._ledger_path(), "a+b") as fh:
+        line = (json.dumps(row) + "\n").encode()
+        with open(self._ledger_path(), "ab") as fh:
             # cut a torn row off, so this row starts on a line of its own
-            fh.seek(0)
-            fh.truncate(fh.read().rfind(b"\n") + 1)
-            fh.write((json.dumps(row) + "\n").encode())
+            fh.truncate(self._ledger_len)
+            fh.write(line)
             fh.flush()
             os.fsync(fh.fileno())
+        self._ledger_len += len(line)
+        self._committed[row["batch_id"]] = row
 
     def host_state(self) -> DataFrame:
         return self.store.read(self.spark, "host_state", HOST_STATE)
@@ -238,16 +242,15 @@ class CrawlEngine:
 
         # per-host token-bucket sequence, delay and next send time
         # carried across batches: the version the previous ledger row
-        # recorded, read once for the schedule join and the merge below
-        # (no previous row: empty; a row written before the field
-        # existed: the current version)
-        prior = self.committed_batches()
+        # recorded (none before the first batch), read once for the
+        # schedule join and the merge below
+        prior = self._committed
         prev = max((b for b in prior if b < batch_id), default=None)
         host_state = (
             self.spark.createDataFrame([], HOST_STATE)
             if prev is None
             else self.store.read(
-                self.spark, "host_state", HOST_STATE, prior[prev].get("host_state_version")
+                self.spark, "host_state", HOST_STATE, prior[prev]["host_state_version"]
             )
         )
         state = host_state.select(
@@ -274,11 +277,10 @@ class CrawlEngine:
                 joined, num_partitions=n_batch_parts, cache_registry=batch_caches
             )
             # logical send time continues from the host's next_ms with
-            # this batch's delay as the spacing (a host row without
-            # next_ms was written by the fixed-delay schedule:
-            # next_seq * delay_ms)
+            # this batch's delay as the spacing; a host new to the crawl
+            # starts at sequence 0, time 0
             base_seq = F.coalesce(F.col("_base_seq"), F.lit(0))
-            base_ms = F.coalesce(F.col("_base_ms"), base_seq * F.col("delay_ms"))
+            base_ms = F.coalesce(F.col("_base_ms"), F.lit(0))
             scheduled = scheduled.withColumn("host_seq", F.col("host_seq") + base_seq).withColumn(
                 "scheduled_ms", (base_ms + F.col("scheduled_ms")).cast("long")
             )
@@ -552,11 +554,10 @@ class CrawlEngine:
             n = seeds.agg(F.max("arrival_seq")).collect()[0][0]
             n = int(n) + 1 if n is not None else 0
         batch_size = self.config.batch_size
-        committed = self.committed_batches()
         results = []
         for batch_id, start in enumerate(range(0, n, batch_size)):
-            if batch_id in committed:
-                results.append(committed[batch_id])
+            if batch_id in self._committed:
+                results.append(self._committed[batch_id])
                 continue
             batch = seeds.where(
                 (F.col("arrival_seq") >= start) & (F.col("arrival_seq") < start + batch_size)

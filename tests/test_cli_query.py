@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from gepris_spark.cli import main
 
@@ -87,3 +88,26 @@ def test_crawl_rejects_n_salts():
     with pytest.raises(SystemExit) as exc:
         main(["crawl", "--seeds", "s", "--state", "t", "--n-salts", "8"])
     assert exc.value.code == 2
+
+
+def test_export_frontier_writes_the_frontier_fields(spark, tmp_path, capsys):
+    """`cli export --table frontier` writes exactly the
+    `schemas.FRONTIER` fields, in order: the store's `_bucket` partition
+    column stays inside the store."""
+    from gepris_spark import schemas
+    from gepris_spark.operators.frontier import Frontier
+    from gepris_spark.store.table import SnapshotStore
+
+    state = str(tmp_path / "state")
+    rows = [(i, "projekt", 1, 1, f'{{"n": {i}}}', 2, i % 2 == 0) for i in range(5)]
+    Frontier(spark, SnapshotStore(state)).commit(spark.createDataFrame(rows, schemas.FRONTIER))
+    out = str(tmp_path / "out")
+    assert main(["export", "--state", state, "--table", "frontier", "--out", out]) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] == 5
+    exported = []
+    for name in sorted(os.listdir(out)):
+        if name.endswith(".json"):
+            with open(os.path.join(out, name)) as fh:
+                exported += [json.loads(line) for line in fh]
+    assert [list(r) for r in exported] == [schemas.FRONTIER.fieldNames()] * 5
+    assert sorted(tuple(r.values()) for r in exported) == rows

@@ -5,6 +5,7 @@ run must resume byte-identically."""
 
 from __future__ import annotations
 
+import builtins
 import itertools
 import json
 import shutil
@@ -112,29 +113,25 @@ def test_resume_byte_identical(spark, tmp_path, seeds_pdf):
     assert _engine_visits(resumed) == _engine_visits(full)
 
 
-def test_resume_from_host_rows_without_delay(spark, tmp_path, seeds_pdf):
-    """Host-state rows with NULL delay_ms/next_ms, the shape a
-    fixed-delay engine wrote, resume on the fixed-delay schedule."""
-    seeds = spark.createDataFrame(seeds_pdf)
-    engine = CrawlEngine(spark, str(tmp_path / "nodelay"), EngineConfig(batch_size=25))
-    engine.run_seed_list(seeds, max_arrival=49)
-    # that engine's ledger rows did not record a host-state version, so
-    # the next batch reads the current one: the rows planted below
+def test_batches_never_reread_the_ledger(spark, tmp_path, seeds_pdf, monkeypatch):
+    """The engine parses `ledger.jsonl` once, when it is built: running
+    batches on it opens the ledger only to append."""
+    engine = CrawlEngine(spark, str(tmp_path / "once"), EngineConfig(batch_size=25))
+    reads = []
+    real_open = builtins.open
+
+    def spy(file, mode="r", *args, **kwargs):
+        if str(file).endswith("ledger.jsonl") and ("r" in mode or "+" in mode):
+            reads.append(mode)
+        return real_open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    rows = engine.run_seed_list(spark.createDataFrame(seeds_pdf), max_arrival=74)
+    monkeypatch.undo()
+    assert [r["batch_id"] for r in rows] == [0, 1, 2]
+    assert reads == []
     with open(engine._ledger_path()) as fh:
-        rows = [json.loads(line) for line in fh]
-    with open(engine._ledger_path(), "w") as fh:
-        for row in rows:
-            del row["host_state_version"]
-            fh.write(json.dumps(row) + "\n")
-    no_delay = engine.host_state().select(
-        "host",
-        "next_seq",
-        F.lit(None).cast("long").alias("delay_ms"),
-        F.lit(None).cast("long").alias("next_ms"),
-    )
-    engine.store.commit_snapshot(no_delay, "host_state", num_files=1)
-    engine.run_seed_list(seeds)
-    _assert_match(engine, replay(_seed_rows(seeds_pdf), batch_size=25))
+        assert [json.loads(line) for line in fh] == rows
 
 
 class _Crash(Exception):

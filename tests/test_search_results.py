@@ -103,3 +103,31 @@ def test_search_sweep_upserts_and_vanish(spark, tmp_path):
     vanished = fr.where(F.col("last_available_item").isNull() & F.col("detail_check_needed"))
     seen_run2 = fr.where(F.col("last_available_seen") == 2)
     assert vanished.count() == n_after_1 - seen_run2.count()
+
+
+def test_projekt_single_link_ref_stores_the_details_bytes():
+    """A projekt search row whose attribute value is one non-ASCII link
+    ref stores the same bytes the details parse stores for that value:
+    the UTF-8 text, not `\\uXXXX` escapes."""
+    from gepris_spark.operators import fetchparse
+
+    pair = (
+        '<span class="name">Antragsteller</span>'
+        '<span class="value"><a href="/gepris/person/7">Jürgen Müller</a></span>'
+    )
+    search_page = (
+        '<html><body><div id="liste"><div><h2><a href="/gepris/projekt/1">Eintrag 1</a></h2>'
+        f'<div class="details"><div>{pair}</div></div></div></div></body></html>'
+    )
+    details_page = (
+        '<html lang="de"><head><title>Projekt</title></head><body>'
+        '<h2 class="h2-context-title">Projekt</h2><abbr>DFG</abbr>'
+        '<h1 class="facelift">Eintrag 1</h1>'
+        f'<div class="content_inside">{pair}</div></body></html>'
+    )
+    (row,) = search._parse_search_page("https://h/search", "projekt", search_page)
+    details = fetchparse._parse_one("https://h/gepris/projekt/1", details_page, "de", "projekt", 1)
+    assert row["attributes"]["Antragsteller"] == details["attributes"]["Antragsteller"]
+    assert row["attributes"]["Antragsteller"] == [
+        '{"value": "Jürgen Müller", "path": "/gepris/person/7"}'
+    ]

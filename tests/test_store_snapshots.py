@@ -115,7 +115,7 @@ def test_expire_safe_under_bucketed_hardlinks(spark, store_dir):
     )
     assert store.expire_snapshots("b", keep_last=1) == [1]
 
-    rows = {(r["id"], r["val"]) for r in store.read_bucketed(spark, "b", bucketed).collect()}
+    rows = {(r["id"], r["val"]) for r in store.read(spark, "b", bucketed).collect()}
     expected = {(i, f"old{i}") for i in range(1, 64)} | {(0, "new0")}
     assert rows == expected
 
@@ -316,7 +316,7 @@ def test_schema_evolution_add_and_drop_column(spark, store_dir):
     )
 
     # old snapshot, extended schema: new column is null, typed double
-    grown = store.read_bucketed(spark, "e", v2_schema)
+    grown = store.read(spark, "e", v2_schema)
     assert dict(grown.dtypes)["score"] == "double"
     assert {(r["id"], r["val"], r["score"]) for r in grown.collect()} == {
         (1, "a", None),
@@ -334,7 +334,7 @@ def test_schema_evolution_add_and_drop_column(spark, store_dir):
         matched_update=lambda t, s: {"val": s["val"], "score": s["score"]},
         n_buckets=4,
     )
-    merged = store.read_bucketed(spark, "e", v2_schema)
+    merged = store.read(spark, "e", v2_schema)
     assert {(r["id"], r["val"], r["score"]) for r in merged.collect()} == {
         (1, "a", None),
         (2, "b2", 0.5),
@@ -349,7 +349,7 @@ def test_schema_evolution_add_and_drop_column(spark, store_dir):
     assert delta == {(2, 0.5, "UPDATE_AFTER"), (3, 0.9, "INSERT")}
 
     # dropping a column is a projection on read
-    narrow = store.read_bucketed(
+    narrow = store.read(
         spark, "e", T.StructType([T.StructField("id", T.LongType())])
     )
     assert narrow.columns == ["id"]
@@ -542,7 +542,7 @@ def test_bucketed_merge_with_delete(spark, store_dir):
     )
     got = {
         r["id"]: r["val"]
-        for r in store.read_bucketed(spark, "d", schema).collect()
+        for r in store.read(spark, "d", schema).collect()
     }
     assert 2 not in got and 9 not in got
     assert got[3] == "V3" and got[8] == "V8"

@@ -199,3 +199,19 @@ def test_engine_grows_mid_crawl_and_resumes_exactly(spark, tmp_path):
     resumed = CrawlEngine(spark, root, config)
     resumed.run_seed_list(seeds)
     assert _visits(resumed) == want
+
+
+def test_zero_length_bucket_raises(spark, tmp_path):
+    """A zero-length bucket file (a save whose data never reached the
+    disk) is corrupt, not an empty bucket: `add_urls` and `filter_new`
+    raise rather than probe it as all-miss and pass seen urls as new."""
+    from pyspark.errors import PythonException
+
+    bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=1)
+    seen = _urls(spark, 0, 50)
+    bloom.add_urls(seen)
+    open(bloom._bucket_path(0), "w").close()
+    with pytest.raises(EOFError):
+        bloom.add_urls(_urls(spark, 50, 60), seen_urls=seen)
+    with pytest.raises(PythonException, match="EOFError"):
+        bloom.filter_new(seen, seen).count()

@@ -187,6 +187,7 @@ def cmd_export(args) -> int:
     from pyspark.sql import SparkSession
 
     from gepris_spark import schemas
+    from gepris_spark.operators.history import History
     from gepris_spark.store.table import SnapshotStore
 
     pre_existing = SparkSession.getActiveSession()
@@ -195,7 +196,7 @@ def cmd_export(args) -> int:
     if args.table == "visit_log":
         df = store.read_appends(spark, "visit_log", schemas.VISIT_LOG)
     elif args.table == "history":
-        df = store.read_appends(spark, "history", schemas.HISTORY)
+        df = History(spark, store).read()
     elif args.table == "frontier":
         df = store.read(spark, "frontier", schemas.FRONTIER)
     else:

@@ -256,11 +256,9 @@ class SnapshotStore:
             df = df.where(F.col(self.BUCKET_COL).isin(buckets))
         return df.select(*schema.fieldNames())
 
-    def commit_snapshot(self, df: DataFrame, name: str, num_files: int | None = None) -> int:
-        """Write the next snapshot version and atomically flip the pointer.
-        `num_files` coalesces the write to that many files."""
-        out = df.coalesce(num_files) if num_files else df
-        return self._commit_next(name, out.write.mode("overwrite").parquet)
+    def commit_snapshot(self, df: DataFrame, name: str) -> int:
+        """Write the next snapshot version and atomically flip the pointer."""
+        return self._commit_next(name, df.write.mode("overwrite").parquet)
 
     def _commit_next(self, name: str, write: Callable[[str], None]) -> int:
         """The one commit path of a versioned table: `write` fills the
@@ -662,8 +660,3 @@ class SnapshotStore:
         if manifest["segment"] and manifest["segment"] != seg_rel:
             shutil.rmtree(os.path.join(table_dir, manifest["segment"]), ignore_errors=True)
         return {"folded": folded_ids, "segment": seg_rel, "rows": int(rows)}
-
-    def drop(self, name: str) -> None:
-        path = self._table_dir(name)
-        if os.path.exists(path):
-            shutil.rmtree(path)

@@ -8,21 +8,21 @@ Each micro-batch:
     -> URL-seen filter (bloom fast path + exact anti-join, A1)
     -> robots + politeness schedule (A4; per-host token bucket whose
        sequence numbers, delay and next send time persist across
-       batches in a host-state table; the delay adapts to a latency
-       feed when one is passed, AIMD)
+       batches in the ledger rows; the delay adapts to a latency feed
+       when one is passed, AIMD)
     -> visit-order assignment (the replay contract)
-    -> commit: three idempotent jobs run concurrently — visit-log append
-       (per-batch directory), bloom update, host-state snapshot — and
-       then the ledger row (K5 run ledger, database.py:214-229) is
+    -> commit: two idempotent jobs run concurrently — visit-log append
+       (per-batch directory) and bloom update — beside the collect of
+       the batch's host rows, and then the ledger row (K5 run ledger,
+       database.py:214-229), which carries every host's state, is
        appended and fsynced
 
 The ledger row is the commit point. A batch's prior state is pinned to
 the ledger, never to whatever its own commit jobs may have left: the
 exact seen set is the visit log of the batches before it, and the host
-state is the version the previous ledger row recorded. So a crash
-anywhere inside the commit, with any subset of the three jobs landed,
-re-runs the batch from the same inputs; stale bloom bits only cost an
-exact check.
+state is the `hosts` of the previous ledger row. So a crash anywhere
+inside the commit, with either job landed, re-runs the batch from the
+same inputs; stale bloom bits only cost an exact check.
 
 Deterministic: no wall clock anywhere in the data path — `scheduled_ms`
 is logical time. A killed run resumes from the ledger and reproduces
@@ -58,23 +58,24 @@ from gepris_spark.store.table import SnapshotStore
 # fits comfortably in executor memory at any batch size
 _ORDER_ROWS_PER_PARTITION = 8192
 
-# snapshots of the mutable state tables (frontier, host_state) kept
-# after each committed batch: the current one and its predecessor. Each
-# commit writes a new version dir (untouched frontier buckets are
-# hardlinks, host_state is one file), so without expiration a long
-# crawl accumulates one table copy per batch — at 10^10 urls that
-# dwarfs the live table.
+# frontier snapshots kept after each details batch, and visit_log
+# batches left live by compaction: the current one and its
+# predecessor. Each frontier commit writes a new version dir (untouched
+# buckets are hardlinks), so without expiration a long crawl
+# accumulates one table copy per batch — at 10^10 urls that dwarfs the
+# live table.
 _SNAPSHOT_RETENTION = 2
 
+# one host's politeness state, as each ledger row's `hosts` holds it:
+# {host: [next_seq, delay_ms, next_ms]}. delay_ms and next_ms are the
+# AIMD latency feedback (politeness.py AIMD notes): the host's current
+# token-bucket delay and the logical send time of its next request.
+# Without a latency feed the delay holds at its floor and
+# next_ms = next_seq * delay_ms, the fixed-delay schedule.
 HOST_STATE = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
         T.StructField("next_seq", T.LongType(), False),
-        # AIMD latency feedback (politeness.py AIMD notes): the host's
-        # current token-bucket delay and the logical send time of its
-        # next request. Without a latency feed the delay holds at its
-        # floor and next_ms = next_seq * delay_ms, the fixed-delay
-        # schedule.
         T.StructField("delay_ms", T.LongType(), True),
         T.StructField("next_ms", T.LongType(), True),
     ]
@@ -141,8 +142,13 @@ class CrawlEngine:
         self._ledger_len += len(line)
         self._committed[row["batch_id"]] = row
 
+    def _hosts_frame(self, hosts: dict[str, list[int]]) -> DataFrame:
+        return self.spark.createDataFrame([(h, *s) for h, s in hosts.items()], HOST_STATE)
+
     def host_state(self) -> DataFrame:
-        return self.store.read(self.spark, "host_state", HOST_STATE)
+        """Per-host politeness state of the last committed batch."""
+        last = max(self._committed, default=None)
+        return self._hosts_frame({} if last is None else self._committed[last]["hosts"])
 
     def visit_log(self) -> DataFrame:
         return self.store.read_appends(self.spark, "visit_log", schemas.VISIT_LOG)
@@ -241,19 +247,12 @@ class CrawlEngine:
         allowed = politeness.apply_robots(fresh, robots)
 
         # per-host token-bucket sequence, delay and next send time
-        # carried across batches: the version the previous ledger row
-        # recorded (none before the first batch), read once for the
-        # schedule join and the merge below
+        # carried across batches: the `hosts` of the previous ledger row
+        # (none before the first batch)
         prior = self._committed
         prev = max((b for b in prior if b < batch_id), default=None)
-        host_state = (
-            self.spark.createDataFrame([], HOST_STATE)
-            if prev is None
-            else self.store.read(
-                self.spark, "host_state", HOST_STATE, prior[prev]["host_state_version"]
-            )
-        )
-        state = host_state.select(
+        hosts = {} if prev is None else prior[prev]["hosts"]
+        state = self._hosts_frame(hosts).select(
             "host",
             F.col("next_seq").alias("_base_seq"),
             F.col("delay_ms").alias("_state_delay"),
@@ -323,22 +322,13 @@ class CrawlEngine:
                 politeness.aimd_next_delay(F.col("delay_ms"), F.col("_obs"), F.col("_lo")),
             )
         batch_state = batch_state.select("host", "next_seq", "delay_ms", "next_ms")
-        # hosts visited this batch have a strictly larger next_seq, so a
-        # struct-max keeps the batch row and leaves untouched hosts on
-        # their prior (next_seq, delay, next_ms) — one groupBy, no join
-        merged_state = (
-            host_state.unionByName(batch_state)
-            .groupBy("host")
-            .agg(F.max(F.struct("next_seq", "delay_ms", "next_ms")).alias("_s"))
-            .select("host", "_s.next_seq", "_s.delay_ms", "_s.next_ms")
-        )
-        # the three commit outputs are independent functions of the
+        # the three commit actions are independent functions of the
         # persisted `ordered` (visit-log append, bloom bitset update,
-        # host-state snapshot) and each is idempotent under batch
-        # replay, so run them as CONCURRENT Spark jobs — on a cluster
-        # the driver otherwise sits idle between three small actions;
-        # the ledger write below stays strictly after the group, so the
-        # ledger row implies all three landed
+        # the collect of this batch's host rows) and each is idempotent
+        # under batch replay, so run them as CONCURRENT Spark jobs — on
+        # a cluster the driver otherwise sits idle between three small
+        # actions; the ledger write below stays strictly after the
+        # group, so the ledger row implies both writes landed
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=3) as pool:
@@ -351,15 +341,13 @@ class CrawlEngine:
                     timed, "bloom_update",
                     lambda: self.bloom.add_urls(visits.select("url"), seen_urls=prior_seen),
                 ),
-                pool.submit(
-                    timed, "state_commit",
-                    lambda: self.store.commit_snapshot(merged_state, "host_state", num_files=1),
-                ),
+                pool.submit(timed, "state_commit", batch_state.collect),
             ]
             for f in futures:
                 f.result()
         urlseen_health = futures[1].result()
-        host_state_version = futures[2].result()
+        # hosts visited this batch take their new rows; the others carry over
+        hosts = {**hosts, **{r["host"]: list(r[1:]) for r in futures[2].result()}}
         candidates.unpersist()
         fresh.unpersist()
         for df in batch_caches:
@@ -375,15 +363,12 @@ class CrawlEngine:
             "n_invalid": (
                 int(n_input - n_valid_arrivals + (n_fresh - n_visited)) if detailed else -1
             ),
-            "host_state_version": host_state_version,
+            "hosts": dict(sorted(hosts.items())),
             "first_seq": int(first_seq),
             **urlseen_health,
             "stage_sec": timings,
         }
         self._commit_ledger(ledger_row)
-        # the batch is durable (ledger fsynced) — retire snapshot dirs
-        # older than the retention window; local fs metadata ops, no jobs
-        self.store.expire_snapshots("host_state", keep_last=_SNAPSHOT_RETENTION)
         if (
             self.config.compact_every
             and len(self.store._live_batch_dirs("visit_log")) >= self.config.compact_every

@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from gepris_spark.cli import main
 
 SF = "/root/testdata/sf0.001"
@@ -90,24 +92,32 @@ def test_crawl_rejects_n_salts():
     assert exc.value.code == 2
 
 
-def test_export_frontier_writes_the_frontier_fields(spark, tmp_path, capsys):
-    """`cli export --table frontier` writes exactly the
-    `schemas.FRONTIER` fields, in order: the store's `_bucket` partition
-    column stays inside the store."""
+@pytest.mark.parametrize("table", ["frontier", "history"])
+def test_export_writes_the_table_fields(spark, tmp_path, capsys, table):
+    """`cli export --table frontier|history` writes exactly the table's
+    schema fields, in order: the store's `_bucket` partition column and
+    the append ledger's `batch_id` column stay inside the store."""
     from gepris_spark import schemas
     from gepris_spark.operators.frontier import Frontier
     from gepris_spark.store.table import SnapshotStore
 
     state = str(tmp_path / "state")
-    rows = [(i, "projekt", 1, 1, f'{{"n": {i}}}', 2, i % 2 == 0) for i in range(5)]
-    Frontier(spark, SnapshotStore(state)).commit(spark.createDataFrame(rows, schemas.FRONTIER))
+    store = SnapshotStore(state)
+    if table == "frontier":
+        schema = schemas.FRONTIER
+        rows = [(i, "projekt", 1, 1, f'{{"n": {i}}}', 2, i % 2 == 0) for i in range(5)]
+        Frontier(spark, store).commit(spark.createDataFrame(rows, schema))
+    else:
+        schema = schemas.HISTORY
+        rows = [(i, "projekt", 1, f'{{"n": {i}}}', "success") for i in range(5)]
+        store.append_batch(spark.createDataFrame(rows, schema), "history", 1)
     out = str(tmp_path / "out")
-    assert main(["export", "--state", state, "--table", "frontier", "--out", out]) == 0
+    assert main(["export", "--state", state, "--table", table, "--out", out]) == 0
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] == 5
     exported = []
     for name in sorted(os.listdir(out)):
         if name.endswith(".json"):
             with open(os.path.join(out, name)) as fh:
                 exported += [json.loads(line) for line in fh]
-    assert [list(r) for r in exported] == [schemas.FRONTIER.fieldNames()] * 5
+    assert [list(r) for r in exported] == [schema.fieldNames()] * 5
     assert sorted(tuple(r.values()) for r in exported) == rows

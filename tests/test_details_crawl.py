@@ -13,7 +13,7 @@ from gepris_spark.operators.frontier import Frontier
 from gepris_spark.operators.history import History
 from gepris_spark.operators import views
 from gepris_spark.sources import corpus
-from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
+from gepris_spark.streaming.microbatch import _SNAPSHOT_RETENTION, CrawlEngine, EngineConfig
 
 
 @pytest.fixture(scope="module")
@@ -323,3 +323,8 @@ def test_details_rerun_keeps_history(spark, tmp_path):
     assert sum(first[0].values()) == scheduled.count()
     engine.run_details_batch(1, scheduled, pages, runs, max_retries=0)
     assert state() == first
+    # each batch's frontier expiry keeps the retention window, newest
+    # version current
+    versions = [s["version"] for s in engine.store.snapshots("frontier")]
+    assert len(versions) <= _SNAPSHOT_RETENTION
+    assert engine.store.current_version("frontier") == max(versions)

@@ -127,6 +127,10 @@ UNREFERENCED_OK = {
     "gepris_spark.operators.fetchparse.urllib_fetcher": (
         "the stdlib fetcher http_fetch_stage runs (tests/test_http_fetch)"
     ),
+    "gepris_spark.streaming.microbatch.CrawlEngine.host_state": (
+        "the last ledger row's per-host politeness state as a frame, for "
+        "tests/test_replay and tests/test_http_fetch"
+    ),
 }
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import builtins
 import itertools
 import json
+import os
 import shutil
 
 import pytest
@@ -141,11 +142,10 @@ class _Crash(Exception):
 _COMMIT_JOBS = {
     "visit_log": ("store", "append_batch"),
     "bloom": ("bloom", "add_urls"),
-    "host_state": ("store", "commit_snapshot"),
 }
-# every subset of batch 2's three concurrent commit jobs that lands
-# before the crash (the others raise before they write), and a crash
-# in the ledger write after all three landed
+# neither, or one, of batch 2's two concurrent commit jobs landing
+# before the crash (the other raises before it writes), and a crash in
+# the ledger write after both landed
 _CRASH_POINTS = [
     pytest.param(set(landed), id="+".join(landed) or "none")
     for n in range(len(_COMMIT_JOBS))
@@ -275,6 +275,15 @@ def test_aimd_slow_host_stretches_schedule(spark, tmp_path):
     state = {r["host"]: r for r in engine.host_state().collect()}
     assert state["slow.example"]["delay_ms"] == 9000
     assert state["fast.example"]["delay_ms"] == 2000
+    # the host state lives in the ledger row that commits the batch,
+    # sorted by host, and in no table of its own
+    with open(engine._ledger_path()) as fh:
+        rows = [json.loads(line) for line in fh]
+    assert all("hosts" in r and "host_state_version" not in r for r in rows)
+    assert list(rows[-1]["hosts"].items()) == [
+        (h, list(r[1:])) for h, r in sorted(state.items())
+    ]
+    assert sorted(os.listdir(engine.root)) == ["ledger.jsonl", "urlseen", "visit_log"]
 
     # per-batch spacing on the slow host uses the evolved delay: the
     # within-batch gap is 2000 in batch 0, 6000 in batch 1, 8000 in 2
@@ -388,6 +397,66 @@ def test_compaction_preserves_visit_log_exactly(spark, tmp_path, seeds_pdf):
     b = _engine_visits(compacted)
     assert a == b
     _assert_match(compacted, replay(_seed_rows(seeds_pdf), batch_size=25))
+
+
+@pytest.fixture(scope="module")
+def compact_setup(spark, tmp_path_factory, seeds_pdf):
+    """A `compact_every=2` store holding batches 0-2, whose batch 2
+    folded batch 0 into the first compacted segment."""
+    seeds = spark.createDataFrame(seeds_pdf)
+    root = str(tmp_path_factory.mktemp("compact") / "state")
+    CrawlEngine(spark, root, EngineConfig(batch_size=25, compact_every=2)).run_seed_list(
+        seeds, max_arrival=74
+    )
+    return seeds, root
+
+
+@pytest.mark.parametrize("point", ["before_flip", "before_cleanup"])
+def test_resume_after_crash_inside_compaction(
+    spark, tmp_path, seeds_pdf, compact_setup, monkeypatch, point
+):
+    """A run killed inside batch 3's compaction, after the segment write
+    and before the `_COMPACT` flip, or after the flip and before the
+    folded `batch_id=` dirs are removed, resumes to the oracle's visit
+    log and seen set, and the visit log reads no row twice."""
+    from gepris_spark import schemas
+    from gepris_spark.store import table
+
+    seeds, setup_root = compact_setup
+    root = str(tmp_path / "crashed")
+    shutil.copytree(setup_root, root)
+    config = EngineConfig(batch_size=25, compact_every=2)
+    engine = CrawlEngine(spark, root, config)
+    compact = engine.store.compact_appends
+
+    def refuse(*_args, **_kwargs):
+        raise _Crash()
+
+    def killed(*args, **kwargs):
+        with monkeypatch.context() as m:
+            if point == "before_flip":
+                m.setattr(table, "_write_json_atomic", refuse)
+            else:
+                m.setattr(table.shutil, "rmtree", refuse)
+            return compact(*args, **kwargs)
+
+    engine.store.compact_appends = killed
+    with pytest.raises(_Crash):
+        engine.run_seed_list(seeds)
+    assert sorted(engine.committed_batches()) == [0, 1, 2, 3]
+    # the new segment and the dir it folds are both on disk; only the
+    # manifest says which of them holds batch 1
+    log_dir = os.path.join(root, "visit_log")
+    assert os.path.isdir(os.path.join(log_dir, "_compact_seg2"))
+    assert os.path.isdir(os.path.join(log_dir, "batch_id=1"))
+    segment = engine.store._compact_manifest("visit_log")["segment"]
+    assert segment == {"before_flip": "_compact_seg1", "before_cleanup": "_compact_seg2"}[point]
+
+    resumed = CrawlEngine(spark, root, config)
+    resumed.run_seed_list(seeds)
+    _assert_match(resumed, replay(_seed_rows(seeds_pdf), batch_size=25))
+    rows = resumed.store.read_appends(spark, "visit_log", schemas.VISIT_LOG)
+    assert rows.count() == rows.select("seq").distinct().count()
 
 
 def test_edge_batches_commit_empty(spark, tmp_path, seeds_pdf):

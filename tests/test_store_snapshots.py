@@ -148,27 +148,6 @@ def test_merge_refuses_layout_mismatch(spark, store_dir):
     assert store.bucket_layout("b") == {"key_col": "id", "n_buckets": 8}
 
 
-def test_engine_config_retention_bounds_versions(spark, store_dir):
-    """A multi-batch crawl keeps a bounded number of state-table
-    snapshot dirs (the engine's fixed retention) regardless of batch
-    count."""
-    from gepris_spark.sources import corpus
-    from gepris_spark.streaming.microbatch import CrawlEngine, EngineConfig
-
-    seeds = spark.createDataFrame(corpus.gen_seeds_pdf(32, seed=7))
-    engine = CrawlEngine(
-        spark,
-        os.path.join(store_dir, "run"),
-        EngineConfig(batch_size=8, detailed_metrics=False),
-    )
-    ledger = engine.run_seed_list(seeds)
-    assert len(ledger) >= 3  # enough batches that retention has bitten
-
-    host_versions = [s["version"] for s in engine.store.snapshots("host_state")]
-    assert len(host_versions) <= 2
-    assert engine.store.current_version("host_state") == max(host_versions)
-
-
 def test_cli_snapshot_maintenance(spark, store_dir, capsys):
     """The spark-submit surface exposes history/rollback/expire without
     needing a Spark session (pure metadata ops)."""

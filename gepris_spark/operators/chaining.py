@@ -346,8 +346,7 @@ def details_chain(
     scheduled_de: DataFrame,
     pages: DataFrame,
     parse,
-    max_retries: int = 2,
-    broadcast_fetch: bool = True,
+    max_retries: int,
     fetch=None,
 ) -> dict[str, DataFrame]:
     """Run the full two-language details chain over a scheduled batch.
@@ -363,27 +362,23 @@ def details_chain(
     result continuation then fetches through the same hook, and `pages`
     may be None. Default is the corpus join (fetch_pages).
 
+    `max_retries` is the retries left for this batch's rows: every row
+    of one call is on the same attempt, so the budget is the caller's
+    to count down, not a column.
+
     Returns {'items': bilingual items, 'retry': rows needing re-fetch,
     'terminal_nonsuccess': moved/error de rows}. Retries here cover the
-    de stage (language/structure failures re-enter the frontier with
-    attempt+1, A5); en failures degrade to de-only items instead of
-    blocking the chain.
+    de stage (language/structure failures re-enter the frontier while
+    retries are left, A5); en failures degrade to de-only items instead
+    of blocking the chain.
     """
     from gepris_spark.operators import fetchparse
     from gepris_spark.operators.history import route_statuses
 
     if fetch is None:
         def fetch(sched):
-            return fetchparse.fetch_pages(sched, pages, broadcast_fetch)
+            return fetchparse.fetch_pages(sched, pages)
 
-    parsed_de = parse(fetch(scheduled_de))
-    if "attempt" in scheduled_de.columns:
-        # the parse stage emits only the PARSED schema — re-attach the
-        # retry budget so route_statuses can exhaust it (urls are
-        # unique within a batch)
-        parsed_de = parsed_de.join(
-            scheduled_de.select("url", "attempt").dropDuplicates(["url"]), "url", "left"
-        )
     # the chain DAG is a diamond: the en stage re-derives from the de
     # parse, the result stages from the en parse, and the final item
     # join consumes all four — without a persist at each stage boundary
@@ -392,8 +387,8 @@ def details_chain(
     # persists (not checkpoints) keep lineage for AQE while bounding
     # each stage to one execution; run_details_batch unpersists via the
     # returned `_cached` handles once the batch is committed.
-    parsed_de = parsed_de.persist()
-    routed = route_statuses(parsed_de, max_retries=max_retries)
+    parsed_de = parse(fetch(scheduled_de)).persist()
+    routed = route_statuses(parsed_de, max_retries)
     terminal_de = routed["terminal"]
 
     cont = continuation_rows(terminal_de)
@@ -419,9 +414,7 @@ def details_chain(
     return {
         "items": items,
         "retry": routed["retry"],
-        # drop the threaded attempt column so terminal outputs have a
-        # stable schema whether or not the batch carried a retry budget
-        "terminal_nonsuccess": terminal_de.where(F.col("status") != "success").drop("attempt"),
+        "terminal_nonsuccess": terminal_de.where(F.col("status") != "success"),
         # persisted stage boundaries — callers unpersist after consuming
         "_cached": [parsed_de, parsed_en, result_de],
     }

@@ -133,7 +133,6 @@ def google_cache_fallback_fetch(
     live_pages: DataFrame,
     user_agent_pool: list[str] | None = None,
     proxy_pool: list[str] | None = None,
-    broadcast_fetch: bool = True,
 ) -> DataFrame:
     """S9 — two-stage fetch: google-cache snapshot first, live GEPRIS
     on cache failure (person_details.py:36-69).
@@ -145,9 +144,8 @@ def google_cache_fallback_fetch(
     details url on both branches so downstream parse/identity logic is
     branch-blind.
 
-    Scale: both stages are the corpus-join fetch (broadcast the
-    scheduled side while it is batch-bounded, shuffle-join beyond the
-    ceiling — same contract as fetch_pages). Stage 2's input is the
+    Scale: both stages are the corpus-join fetch (the batch-bounded
+    scheduled side is broadcast, as in fetch_pages). Stage 2's input is the
     stage-1 miss set, ALWAYS <= stage 1 — the fallback never amplifies
     the batch. Stage 1 is persisted because both the hit and miss
     branches consume it."""
@@ -162,11 +160,7 @@ def google_cache_fallback_fetch(
     # tracked persist: both the hit and miss branches of the returned
     # lazy plan consume stage 1, so release is the caller's via
     # cacheutil.release_caches() (bench.py calls it per query)
-    fetched_cache = cacheutil.track(
-        fetchparse.fetch_pages(
-            cache_sched, cache_pages, broadcast_scheduled=broadcast_fetch
-        ).persist()
-    )
+    fetched_cache = cacheutil.track(fetchparse.fetch_pages(cache_sched, cache_pages).persist())
     hits = (
         fetched_cache.where(F.col("fetch_status").isNotNull())
         .withColumn("url", F.col("origin_url"))
@@ -179,9 +173,8 @@ def google_cache_fallback_fetch(
     retry_sched = fetched_cache.where(F.col("fetch_status").isNull()).select(
         F.col("origin_url").alias("url"), "context", "item_id", "language"
     )
-    fetched_live = (
-        fetchparse.fetch_pages(retry_sched, live_pages, broadcast_scheduled=broadcast_fetch)
-        .withColumn("via", F.lit("gepris"))
+    fetched_live = fetchparse.fetch_pages(retry_sched, live_pages).withColumn(
+        "via", F.lit("gepris")
     )
     if ua_pool:
         fetched_live = assign_rotation(fetched_live, ua_pool, "user_agent")

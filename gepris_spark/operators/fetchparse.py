@@ -331,19 +331,7 @@ def _parse_one(
     return out
 
 
-# Above this many scheduled rows the fetch join stops broadcasting the
-# batch: a broadcast side is rebuilt on every executor and lives in
-# driver+executor memory, so a design-point 50M-row batch would OOM.
-# 2M rows of (url, context, ids) ≈ 250 MB serialized — safely under a
-# default 1 GiB driver maxResultSize while covering every sane batch.
-FETCH_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def fetch_pages(
-    scheduled: DataFrame,
-    pages: DataFrame,
-    broadcast_scheduled: bool = True,
-) -> DataFrame:
+def fetch_pages(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     """S7/S8 — the corpus-backed fetch: left join on (url, language).
 
     Missing pages carry fetch_status NULL (connection-failure analogue);
@@ -351,22 +339,16 @@ def fetch_pages(
     and read_through_fetch keys its cache-miss fallback on exactly this
     NULL signal.
 
-    Physical plan: while the batch of scheduled urls is small (bounded
-    by the per-batch budget) and the page store is the big side, the
+    Physical plan: the batch of scheduled urls is bounded by the
+    per-batch budget and the page store is the big side, so the
     SCHEDULED side is broadcast and pages STREAM through a
     broadcast-hash join with zero shuffle of the multi-KB html rows.
-
-    `broadcast_scheduled` is a CALLER-SUPPLIED hint, not a runtime
-    probe: the scheduled side is often a derived plan (retry sets,
-    en/result continuations hang off a parse stage), so counting it
-    here would re-execute that upstream lineage once per fetch. Callers
-    know their batch budget — pass False whenever it can exceed
-    FETCH_BROADCAST_MAX_ROWS (BASELINE.md design-point batches are
-    >=50M rows; broadcasting those OOMs every executor) and the join
-    falls back to a shuffle join on (url, language) with AQE free to
-    re-plan. The left-outer semantics (keep scheduled rows with no
-    page) come from a second, column-pruned anti-join pass: it rescans
-    only the (url, language) columns of the parquet, never the html.
+    The hint is unconditional: the scheduled side is often a derived
+    plan (retry sets, en/result continuations hang off a parse stage),
+    so sizing it here would re-execute that upstream lineage once per
+    fetch. The left-outer semantics (keep scheduled rows with no page)
+    come from a second, column-pruned anti-join pass: it rescans only
+    the (url, language) columns of the parquet, never the html.
     """
     pages_sel = pages.select(
         F.col("url").alias("_p_url"),
@@ -378,8 +360,7 @@ def fetch_pages(
     cond = (scheduled["url"] == F.col("_p_url")) & (
         scheduled["language"] == F.col("_p_language")
     )
-    sched_side = F.broadcast(scheduled) if broadcast_scheduled else scheduled
-    found = pages_sel.join(sched_side, cond, "inner").drop(
+    found = pages_sel.join(F.broadcast(scheduled), cond, "inner").drop(
         "_p_url", "_p_language"
     )
     page_keys = pages.select(
@@ -394,12 +375,7 @@ def fetch_pages(
     return found.unionByName(missing.select(*found.columns))
 
 
-def read_through_fetch(
-    scheduled: DataFrame,
-    pages: DataFrame,
-    live_fetch: Callable,
-    broadcast_scheduled: bool = True,
-) -> DataFrame:
+def read_through_fetch(scheduled: DataFrame, pages: DataFrame, live_fetch: Callable) -> DataFrame:
     """S8 cache read-through WITH live fallback: serve each scheduled
     row from the page store; rows the store misses (connection-failure
     rows from fetch_pages) go to `live_fetch` (http_fetch_stage against
@@ -415,7 +391,7 @@ def read_through_fetch(
     cache hits and never fall through to live_fetch — intended parity
     with Scrapy's DummyPolicy, which serves any cached response
     regardless of status; only rows absent from the store refetch."""
-    cached = fetch_pages(scheduled, pages, broadcast_scheduled=broadcast_scheduled)
+    cached = fetch_pages(scheduled, pages)
     hits = cached.where(F.col("fetch_status").isNotNull())
     misses = cached.where(F.col("fetch_status").isNull()).drop(
         "fetch_status", "html", "fetch_cost_ms"

@@ -58,19 +58,13 @@ class History:
         return run_id
 
 
-def route_statuses(parsed: DataFrame, max_retries: int = 2) -> dict[str, DataFrame]:
+def route_statuses(parsed: DataFrame, retries_left: int) -> dict[str, DataFrame]:
     """A5 — status routing of parse output: success/moved/error rows go
-    to history; retry rows re-enter the frontier with attempt+1 until
-    the budget is exhausted, then become errors
+    to history; retry rows re-enter the frontier while `retries_left`
+    (the same for every row of a batch) is positive, else become errors
     (middlewares.py:15-63)."""
-    attempts = F.coalesce(F.col("attempt") if "attempt" in parsed.columns else F.lit(0), F.lit(0))
-    parsed = parsed.withColumn("_attempt", attempts)
-    terminal = parsed.where(
-        (F.col("status") != "retry") | (F.col("_attempt") >= max_retries)
-    ).withColumn(
+    retry = (F.col("status") == "retry") & F.lit(retries_left > 0)
+    terminal = parsed.where(~retry).withColumn(
         "status", F.when(F.col("status") == "retry", "error").otherwise(F.col("status"))
     )
-    retry = parsed.where((F.col("status") == "retry") & (F.col("_attempt") < max_retries)).withColumn(
-        "attempt", F.col("_attempt") + 1
-    )
-    return {"terminal": terminal.drop("_attempt"), "retry": retry.drop("_attempt")}
+    return {"terminal": terminal, "retry": parsed.where(retry)}

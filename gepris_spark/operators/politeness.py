@@ -152,17 +152,15 @@ def _range_rank(
     `num_partitions` bounds the range partitioning (an explicit count
     disables AQE coalescing, so pass the caller's batch bound). The
     persist is correctness-critical (counts and ranks must see ONE
-    partition layout); `cache_registry` receives it for unpersisting,
-    or it stays cached for the session.
+    partition layout); `cache_registry` receives it, and the caller
+    unpersists it.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
-        df.repartitionByRange(n, *[F.col(g).asc() for g in groups], *order)
+        df.repartitionByRange(num_partitions, *[F.col(g).asc() for g in groups], *order)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    if cache_registry is not None:
-        cache_registry.append(ranged)
+    cache_registry.append(ranged)
     totals: dict[tuple, int] = {}
     offset = F.lit(0)
     for row in sorted(ranged.groupBy(*groups, "_pid").count().collect(), key=lambda r: r["_pid"]):
@@ -179,11 +177,7 @@ def _range_rank(
     return ranged.withColumn(rank_col, rank).drop("_pid"), totals
 
 
-def assign_schedule(
-    batch: DataFrame,
-    num_partitions: int | None = None,
-    cache_registry: list | None = None,
-) -> DataFrame:
+def assign_schedule(batch: DataFrame, num_partitions: int, cache_registry: list) -> DataFrame:
     """Token-bucket schedule assignment.
 
     Within each host, requests are ordered by the crawl priority
@@ -205,9 +199,7 @@ def assign_schedule(
 
 
 def visit_order_with_count(
-    scheduled: DataFrame,
-    num_partitions: int | None = None,
-    cache_registry: list | None = None,
+    scheduled: DataFrame, num_partitions: int, cache_registry: list
 ) -> tuple[DataFrame, int]:
     """The crawl's total visit order: logical send time, then priority,
     then canonical url — the replay contract both engine and oracle

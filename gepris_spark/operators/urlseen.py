@@ -179,23 +179,21 @@ class BloomUrlSeen:
             out[b] = out[b] | bits if b in out else bits.copy()
         return out
 
-    def add_urls(self, df: DataFrame, seen_urls: DataFrame | None = None) -> dict:
+    def add_urls(self, df: DataFrame, seen_urls: DataFrame) -> dict:
         """OR the batch's urls into the bucket bitsets, rebuilding any
         bucket the batch fills past `FP_BOUND` at a larger size.
 
         `seen_urls` is every url added before this call (the exact seen
-        set, one `url` column); a rebuild re-adds them. It may be None
-        only while the filter is empty. Buckets whose bits do not change
-        are not rewritten. The urls need no dedup: a url ORed in twice
-        sets the same bits, and sizing reads the bits, not a url count.
+        set, one `url` column; empty for a fresh filter); a rebuild
+        re-adds them. Buckets whose bits do not change are not
+        rewritten. The urls need no dedup: a url ORed in twice sets the
+        same bits, and sizing reads the bits, not a url count.
 
         Returns the filter's health after the update: `urlseen_bits`
         (total bits), `urlseen_fill_max` (fill ratio of the fullest
         bucket), `urlseen_fp_est` (fill_max ** K) and `urlseen_grown`
         (buckets rebuilt)."""
         sizes = self._sizes()
-        if seen_urls is None and sizes:
-            raise ValueError("add_urls on a non-empty filter needs seen_urls")
         urls = df.select("url")
         fills: dict[int, float] = {}
         grow: dict[int, int] = {}
@@ -211,8 +209,7 @@ class BloomUrlSeen:
         for b, packed in self._pack(self.with_hashes(urls), sizes).items():
             old = np.load(self._bucket_path(b)) if b in sizes else None
             settle(b, packed if old is None else old | packed, old)
-        every = urls if seen_urls is None else seen_urls.select("url").unionByName(urls)
-        hashed = self.with_hashes(every)
+        hashed = self.with_hashes(seen_urls.select("url").unionByName(urls))
         grown: set[int] = set()
         while grow:
             # a saturated bucket's url count is underestimated, so its
@@ -293,11 +290,11 @@ class BloomUrlSeen:
         only a bloom hit (a small, false-positive-bounded subset) is
         checked exactly, in one left-anti join against the truth table
         keyed on the url for hits and on NULL for misses, which matches
-        nothing. An empty bloom (fresh crawl, batch 0) means nothing can
-        be seen: the probe shuffle and the anti-join are skipped.
+        nothing. An empty bloom (fresh crawl, batch 0) takes the same
+        plan: a bucket with no bitset file probes as all-miss, so the
+        first batch compiles the probe and the anti-join that every
+        later batch runs.
         """
-        if self.is_empty():
-            return candidates
         probed = self.with_maybe_seen(candidates, num_partitions=num_partitions)
         # a shuffled join puts every NULL key (every miss) in one
         # partition: at most the batch's candidates

@@ -2327,10 +2327,9 @@ _KCORE_ROUNDS = 3
 # verdict "What's wrong #2"): on the sandbox's bipartite TPC graph the
 # per-round survivor set is tiny and broadcasting it keeps the edge
 # relation unshuffled, but on a 10^10-node web graph an O(nodes) set
-# exceeds any broadcast budget. Mirror of the engine's
-# FETCH_BROADCAST_MAX_ROWS pattern (operators/fetchparse.py:477): the
-# set's measured row count picks the strategy — broadcast under the
-# threshold, shuffle join partitioned on the node key above it.
+# exceeds any broadcast budget. The set's measured row count picks the
+# strategy — broadcast under the threshold, shuffle join partitioned
+# on the node key above it.
 GRAPH_BROADCAST_MAX_ROWS = 10_000_000
 
 

@@ -78,6 +78,8 @@ IMAGES = T.StructType(
 
 # -------------------------------------------------------------- visit log
 # Output of the replay engine: the crawl ordering the judge compares.
+# Each row's batch id is its `batch_id=N` dir, not a data column;
+# SnapshotStore.read_appends returns it as the last column.
 VISIT_LOG = T.StructType(
     [
         T.StructField("seq", T.LongType(), False),
@@ -86,7 +88,6 @@ VISIT_LOG = T.StructType(
         T.StructField("context", T.StringType(), True),
         T.StructField("item_id", T.LongType(), True),
         T.StructField("scheduled_ms", T.LongType(), False),
-        T.StructField("batch_id", T.LongType(), False),
     ]
 )
 

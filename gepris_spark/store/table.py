@@ -553,11 +553,9 @@ class SnapshotStore:
         wins. Returns the rows and a report of what was listed and
         read (dirs_total, dirs_read, segment_read)."""
         table_dir = self._table_dir(name)
-        # some ledgers (visit_log) already carry batch_id as a data column;
-        # only append the partition-derived one when the schema lacks it
-        full = schema if "batch_id" in schema.fieldNames() else T.StructType(
-            list(schema.fields) + [T.StructField("batch_id", T.LongType())]
-        )
+        # a row's batch id is its dir name; a compacted segment stores it
+        # as the last column
+        full = T.StructType(list(schema.fields) + [T.StructField("batch_id", T.LongType())])
 
         def in_range(b: int) -> bool:
             return min_batch_id is None or b >= min_batch_id
@@ -601,10 +599,6 @@ class SnapshotStore:
         segment_read)."""
         return self._scan_appends(spark, name, schema, min_batch_id)
 
-    def committed_batches(self, name: str) -> list[int]:
-        manifest = self._compact_manifest(name)
-        return sorted(set(self._live_batch_dirs(name)) | set(manifest["batch_ids"]))
-
     def compact_appends(
         self,
         spark: SparkSession,
@@ -635,7 +629,7 @@ class SnapshotStore:
         manifest = self._compact_manifest(name)
         live = self._live_batch_dirs(name)
         keep_last = max(0, int(keep_last))
-        fold_live = live[: len(live) - keep_last] if keep_last else list(live)
+        fold_live = live[: len(live) - keep_last]
         if not fold_live:  # nothing new to fold — don't rewrite the segment
             return {"folded": manifest["batch_ids"], "segment": manifest["segment"], "rows": 0}
         folded_ids = sorted(set(manifest["batch_ids"]) | set(fold_live))
@@ -657,6 +651,9 @@ class SnapshotStore:
         )
         for b in fold_live:
             shutil.rmtree(os.path.join(table_dir, f"batch_id={b}"), ignore_errors=True)
-        if manifest["segment"] and manifest["segment"] != seg_rel:
-            shutil.rmtree(os.path.join(table_dir, manifest["segment"]), ignore_errors=True)
+        # every segment the manifest no longer names: the one just folded
+        # and any that a crash after an earlier flip left behind
+        for entry in os.listdir(table_dir):
+            if entry.startswith("_compact_seg") and entry != seg_rel:
+                shutil.rmtree(os.path.join(table_dir, entry), ignore_errors=True)
         return {"folded": folded_ids, "segment": seg_rel, "rows": int(rows)}

@@ -299,7 +299,6 @@ class CrawlEngine:
             "context",
             "item_id",
             "scheduled_ms",
-            F.lit(batch_id).cast("long").alias("batch_id"),
         )
         batch_state = ordered.groupBy("host").agg(
             (F.max("host_seq") + 1).alias("next_seq"),
@@ -413,14 +412,10 @@ class CrawlEngine:
         from gepris_spark.operators.frontier import Frontier
         from gepris_spark.operators.history import History
 
-        # broadcast only while the configured batch budget fits the
-        # fetch-join ceiling; a >=50M-row design-point batch must take
-        # the shuffle-join path (fetchparse.FETCH_BROADCAST_MAX_ROWS)
-        bcast = self.config.batch_size <= fetchparse.FETCH_BROADCAST_MAX_ROWS
         # A5: the first attempt and every re-fetch run the same chain
         # until the attempt budget is gone or nothing is left to retry;
         # the corpus fetch is deterministic, so retries that keep failing
-        # drain to terminal errors via route_statuses' exhaustion rule.
+        # drain to terminal errors when no retries are left.
         # Each attempt's retry set is localCheckpoint'd (eager) so the
         # isEmpty probe and the next chain never re-execute the full
         # upstream fetch+parse lineage.
@@ -431,8 +426,7 @@ class CrawlEngine:
                 batch,
                 pages,
                 fetchparse.parse_stage,
-                max_retries=max_retries,
-                broadcast_fetch=bcast,
+                max_retries=max_retries - attempt,
                 fetch=fetch,
             )
             item_parts.append(result["items"])
@@ -441,9 +435,7 @@ class CrawlEngine:
             retry = result["retry"].localCheckpoint(eager=True)
             if attempt == max_retries or retry.isEmpty():
                 break
-            batch = retry.select(
-                "url", "context", "item_id", F.lit("de").alias("language"), "attempt"
-            )
+            batch = retry.select("url", "context", "item_id", F.lit("de").alias("language"))
         # downstream runs >1 action over items and non-success rows
         # (history insert, frontier mark, counts): checkpoint each once
         items = functools.reduce(DataFrame.unionByName, item_parts).localCheckpoint(eager=True)

@@ -2,8 +2,8 @@
 with `applyInPandasWithState`.
 
 The micro-batch engine keeps per-host token-bucket sequence numbers in
-an explicit snapshot table (microbatch.py HOST_STATE) because its loop
-needs multi-table commits. A pure Structured Streaming deployment of
+its ledger rows (each row's `hosts`, microbatch.py HOST_STATE) because
+its loop commits several tables under one ledger row. A pure Structured Streaming deployment of
 the same A4 semantics maps naturally onto Spark's keyed state store:
 the frontier arrives as a stream, groups by host, and a pandas state
 function assigns each request the next host_seq — state (one long per

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from gepris_spark.operators import chaining, fetchparse
 
 
-@pytest.fixture(scope="module")
-def chain_result(spark, corpus_dir):
+def _de_batch(spark, corpus_dir):
+    """(every corpus id's de page request, the corpus pages)"""
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
     seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
     batch = (
@@ -20,7 +20,14 @@ def chain_result(spark, corpus_dir):
         .distinct()
         .withColumn("language", F.lit("de"))
     )
-    out = chaining.details_chain(batch, pages, fetchparse.parse_stage)
+    return batch, pages
+
+
+@pytest.fixture(scope="module")
+def chain_result(spark, corpus_dir):
+    out = chaining.details_chain(
+        *_de_batch(spark, corpus_dir), fetchparse.parse_stage, max_retries=2
+    )
     for name, df in out.items():
         if not name.startswith("_"):
             df.persist().count()
@@ -55,10 +62,24 @@ def test_en_failure_degrades_not_blocks(chain_result):
         assert item.get("name_en") is None
 
 
-def test_retry_rows_carry_attempt(chain_result):
-    retry = chain_result["retry"].collect()
-    # corpus has ~2% wrong_language de pages -> retry with attempt=1
-    assert all(r["attempt"] == 1 for r in retry)
+def test_retries_left_route_retry_rows(spark, corpus_dir, chain_result):
+    """Every row of one chain call is on the same attempt, so the retry
+    budget is the caller's count, not a column: with retries left, the
+    corpus's ~2% wrong_language de pages come back as retry rows with no
+    `attempt`; with none left, the same rows are terminal `error` rows."""
+    retry = chain_result["retry"]
+    assert "attempt" not in retry.columns
+    retried = {r["url"] for r in retry.collect()}
+    assert retried
+
+    out = chaining.details_chain(
+        *_de_batch(spark, corpus_dir), fetchparse.parse_stage, max_retries=0
+    )
+    assert out["retry"].count() == 0
+    nonsuccess = {r["url"]: r["status"] for r in out["terminal_nonsuccess"].collect()}
+    assert all(nonsuccess.get(u) == "error" for u in retried)
+    for df in out["_cached"]:
+        df.unpersist()
 
 
 def test_terminal_nonsuccess_statuses(chain_result):

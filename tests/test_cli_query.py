@@ -92,11 +92,13 @@ def test_crawl_rejects_n_salts():
     assert exc.value.code == 2
 
 
-@pytest.mark.parametrize("table", ["frontier", "history"])
+@pytest.mark.parametrize("table", ["frontier", "history", "visit_log"])
 def test_export_writes_the_table_fields(spark, tmp_path, capsys, table):
     """`cli export --table frontier|history` writes exactly the table's
     schema fields, in order: the store's `_bucket` partition column and
-    the append ledger's `batch_id` column stay inside the store."""
+    the append ledger's `batch_id` column stay inside the store. The
+    visit log's contract rows carry their batch id, which the files
+    store only as their `batch_id=N` dir: its export adds it last."""
     from gepris_spark import schemas
     from gepris_spark.operators.frontier import Frontier
     from gepris_spark.store.table import SnapshotStore
@@ -107,10 +109,17 @@ def test_export_writes_the_table_fields(spark, tmp_path, capsys, table):
         schema = schemas.FRONTIER
         rows = [(i, "projekt", 1, 1, f'{{"n": {i}}}', 2, i % 2 == 0) for i in range(5)]
         Frontier(spark, store).commit(spark.createDataFrame(rows, schema))
-    else:
+    elif table == "history":
         schema = schemas.HISTORY
         rows = [(i, "projekt", 1, f'{{"n": {i}}}', "success") for i in range(5)]
         store.append_batch(spark.createDataFrame(rows, schema), "history", 1)
+    else:
+        schema = schemas.VISIT_LOG
+        rows = [(i, f"https://h/gepris/projekt/{i}", "h", "projekt", i, 0) for i in range(5)]
+        store.append_batch(spark.createDataFrame(rows, schema), "visit_log", 3)
+    fields = schema.fieldNames()
+    if table == "visit_log":
+        fields, rows = fields + ["batch_id"], [(*r, 3) for r in rows]
     out = str(tmp_path / "out")
     assert main(["export", "--state", state, "--table", table, "--out", out]) == 0
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"] == 5
@@ -119,5 +128,5 @@ def test_export_writes_the_table_fields(spark, tmp_path, capsys, table):
         if name.endswith(".json"):
             with open(os.path.join(out, name)) as fh:
                 exported += [json.loads(line) for line in fh]
-    assert [list(r) for r in exported] == [schema.fieldNames()] * 5
+    assert [list(r) for r in exported] == [fields] * 5
     assert sorted(tuple(r.values()) for r in exported) == rows

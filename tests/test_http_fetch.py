@@ -254,12 +254,14 @@ def test_details_chain_over_http(spark, server, corpus_pages):
         _scheduled(spark, seeds, server),
         None,
         fetchparse.parse_stage,
+        max_retries=2,
         fetch=lambda s: fetchparse.http_fetch_stage(s, fetchparse.urllib_fetcher()),
     )
     chain_join = chaining.details_chain(
         _corpus_scheduled(spark, seeds),
         spark.createDataFrame(pages),
         fetchparse.parse_stage,
+        max_retries=2,
     )
 
     def items_key(res):

@@ -756,7 +756,7 @@ def test_filter_new_probes_once(spark, tmp_path):
         return spark.range(lo, hi).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
 
     bloom = BloomUrlSeen(str(tmp_path / "bloom"), n_buckets=4)
-    bloom.add_urls(urls(0, 300))
+    bloom.add_urls(urls(0, 300), seen_urls=urls(0, 0))
     fresh = bloom.filter_new(urls(200, 500), urls(0, 300))
     assert sorted(r["url"] for r in fresh.collect()) == sorted(
         f"https://h/x{i}" for i in range(300, 500)
@@ -765,6 +765,20 @@ def test_filter_new_probes_once(spark, tmp_path):
     final = plan.split("== Initial Plan ==")[0]
     assert "== Final Plan ==" in final
     assert final.count("MapInPandas") == 1
+
+
+def test_filter_new_probes_an_empty_bloom(spark, tmp_path):
+    """A fresh filter (batch 0) runs the plan every later batch runs: a
+    bucket with no bitset probes as all-miss, so every candidate comes
+    back, through the MapInPandas probe."""
+    from gepris_spark.operators.urlseen import BloomUrlSeen
+
+    bloom = BloomUrlSeen(str(tmp_path / "bloom"), n_buckets=4)
+    cands = spark.range(50).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
+    fresh = bloom.filter_new(cands, cands.limit(0))
+    assert bloom.is_empty()
+    assert fresh.count() == 50
+    assert "MapInPandas" in fresh._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_normalise_is_one_pass(spark):

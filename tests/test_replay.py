@@ -71,6 +71,23 @@ def test_micro_batches_exact_match(spark, tmp_path, seeds_pdf):
     assert sum(r["n_dup_or_seen"] for r in ledger) == oracle.dup_arrivals
 
 
+def test_visit_log_files_hold_no_batch_id(spark, tmp_path, seeds_pdf):
+    """A visit-log row's batch id is its `batch_id=N` dir: the parquet
+    files store no `batch_id` column, and `visit_log()` still returns
+    each row's batch id, equal to the oracle's."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    engine = CrawlEngine(spark, str(tmp_path / "e"), EngineConfig(batch_size=25))
+    engine.run_seed_list(spark.createDataFrame(seeds_pdf), max_arrival=49)
+    files = glob.glob(os.path.join(engine.root, "visit_log", "batch_id=*", "*.parquet"))
+    assert files
+    for path in files:
+        assert "batch_id" not in pq.read_schema(path).names
+    _assert_match(engine, replay(_seed_rows(seeds_pdf)[:50], batch_size=25))
+
+
 def test_robots_and_crawl_delay(spark, tmp_path, seeds_pdf):
     from gepris_spark.operators.politeness import ROBOTS_SCHEMA
 
@@ -223,7 +240,7 @@ def test_bloom_urlseen_no_false_negatives(spark, tmp_path):
 
     bloom = BloomUrlSeen(str(tmp_path / "b"), n_buckets=4)
     urls = spark.range(500).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
-    bloom.add_urls(urls)
+    bloom.add_urls(urls, seen_urls=urls.limit(0))
     probed = bloom.with_maybe_seen(urls)
     assert probed.where(~F.col("maybe_seen")).count() == 0  # no false negatives
     other = spark.range(500, 1200).select(F.concat(F.lit("https://h/x"), F.col("id")).alias("url"))
@@ -389,7 +406,7 @@ def test_compaction_preserves_visit_log_exactly(spark, tmp_path, seeds_pdf):
 
     # the ledger physically folded (fewer live batch dirs than batches)
     live = compacted.store._live_batch_dirs("visit_log")
-    all_batches = compacted.store.committed_batches("visit_log")
+    all_batches = compacted.visit_log().select("batch_id").distinct().collect()
     assert len(all_batches) > 2
     assert len(live) < len(all_batches)
 
@@ -418,7 +435,8 @@ def test_resume_after_crash_inside_compaction(
     """A run killed inside batch 3's compaction, after the segment write
     and before the `_COMPACT` flip, or after the flip and before the
     folded `batch_id=` dirs are removed, resumes to the oracle's visit
-    log and seen set, and the visit log reads no row twice."""
+    log and seen set, the visit log reads no row twice, and the next
+    compaction leaves only the segment its manifest names."""
     from gepris_spark import schemas
     from gepris_spark.store import table
 
@@ -457,6 +475,9 @@ def test_resume_after_crash_inside_compaction(
     _assert_match(resumed, replay(_seed_rows(seeds_pdf), batch_size=25))
     rows = resumed.store.read_appends(spark, "visit_log", schemas.VISIT_LOG)
     assert rows.count() == rows.select("seq").distinct().count()
+    # no segment outlives the manifest that stopped naming it
+    segment = resumed.store._compact_manifest("visit_log")["segment"]
+    assert [e for e in os.listdir(log_dir) if e.startswith("_compact_seg")] == [segment]
 
 
 def test_edge_batches_commit_empty(spark, tmp_path, seeds_pdf):

@@ -27,7 +27,7 @@ def chain_out(spark, corpus_dir):
         .distinct()
         .withColumn("language", F.lit("de"))
     )
-    out = chaining.details_chain(batch, pages, fetchparse.parse_stage)
+    out = chaining.details_chain(batch, pages, fetchparse.parse_stage, max_retries=2)
     items_df = out["items"].persist()
     rows = items_df.collect()
     return rows, items_df

@@ -81,10 +81,15 @@ def test_single_batch_parity_with_batch_scheduler(spark, tmp_path):
     spark.createDataFrame(pdf).coalesce(1).write.parquet(src)
 
     got = _run_stream(spark, src, str(tmp_path / "ckpt1"), name="sched_par").toPandas()
+    caches: list = []
     batch = politeness.assign_schedule(
-        spark.createDataFrame(pdf).withColumn("delay_ms", F.lit(1000).cast("long"))
+        spark.createDataFrame(pdf).withColumn("delay_ms", F.lit(1000).cast("long")),
+        num_partitions=spark.sparkContext.defaultParallelism,
+        cache_registry=caches,
     )
     exp = batch.select("url", "host_seq").toPandas()
+    for df in caches:
+        df.unpersist()
     merged = got.merge(exp, on="url", suffixes=("_s", "_b"))
     assert len(merged) == len(pdf)
     assert (merged["host_seq_s"] == merged["host_seq_b"]).all()
